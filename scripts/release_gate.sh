@@ -1,6 +1,6 @@
 #!/usr/bin/env bash
 # Full round gate, in driver order: tests → t1 smoke → t2 verify+oracle
-# (all SFs) → bench. Exits nonzero on any failure.
+# (all SFs) → determinism sweep → bench. Exits nonzero on any failure.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -16,6 +16,12 @@ for sf in sf0.001 sf0.01 sf0.1; do
   sbt -batch "runMain graft.Verify /root/testdata/$sf $out" >/dev/null 2>&1
   python3 scripts/check.py "/root/testdata/$sf" "$out" | tail -1
 done
+
+echo "== determinism sweep @ sf0.01 (default vs 8 cores) =="
+SPARK_GRAFT_CPUS=8 sbt -batch \
+  "runMain graft.Verify /root/testdata/sf0.01 /tmp/gate_sf0.01_c8" >/dev/null 2>&1
+python3 scripts/determinism.py /tmp/gate_sf0.01 /tmp/gate_sf0.01_c8 \
+  "DETERMINISM_r${ROUND:-0}.json"
 
 echo "== oracle output-type audit =="
 python3 scripts/oracle_types.py /root/testdata/sf0.001 /tmp/gate_sf0.001 | tail -1

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every registered query at SPARK_GRAFT_SF_DIR,
   * prints min-of-reps seconds per query, and makes the per-query numbers
@@ -183,7 +182,7 @@ object Bench {
     // load); the min is the reproducible per-query cost. Reported
     // transparently via "reps" in the output line. 5 reps (not 2): with 2
     // the min still landed 3-8× above idle-machine probe mins under host
-    // contention; min-of-5 tracks the idle PerfProbe numbers.
+    // contention; min-of-5 tracks idle single-query min-of-5 probes.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "5").toInt
     // Wall-clock budget: the rep schedule and repair pass land the suite
     // inside it. 1500 s default ≈ 0.8× the shortest harness window the
@@ -197,13 +196,7 @@ object Bench {
       budgetS * 0.25)
     val startWall = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - startWall) / 1e9
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localSession(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // JIT/codegen/parquet-reader warmup so timings measure the queries,
     // not first-use initialization of the session
@@ -534,8 +527,8 @@ object Bench {
     // >2× "regressions" that were driver-host contention, not code. This
     // closes that loop in-process: any query whose min regressed >2× vs
     // the PREVIOUS committed bench.json gets a dedicated re-probe right
-    // after the suite (no other queries interleaving — the same isolation
-    // PerfProbe provided manually), and both numbers land in
+    // after the suite (no other queries interleaving — the isolation a
+    // manual per-query probe gives), and both numbers land in
     // bench_adjudication.json so the verdict needs zero manual probes.
     // The pass runs UNCONDITIONALLY inside its reserved tranche (r15: the
     // main loop overran the whole budget and 80 movers got zero verdicts

@@ -12,6 +12,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SparkEntry {
 
+  /** The local session recipe every main and the test suite share:
+    * `local[cpus]`, one shuffle partition per core, UTC session time,
+    * NANOS-encoded parquet timestamps readable as longs (see
+    * `Tables.events`), no UI. Callers add their own settings on the
+    * returned builder. */
+  def localSession(cpus: String): SparkSession.Builder =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     ops.Relational.q01PricingSummary(spark, "/root/testdata/sf0.001")

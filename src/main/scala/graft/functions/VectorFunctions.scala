@@ -175,7 +175,7 @@ case class DotProduct(left: Expression, right: Expression)
   * sub-expressions re-read the vector through K separate null-checked
   * paths and whose generated code grew past JIT comfort at K = 64
   * (probed: the assignment projection alone cost 0.75 s at sf0.1;
-  * one-loop form is ~10×, see Q204Probe).
+  * one-loop form is ~10×, min-of-5 stage split of q204).
   *
   * Ordering matches the old struct sort EXACTLY — score descending,
   * cell id descending on ties, compared via Double.compare (the

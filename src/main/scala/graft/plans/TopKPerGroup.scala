@@ -19,8 +19,8 @@ import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
   * input partition (map-side reduction), the final stage (clustered on
   * the group keys) merges heaps. Spark 4's own `WindowGroupLimit
   * Partial` achieves the same shuffle pruning for the
-  * `row_number().over(w) <= k` pattern (verified by shuffle-bytes
-  * measurement in tools/MicroBench) — the remaining win here is
+  * `row_number().over(w) <= k` pattern (verified by a listener-summed
+  * shuffle-bytes micro-benchmark at local[4]) — the remaining win here is
   * algorithmic: heaps are O(n·log k) where WindowGroupLimit full-sorts
   * each partition twice (O(n·log n)); measured ~1.2× on 20M rows /
   * 100k groups, growing with partition size.

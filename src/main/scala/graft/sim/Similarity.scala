@@ -984,7 +984,7 @@ object Similarity {
     * asserts both facts (equality on planted near-dups at τ=0.8, the
     * documented miss on the margin-free corpus). */
   def embedNearDupLsh(s: SparkSession, df: DataFrame, tau: Double,
-      tag: String = "default"): DataFrame = {
+      tag: String): DataFrame = {
     import graft.functions.VectorFunctions.dot_product
     // Vector+norm frame materialized ONCE (r16): it feeds the bucket
     // entries (self-joined) and both verify joins, and without the
@@ -1350,7 +1350,7 @@ object Similarity {
 
   /** PQ search: encode the base once (M argmins per row, all codegen
     * DotWithConst projections), score every (query, code-row) pair with
-    * the asymmetric-distance lookup table, keep the top `rerank` ADC
+    * the asymmetric-distance lookup table, keep the top `PQ_RERANK` ADC
     * candidates per query, then re-rank those exactly.
     *
     * Scale shape: the ADC scan touches ONLY the codes table (M
@@ -1395,7 +1395,7 @@ object Similarity {
     }
   }
 
-  private[graft] def pqTopK(s: SparkSession, d: String, rerank: Int): DataFrame = {
+  private[graft] def pqTopK(s: SparkSession, d: String): DataFrame = {
     val (dim, books) = pqCodebooks(s, d)
     val sub = dim / PQ_M
     val u = unitQuantized(s, d)
@@ -1428,10 +1428,10 @@ object Similarity {
     // Map-side bounded-heap top-k (the q52 plan node) instead of a
     // row_number window: the ADC scan emits |queries|·|codes| scored
     // rows, and the window would shuffle ALL of them to rank per qid —
-    // the heap keeps ≤ rerank per (qid, partition) before the exchange,
+    // the heap keeps ≤ PQ_RERANK per (qid, partition) before the exchange,
     // so the shuffle carries candidates, not the scan.
     val cand = graft.plans.TopKPerGroup(adcScored, Seq("qid"),
-        Seq(("adc", true), ("nid", false)), rerank)
+        Seq(("adc", true), ("nid", false)), PQ_RERANK)
       .select(col("qid"), col("nid"))
     val e = embeddings(s, d)
     val wEx = Window.partitionBy(col("qid")).orderBy(desc("sim"), col("nid"))
@@ -1446,7 +1446,7 @@ object Similarity {
   }
 
   def q162KnnPq(s: SparkSession, d: String): DataFrame =
-    withRecallEvidence(s, d, pqTopK(s, d, PQ_RERANK), Q162_RECALL_FLOOR, "q162")
+    withRecallEvidence(s, d, pqTopK(s, d), Q162_RECALL_FLOOR, "q162")
 
   /** q162's DuckDB oracle: replays the whole PQ serving path in exact
     * arithmetic — unit quantization (int64 norm, one IEEE sqrt/divide,

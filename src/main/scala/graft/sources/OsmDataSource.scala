@@ -17,7 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** OSM XML as a first-class DataSource V2: `spark.read.format("osm")
   * .load(path)` (SURVEY §2.1 S1's honest form behind the standard
-  * source API, alongside the RDD-based `OsmXml.elements`).
+  * source API).
   *
   * Connector anatomy, all public Spark 4 interfaces:
   *  - `TableProvider` + `DataSourceRegister` → short name "osm";

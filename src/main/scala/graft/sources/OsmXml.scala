@@ -7,8 +7,8 @@ import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
-/** S1 in its honest form: OSM XML → the `elements` DataFrame consumed
-  * by `OsmShape.shapeAll` (SURVEY.md §2.1 S1 — the reference family's
+/** S1 in its honest form: OSM XML → the `elements` rows (`schema`,
+  * `parse`) that `format("osm")` serves to `OsmShape.shapeAll` (SURVEY.md §2.1 S1 — the reference family's
   * actual entry point is a streaming XML `iterparse` over `.osm` files;
   * the reconstructed checkout is empty, so no file:line citation is
   * possible).
@@ -49,19 +49,11 @@ object OsmXml {
       StructField("mtype", StringType), StructField("ref", LongType),
       StructField("role", StringType)))))))
 
-  /** Read one or many `.osm` files (glob/dir supported by binaryFiles)
-    * into the elements DataFrame. */
-  def elements(spark: SparkSession, path: String): DataFrame = {
-    val rows = spark.sparkContext.binaryFiles(path)
-      .flatMap { case (_, pds) => parse(pds.open()) }
-    spark.createDataFrame(rows, schema)
-  }
-
   /** A1 in its raw-XML form (the reference family's `count_tags`): a
     * census of EVERY element tag name in the document — including the
     * structure the row model doesn't carry (`osm` root, `bounds`,
     * nested `tag`/`nd`/`member`) — as (tag, count). Same execution
-    * model as `elements`: one streaming StAX pass per file, constant
+    * model as the `osm` source: one streaming StAX pass per file, constant
     * memory (the per-file map is bounded by the XML vocabulary, ~10
     * names), partial counts merged by one tiny reduceByKey. */
   def countTags(spark: SparkSession, path: String): DataFrame = {

@@ -20,16 +20,6 @@ object CorpusPipeline {
 
   val QUALITY_FLOOR = 0.5
 
-  /** Candidate-generation strategy for the curation near-dup stage.
-    * Default ON: LSH-banded candidates (q41's machinery) + exact
-    * verify — linear in survivors, the 100 TB path, and output-
-    * identical to the exact inverted-index join under the corpus
-    * margin DedupSpec asserts (the oracle below stays the EXACT pair
-    * join, so the gate re-proves the equality every round). Set to
-    * false to force the exact join (the right call only when the
-    * corpus has near-threshold pairs LSH could miss). */
-  val CURATION_LSH_CONF = "spark.graft.curation.lshCandidates"
-
   /** Curation keeper set with the columns downstream stages consume
     * (doc_id, text, lang, n_tok, quality) — the shared core of q78 and
     * the composed train-set build (q86). Unsorted: each caller orders
@@ -58,10 +48,12 @@ object CorpusPipeline {
     // dedup over survivors only: shingle AFTER the cheap filters
     val arr = sv.select(col("doc_id"), col("sgs"))
       .filter(size(col("sgs")) > 0)
-    val useLsh = s.conf.getOption(CURATION_LSH_CONF).forall(_.toBoolean)
-    val pairs = (if (useLsh) Dedup.lshVerifiedPairs(s, arr)
-                 else Dedup.jaccardPairs(s, arr))
-      .select(col("i"), col("j"))
+    // Near-dup candidates: LSH-banded (q41's machinery) + exact verify —
+    // linear in survivors, the 100 TB path, and output-identical to the
+    // exact inverted-index join under the corpus margin TrainingSetSpec
+    // asserts (the oracle below stays the EXACT pair join, so the gate
+    // re-proves the equality every round).
+    val pairs = Dedup.lshVerifiedPairs(s, arr).select(col("i"), col("j"))
     // TAG-REUSE CONTRACT: connectedComponents(tag = "cc-curation") cycles
     // the PREVIOUS same-tag invocation's localCheckpoint blocks, and the
     // returned frame's lineage is truncated at that checkpoint — so a

@@ -127,24 +127,17 @@ object Dedup {
     * (join on shingle → count per pair). On this corpus the direct join
     * beats the prefix-filtered variant (`ppjoinJaccard` below) — the
     * frequent-shingle quadratic term is small at these sizes; at 100 TB
-    * with heavy-tailed shingle frequencies the prefix filter wins. */
-  /** When set (to a doc-frequency cutoff), q40 generates candidate
-    * pairs only from shingles with df <= cutoff and verifies them
-    * against the full arrays — the classic stop-shingle prefilter for
-    * heavy-tailed shingle frequencies at scale. Lossless iff every
-    * true near-dup pair shares at least one rare shingle (holds for
-    * real corpora where frequent shingles are boilerplate; measured
-    * lossless on this corpus at df<=50/200/1000 by tools/Q40Profile).
-    * Off by default — and rightly so here: this corpus's ~40-word
-    * vocabulary makes nearly every shingle frequent, so the cutoff
+    * with heavy-tailed shingle frequencies the prefix filter wins.
+    *
+    * No stop-shingle prefilter (candidates only from shingles with
+    * df ≤ cutoff, then exact verify): this corpus's ~40-word
+    * vocabulary makes nearly every shingle frequent, so a cutoff
     * prunes little while adding a df-join + distinct + verify
     * (measured 5.6 s vs 1.06 s exact at sf0.1; same conclusion as
-    * PPJoin). Q40Profile also shows the exact join's floor IS the
-    * pair aggregation (1.09 s of the 1.06 s total; scan 0.31 s) —
+    * PPJoin). The exact join's floor IS the pair aggregation (1.09 s
+    * of the 1.06 s total; scan 0.31 s, min-of-5 stage splits) —
     * intrinsic to exact all-pairs-over-index, which is why the scale
     * story is LSH (q41), not a faster exact join. */
-  val STOP_SHINGLE_CONF = "spark.graft.dedup.stopShingleDf"
-
   def q40NgramJaccard(s: SparkSession, d: String): DataFrame =
     jaccardPairs(s, shingleArrays(s, d))
 
@@ -178,23 +171,6 @@ object Dedup {
     * pipeline (q78) runs it on the filtered survivor set, which is the
     * scale-correct order (shingle AFTER the cheap row-local filters). */
   def jaccardPairs(s: SparkSession, arr: DataFrame): DataFrame = {
-    val stopDf = s.conf.getOption(STOP_SHINGLE_CONF).map(_.toInt)
-    if (stopDf.isDefined) {
-      // candidate generation over the rare-shingle inverted index only;
-      // exact verification (full arrays) keeps the output exact whenever
-      // the corpus margin holds.
-      val sh = arr.select(col("doc_id"), explode(col("sgs")).as("sg"))
-        .repartition(shufflePartitions(s), col("sg"))
-      val rare = sh.join(
-        sh.groupBy(col("sg")).agg(count(lit(1)).as("df"))
-          .filter(col("df") <= stopDf.get).select(col("sg")),
-        Seq("sg"))
-      val cand = rare.select(col("doc_id").as("i"), col("sg"))
-        .join(rare.select(col("doc_id").as("j"), col("sg")), Seq("sg"))
-        .filter(col("i") < col("j"))
-        .select(col("i"), col("j")).distinct()
-      return verifyPairs(cand, arr)
-    }
     // Inverted-index self-join where both sides are the IDENTICAL
     // subtree (explode → repartition by shingle): ReuseExchange
     // shuffles the postings ONCE and reads them twice, and pairs
@@ -226,7 +202,7 @@ object Dedup {
     // 1.12 s for this shape at sf0.1/32c — the two size-only corpus
     // re-scans are column-pruned and cheaper than the extra exchange
     // here, and the pair aggregation (not the scans) is the measured
-    // floor of this query (tools/Q40Profile).
+    // floor of this query (min-of-5 stage splits at sf0.1).
     val sizes = arr.select(col("doc_id"), size(col("sgs")).cast("long").as("n_sg"))
     common
       .join(sizes.select(col("doc_id").as("i"), col("n_sg").as("ni")), Seq("i"))
@@ -247,8 +223,8 @@ object Dedup {
     * directly); the scale path when shingle frequencies are
     * heavy-tailed — registered under the gate as q80 so the 100 TB
     * escape hatch is itself oracle-checked, even though on THIS small
-    * corpus the direct index join is faster (Q80Profile: 2.65 s vs
-    * 0.9 s at sf0.1 — tiny vocabulary means prefixes prune little;
+    * corpus the direct index join is faster (min-of-5 at sf0.1: 2.65 s vs
+    * 0.9 s — tiny vocabulary means prefixes prune little;
     * was 6.45 s before the length+positional filters starved the
     * exact verify from 409k candidates down to 120k). */
   def ppjoinJaccard(s: SparkSession, d: String): DataFrame = {
@@ -477,33 +453,17 @@ object Dedup {
     * produced them (round-9 verdict: the old distinct-first order
     * shuffled every candidate). Hot-chunk stance: a boilerplate-heavy
     * corpus can concentrate signatures so one 16-bit chunk value holds
-    * m docs and contributes m² candidate rows. `STOP_CHUNK_CONF`
-    * (off by default — the graded path stays pigeonhole-LOSSLESS)
-    * drops chunk values whose posting list exceeds the cutoff, same
-    * opt-in contract as q40's STOP_SHINGLE_CONF: a pair is only lost
-    * if ALL of its ≥1 shared chunks are hot, and near-dup pairs at
-    * Hamming ≤ 3 share ≥ 1 of 4 chunks, so with any non-degenerate
-    * cutoff the recall loss is confined to pairs living entirely
-    * inside boilerplate clusters — exactly the pairs exact-dedup (q39)
-    * already catches upstream. */
+    * m docs and contributes m² candidate rows; the path stays
+    * pigeonhole-LOSSLESS and pays that cost. */
   val HAM_MAX = 3
-  val STOP_CHUNK_CONF = "spark.graft.dedup.stopChunkDf"
   def q42Simhash(s: SparkSession, d: String): DataFrame = {
     // Codegen SimhashSig expression (same rationale as q41's MinhashSig).
     val sig = shingleArrays(s, d)
       .select(col("doc_id"),
         graft.functions.SimhashSig.simhash_sig(col("sgs")).as("simhash"))
-    val chunks0 = sig.select(col("doc_id"), col("simhash"), explode(array(
+    val chunks = sig.select(col("doc_id"), col("simhash"), explode(array(
       (0 until 4).map(c => struct(lit(c).as("c"),
         expr(s"(simhash >> ${c * 16}) & 65535").as("v"))): _*)).as("ck"))
-    val chunks = s.conf.getOption(STOP_CHUNK_CONF).map(_.toInt) match {
-      case Some(cut) =>
-        chunks0.join(
-          chunks0.groupBy(col("ck")).agg(count(lit(1)).as("df"))
-            .filter(col("df") <= cut).select(col("ck")),
-          Seq("ck"))
-      case None => chunks0
-    }
     chunks.select(col("doc_id").as("i"), col("simhash").as("si"), col("ck"))
       .join(chunks.select(col("doc_id").as("j"), col("simhash").as("sj"), col("ck")),
             Seq("ck"))
@@ -556,11 +516,10 @@ object Dedup {
     * boilerplate span shared by m documents contributes m²/2 join rows
     * — the same heavy-tail hazard as q40's frequent shingles, but with
     * no verify stage to hide behind: dropping a span REMOVES its
-    * contribution from `shared_spans`, so unlike STOP_SHINGLE_CONF
-    * this cutoff is a documented approximation (license headers /
-    * templates are usually exactly what span-dedup wants to ignore
-    * anyway — Lee et al. drop top-frequency spans for the same
-    * reason). Off here keeps the oracle exact; DedupSpec asserts the
+    * contribution from `shared_spans`, so this cutoff is a documented
+    * approximation (license headers / templates are usually exactly
+    * what span-dedup wants to ignore anyway — Lee et al. drop
+    * top-frequency spans for the same reason). Off here keeps the oracle exact; DedupSpec asserts the
     * gated variant returns a subset with no inflated counts. */
   val STOP_SPAN_CONF = "spark.graft.dedup.stopSpanDf"
 

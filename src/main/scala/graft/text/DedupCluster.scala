@@ -170,8 +170,6 @@ object DedupCluster {
       done = cur == prev
       prev = cur
       iters += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"[cc] round $iters edges=${cur._1} done=$done")
     }
     // fail loudly rather than hand back non-fixpoint (wrong) labels —
     // the star contraction converges in O(log n) rounds, so hitting

@@ -1423,9 +1423,10 @@ object TrainingSet {
     * Scale shape: the model is ONE (tok, source) aggregate (vocab-
     * bounded, broadcast back) + a |sources|-row class ledger; scoring
     * is one occurrence-level broadcast join + ONE (doc, source)
-    * aggregate; the argmin is a min-of-orderable-struct hash aggregate
-    * over the ≤|sources|-row per-doc ledger (map-side partial, no
-    * window sort), never over occurrences. Nothing driver-side. At 100 TB
+    * aggregate; the argmin is a min-of-orderable-struct aggregate over
+    * the ≤|sources|-row per-doc ledger (a struct buffer plans as
+    * SortAggregate; its partial runs map-side on join-sorted input, no
+    * window), never over occurrences. Nothing driver-side. At 100 TB
     * with an unbounded vocabulary, drop the broadcast hint and the
     * scoring join key-shuffles on `tok` — no other change. */
   def q285NbSource(s: SparkSession, d: String): DataFrame = {
@@ -1497,9 +1498,10 @@ object TrainingSet {
     // per-doc argmin WITHOUT a window (r17, guide §2.3): min over an
     // orderable struct ordered (nll7, cls) — exactly the old
     // row_number(orderBy(nll7, cls)) = 1 pick (cls unique per doc) —
-    // as a hash aggregate: partial map-side combining collapses the
-    // |cls| rows per doc BEFORE the exchange, where the window
-    // shuffled them all and sorted each partition.
+    // as an aggregate (SortAggregate: a struct buffer is not
+    // hash-aggregable): partial map-side combining collapses the |cls|
+    // rows per doc BEFORE the exchange, where the window shuffled them
+    // all and sorted each partition.
     perDoc.crossJoin(broadcast(clsLedger.select(col("cls"), col("u7"), col("prior7"))))
       .join(seen, Seq("doc_id", "cls"), "left")
       .withColumn("nll7", coalesce(col("s7"), lit(0L))
@@ -1571,8 +1573,9 @@ object TrainingSet {
     * APPROXIMATION of the exact joint sweep (argmin restricted to the
     * screening top-2 for α ≠ α₀), mirrored exactly in the oracle; the
     * beam is a parameter of `q287NbCvBeam` so the exact path (beam ≥
-    * |cls|) stays runnable — `tools.Q287BeamProbe` measures the
-    * beamed-vs-exact acc_ppm delta, recorded in docs/SCALE.md. */
+    * |cls|) stays runnable — TrainingSetSpec asserts the beamed and
+    * exact sweeps give identical acc_ppm at sf0.001 (the deltas at
+    * larger SFs are recorded in docs/SCALE.md). */
   val CV_BEAM = 2L
 
   /** q287: IN-ENGINE MODEL SELECTION — K-fold cross-validated accuracy
@@ -1810,11 +1813,12 @@ object TrainingSet {
     val win1 = nllW.filter(col("rn") === 1)
       .select(lit(alpha0).as("alpha"), col("f"), col("source"), col("cls"))
     // RERANK: per remaining α, argmin over the beam classes — a
-    // min-of-orderable-struct hash aggregate ordered (nll7, cls) over
-    // the beam-sized ledger (≤ CV_BEAM rows per (doc, α)); f and
-    // source are per-doc constants riding behind the ordering fields
-    // (cls is unique within a doc, so they never decide). No window,
-    // no sort; partial aggregation combines map-side (guide §2.3).
+    // min-of-orderable-struct aggregate ordered (nll7, cls) over the
+    // beam-sized ledger (≤ CV_BEAM rows per (doc, α)); f and source
+    // are per-doc constants riding behind the ordering fields (cls is
+    // unique within a doc, so they never decide). No window; the
+    // struct buffer plans as SortAggregate, whose partial combines
+    // map-side (guide §2.3).
     val winR = nllW
       .select(col("doc_id"), col("f"), col("source"), col("cls"),
         explode(array(CV_ALPHAS.tail.map(a =>
@@ -2612,10 +2616,11 @@ object TrainingSet {
     // per-doc argmin WITHOUT a window (r17, guide §2.3): min over an
     // orderable struct ordered (nll7, cls) — exactly the old
     // row_number(orderBy(nll7, cls)) = 1 pick (cls is unique within a
-    // doc, so the trailing rt field never decides) — as a hash
-    // aggregate: partial map-side combining collapses the |cls| rows
-    // per doc BEFORE the exchange, where the window shuffled them all
-    // and sorted each partition.
+    // doc, so the trailing rt field never decides) — as an aggregate
+    // (SortAggregate: a struct buffer is not hash-aggregable): partial
+    // map-side combining collapses the |cls| rows per doc BEFORE the
+    // exchange, where the window shuffled them all and sorted each
+    // partition.
     def argminRight(a: Long) = min(struct(col(s"nll7_$a"), col("cls"),
       when(col("cls") === col("source"), 1L).otherwise(0L).as("rt")))
       .getField("rt")

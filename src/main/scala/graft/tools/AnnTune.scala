@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sim.Similarity
 
@@ -15,14 +14,8 @@ import graft.sim.Similarity
 object AnnTune {
   def main(args: Array[String]): Unit = {
     val sfs = Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-              sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SparkEntry
+      .localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Multi-JVM execution gate: re-runs one representative query per
@@ -112,12 +112,7 @@ object ClusterSmoke {
 
   private def runAll(queries: Seq[String], master: String, sfDir: String,
                      cluster: Boolean): Map[String, (Long, Long, Long)] = {
-    val b = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val b = graft.SparkEntry.localSession("8").master(master)
     if (cluster) {
       // Executor JVMs are fresh processes: they need the repo classes on
       // their classpath and the same JDK17 module opens the driver gets

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthetic ×N inflation of a testdata SF directory — the input ETL
@@ -31,16 +31,11 @@ object InflateSf {
     val factor = args.drop(1).headOption.map(_.toInt).getOrElse(10)
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.SparkEntry.localSession(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    // key offsets: far above any real id, and factor·offset stays well
-    // below the 1e8 synthetic-key ranges queries use (q105 adds 1e8)
-    val K_OFF = 10000000L   // order keys (o_orderkey / l_orderkey)
+    // key offsets: far above any real id (order keys are checked below)
+    val K_OFF = 1000000L    // order keys (o_orderkey / l_orderkey)
     val C_OFF = 1000000L    // customer keys
     val P_OFF = 1000000L    // part keys
     val S_OFF = 100000L     // supplier keys
@@ -59,6 +54,14 @@ object InflateSf {
     }
 
     val t = (n: String) => spark.read.parquet(s"$src/$n.parquet")
+
+    // shifted copies must neither collide with each other nor reach the
+    // k + 100000000 rows q105/q112/q117 add
+    val maxOrderKey = t("orders").agg(max(col("o_orderkey"))).head().getLong(0)
+    require(K_OFF > maxOrderKey,
+      s"K_OFF $K_OFF must exceed the source max o_orderkey $maxOrderKey")
+    require(maxOrderKey + (factor - 1) * K_OFF < 100000000L,
+      s"factor $factor shifts o_orderkey past 100000000 (max $maxOrderKey)")
 
     write("documents", copies(t("documents"), (df, c) =>
       if (c == 0) df

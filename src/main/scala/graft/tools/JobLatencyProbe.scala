@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-job fixed-latency probe (r17): times N trivial Spark jobs to
   * isolate scheduler/driver overhead from compute throughput. The bench
   * calibration query (q229) is compute-bound and so insensitive to
@@ -9,13 +7,11 @@ import org.apache.spark.sql.SparkSession
   * runs tens of tiny jobs per invocation and amplifies it — when those
   * queries drift against their committed floors while q229 does not,
   * this probe tells whether the era's JOB OVERHEAD (not its compute)
-  * moved. Usage: QB_CPUS=32 sbt "runMain graft.tools.JobLatencyProbe" */
+  * moved. Usage: SPARK_GRAFT_CPUS=32 sbt "runMain graft.tools.JobLatencyProbe" */
 object JobLatencyProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("QB_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = graft.SparkEntry.localSession(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val n = 100
     def run(label: String)(job: () => Unit): Unit = {

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale audit: dumps the formatted physical plan of every registry
   * query and greps for the properties that must hold at 100 TB —
   * parquet filter pushdown, column-pruned ReadSchema, broadcast joins
@@ -10,13 +8,7 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SparkEntry.localSession("4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     // optional name filter: any non-flag arg past the sfDir restricts

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-evidence bench tier (r17): times the heavy-query panel on the
   * InflateSf ×10 corpus at the core count given by SPARK_GRAFT_CPUS, so
   * an 8-core vs 32-core pair of runs yields a MEASURED parallel-scaling
@@ -32,11 +30,7 @@ object ScaleBench {
       "/root/testdata-scale/sf1syn")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.SparkEntry.localSession(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def r3(d: Double) = math.round(d * 1000) / 1000.0
     val names = if (args.nonEmpty) args.toSeq else PANEL

@@ -42,17 +42,6 @@ class DedupSpec extends AnyFunSuite {
     assert(ppjoin == direct && direct.nonEmpty)
   }
 
-  test("stop-shingle candidate path is lossless on this corpus") {
-    val exact = Dedup.q40NgramJaccard(spark, TestSpark.SF)
-      .select("i", "j", "jaccard").as[(Long, Long, Double)].collect().toSet
-    spark.conf.set(Dedup.STOP_SHINGLE_CONF, "50")
-    try {
-      val stopped = Dedup.q40NgramJaccard(spark, TestSpark.SF)
-        .select("i", "j", "jaccard").as[(Long, Long, Double)].collect().toSet
-      assert(stopped == exact && exact.nonEmpty)
-    } finally spark.conf.unset(Dedup.STOP_SHINGLE_CONF)
-  }
-
   test("q79 span-df cutoff returns a subset with no inflated counts") {
     val exact = Dedup.q79SharedSpans(spark, TestSpark.SF)
       .as[(Long, Long, Long)].collect()

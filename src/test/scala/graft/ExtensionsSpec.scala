@@ -52,8 +52,7 @@ class ExtensionsSpec extends AnyFunSuite {
     val before = org.apache.spark.sql.SparkSession.getDefaultSession
     org.apache.spark.sql.SparkSession.clearDefaultSession()
     org.apache.spark.sql.SparkSession.clearActiveSession()
-    val s2 = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
+    val s2 = SparkEntry.localSession("2")
       .withExtensions(new GraftExtensions)
       .getOrCreate()
     try {

@@ -89,8 +89,11 @@ class OsmShapeSpec extends AnyFunSuite {
     val f = dir.resolve("fixture.osm")
     java.nio.file.Files.write(f, xml.getBytes("UTF-8"))
 
-    val elems = graft.sources.OsmXml.elements(spark, f.toString)
+    val elems = spark.read.format("osm").load(f.toString)
     assert(elems.schema == graft.sources.OsmXml.schema)
+    // the source serves exactly the rows the streaming parser emits
+    assert(elems.collect().toSeq ==
+      graft.sources.OsmXml.parse(java.nio.file.Files.newInputStream(f)).toSeq)
     // 3 nodes + 1 way + 1 relation; node 3's bad lat parses to NULL
     // (validated later)
     assert(elems.count() == 5)
@@ -162,9 +165,10 @@ class OsmShapeSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1))).toSeq ==
       Seq((1L, 10L), (7L, 12L)))
 
-    // the V2 path agrees with the RDD-based reader
-    val viaRdd = graft.sources.OsmXml.elements(spark, dir.toString + "/a.osm")
-    assert(df.orderBy("id").collect().toSeq == viaRdd.orderBy("id").collect().toSeq)
+    // the V2 path agrees with the streaming parser it wraps
+    val parsed = graft.sources.OsmXml.parse(
+      java.nio.file.Files.newInputStream(dir.resolve("a.osm"))).toSeq
+    assert(df.orderBy("id").collect().toSeq == parsed.sortBy(_.getLong(1)))
 
     // type filter is absorbed by the source (no residual Filter node):
     // the parser skips non-matching elements before building rows

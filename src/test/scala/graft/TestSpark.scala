@@ -6,14 +6,7 @@ import org.apache.spark.sql.SparkSession
   * thrash the JVM). Mirrors the driver's Verify config. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = SparkEntry.localSession("4").appName("graft-tests").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -124,17 +124,30 @@ class TrainingSetSpec extends AnyFunSuite {
   }
 
   test("q78 curation: LSH candidate path == exact pair-join path") {
-    import graft.text.CorpusPipeline
-    val d = TestSpark.SF
-    def run(): Set[(Long, Long, Double)] =
-      CorpusPipeline.q78CorpusPipeline(spark, d)
-        .as[(Long, Long, Double)].collect().toSet
-    val lsh = run() // conf unset → default ON
-    spark.conf.set(CorpusPipeline.CURATION_LSH_CONF, "false")
-    val exact = try run()
-    finally spark.conf.unset(CorpusPipeline.CURATION_LSH_CONF)
+    // Both paths decide each pair on its own, so equality on the full
+    // corpus covers every survivor subset q78 hands them.
+    val arr = Dedup.shingleArrays(spark, TestSpark.SF)
+    def ij(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.select("i", "j").as[(Long, Long)].collect().toSet
+    val lsh = ij(Dedup.lshVerifiedPairs(spark, arr))
+    val exact = ij(Dedup.jaccardPairs(spark, arr))
     assert(lsh == exact && lsh.nonEmpty,
-      s"LSH curation diverged: ${(lsh diff exact).size} extra, ${(exact diff lsh).size} missing")
+      s"LSH pairs diverged: ${(lsh diff exact).size} extra, ${(exact diff lsh).size} missing")
+  }
+
+  test("q287 beamed CV sweep == exact sweep (beam = |cls|)") {
+    val nCls = Tables.documents(spark, TestSpark.SF)
+      .select("source").distinct().count()
+    // collect each sweep before building the next: both cycle the same
+    // checkpointCycled tags, so a later build frees the earlier blocks
+    def sweep(beam: Long): Set[(Long, Long, Long, Long)] =
+      TrainingSet.q287NbCvBeam(spark, TestSpark.SF, beam)
+        .select("alpha", "f", "n_docs", "acc_ppm")
+        .as[(Long, Long, Long, Long)].collect().toSet
+    val beamed = sweep(TrainingSet.CV_BEAM)
+    val exact = sweep(nCls)
+    assert(nCls > TrainingSet.CV_BEAM)
+    assert(beamed == exact && beamed.nonEmpty)
   }
 
   test("q96 shard manifest partitions the packed set exactly") {
