@@ -6,7 +6,7 @@ each SparkEntry.queries result parquet matches its DuckDB oracle).
 Usage: python3 scripts/check.py <sfDir> <outDir>
 (outDir = what `sbt "runMain graft.Verify <sfDir> <outDir>"` wrote)
 """
-import sys, os, json, glob
+import sys, os, json, glob, shutil, tempfile
 import duckdb
 import pandas as pd
 import numpy as np
@@ -22,8 +22,28 @@ def norm(df):
             df[c] = df[c].astype("datetime64[us]")
     return df.reset_index(drop=True)
 
-def main(sf_dir, out_dir):
+def connect():
+    """DuckDB with its memory_limit at half of MemTotal (its own default
+    is 80% of RAM, which took q249's oracle past what a 15 GB machine
+    could give) and a temp_directory under /tmp, so a large oracle
+    spills to disk instead of failing. Returns (connection, spill dir)."""
+    with open("/proc/meminfo") as f:
+        kb = next(int(l.split()[1]) for l in f if l.startswith("MemTotal:"))
+    spill = tempfile.mkdtemp(prefix="duckdb_oracle_", dir="/tmp")
     con = duckdb.connect()
+    con.execute(f"SET memory_limit='{kb // 2 // 1024}MB'")
+    con.execute(f"SET temp_directory='{spill}'")
+    return con, spill
+
+def main(sf_dir, out_dir):
+    con, spill = connect()
+    try:
+        return run(con, sf_dir, out_dir)
+    finally:
+        con.close()
+        shutil.rmtree(spill, ignore_errors=True)
+
+def run(con, sf_dir, out_dir):
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):

@@ -1,11 +1,19 @@
 package graft.sources
 
 import java.io.InputStream
-import java.sql.Timestamp
-import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
+import java.time.Instant
+import java.time.format.DateTimeParseException
+import javax.xml.stream.{XMLInputFactory, XMLStreamException, XMLStreamReader}
+import javax.xml.stream.XMLStreamConstants.{END_ELEMENT, START_ELEMENT}
+
+import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** S1 in its honest form: OSM XML → the `elements` rows (`schema`,
   * `parse`) that `format("osm")` serves to `OsmShape.shapeAll` (SURVEY.md §2.1 S1 — the reference family's
@@ -13,25 +21,30 @@ import org.apache.spark.sql.types._
   * the reconstructed checkout is empty, so no file:line citation is
   * possible).
   *
-  * Execution model: one task per file, each task STREAMING its file
-  * through a StAX pull parser — constant memory per task regardless of
-  * file size (the iterparse property), no DOM, no whole-file string.
-  * `binaryFiles` is used instead of `wholeTextFiles` precisely so the
-  * bytes are consumed incrementally from the stream.
+  * One scanner: `parse` is the only element loop. It walks the
+  * top-level node/way/relation start elements of one byte stream
+  * through a StAX pull parser — constant memory, no DOM, no whole-file
+  * string (the iterparse property) — and writes Catalyst values
+  * directly (`UTF8String`, longs, doubles, µs timestamps,
+  * `GenericArrayData`). Pruning happens inside it: only the attributes
+  * and children of the `required` columns are read, in exactly the
+  * requested (possibly nested-pruned) shape, and element types outside
+  * the pushed `type` set are never decoded. With every column pruned,
+  * as under `count()`, it only walks start and end elements.
   *
   * Scale stance: OSM distributes data as many per-region extracts, so
   * file-granularity parallelism is the natural partitioning for XML
   * input (a single planet-scale file ships as PBF, whose block
   * structure is splittable; XML is not record-splittable without a
-  * start-tag-scanning InputFormat — out of scope here and of the
-  * reference, which is single-file single-pass anyway). Everything
-  * after this source is ordinary DataFrame code: parse once, write
-  * parquet, and all downstream queries scan columnar data.
+  * start-tag-scanning InputFormat). Everything after this source is
+  * ordinary DataFrame code: parse once, write parquet, and all
+  * downstream queries scan columnar data.
   *
-  * Untrusted input: DTDs and external entities are disabled (XXE); a
-  * malformed attribute value parses to NULL rather than failing the
-  * task — validation is `OsmShape.isValid`'s job, which routes bad rows
-  * to the corrupt side instead of dropping or throwing.
+  * Untrusted input: `reader` refuses DTDs and external entities (XXE)
+  * for every loop here; a malformed attribute value — including a
+  * timestamp outside the µs range — parses to NULL rather than failing
+  * the task — validation is `OsmShape.isValid`'s job, which routes bad
+  * rows to the corrupt side instead of dropping or throwing.
   */
 object OsmXml {
 
@@ -48,6 +61,14 @@ object OsmXml {
     StructField("members", ArrayType(StructType(Seq(
       StructField("mtype", StringType), StructField("ref", LongType),
       StructField("role", StringType)))))))
+
+  /** The one StAX reader factory: DTDs and external entities off. */
+  private def reader(in: InputStream): XMLStreamReader = {
+    val factory = XMLInputFactory.newFactory()
+    factory.setProperty(XMLInputFactory.SUPPORT_DTD, false)
+    factory.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
+    factory.createXMLStreamReader(in)
+  }
 
   /** A1 in its raw-XML form (the reference family's `count_tags`): a
     * census of EVERY element tag name in the document — including the
@@ -67,14 +88,11 @@ object OsmXml {
 
   /** Streaming count of start-element names in one XML byte stream. */
   def countStartElements(in: InputStream): Map[String, Long] = {
-    val factory = XMLInputFactory.newFactory()
-    factory.setProperty(XMLInputFactory.SUPPORT_DTD, false)
-    factory.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
-    val r = factory.createXMLStreamReader(in)
+    val r = reader(in)
     val m = scala.collection.mutable.Map.empty[String, Long]
     try {
       while (r.hasNext) {
-        if (r.next() == XMLStreamConstants.START_ELEMENT) {
+        if (r.next() == START_ELEMENT) {
           val n = r.getLocalName
           m.update(n, m.getOrElse(n, 0L) + 1L)
         }
@@ -83,104 +101,71 @@ object OsmXml {
     m.toMap
   }
 
-  /** Count-only pass for the aggregate-pushdown path (COUNT over the
-    * `osm` source): per-type row counts WITHOUT building a single Row —
-    * no attribute parsing, no child collection, no string conversion.
-    * Mirrors `parse`'s emission rule exactly: an element counts iff
-    * parse would emit it — top-of-scan node/way/relation matching the
-    * pushed type set, whose subtree is then consumed (so a nested
-    * row-named element inside a MATCHED element never double-counts,
-    * exactly as readElement consumes it; inside a NON-matched element
-    * it scans through, exactly as parse's loop does). */
-  def countTypes(in: InputStream,
-                 wantedTypes: Option[Set[String]] = None,
-                 permissive: Boolean = false): Map[String, Long] = {
-    val factory = XMLInputFactory.newFactory()
-    factory.setProperty(XMLInputFactory.SUPPORT_DTD, false)
-    factory.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
-    val r = factory.createXMLStreamReader(in)
-    val m = scala.collection.mutable.Map.empty[String, Long]
-    var skipDepth = 0
-    var pending: String = null
-    try {
-      while (r.hasNext) {
-        r.next() match {
-          case XMLStreamConstants.START_ELEMENT =>
-            if (skipDepth > 0) skipDepth += 1
-            else {
-              val n = r.getLocalName
-              if ((n == "node" || n == "way" || n == "relation") &&
-                  wantedTypes.forall(_.contains(n))) {
-                pending = n
-                skipDepth = 1 // consume the subtree, like readElement
-              }
-            }
-          case XMLStreamConstants.END_ELEMENT =>
-            if (skipDepth > 0) {
-              skipDepth -= 1
-              // count at element COMPLETION, not start: on a truncated
-              // document the permissive counts then agree exactly with
-              // parse()'s salvaged rows (an element in flight at the
-              // corruption point is dropped by both)
-              if (skipDepth == 0) m.update(pending, m.getOrElse(pending, 0L) + 1L)
-            }
-          case _ => ()
-        }
-      }
-    } catch {
-      // permissive keeps the counts of every element completed before
-      // the corruption point — same contract as parse()
-      case e: javax.xml.stream.XMLStreamException if permissive => ()
-    } finally { r.close(); in.close() }
-    m.toMap
-  }
+  private val typeNames: Map[String, UTF8String] =
+    Seq("node", "way", "relation").map(n => n -> UTF8String.fromString(n)).toMap
 
-  /** Streaming element iterator over an XML byte stream. Emits one Row
-    * per <node>/<way>/<relation>; non-element structure (bounds, the
-    * osm root, …) is skipped — use `countTags` for raw tag-name
-    * censuses over the full document. `wantedTypes` is the pushed-down
-    * `type` predicate — a non-matching element's subtree is skipped by
-    * the pull parser without building a Row at all. Closes the stream
-    * when exhausted. */
+  /** XML attribute behind each field of the tags / members element
+    * structs (`ref` is the one long-valued one). */
+  private val childAttr = Map("k" -> "k", "v" -> "v",
+    "mtype" -> "type", "ref" -> "ref", "role" -> "role")
+
+  /** Streaming element iterator over an XML byte stream: one row in the
+    * `required` shape per top-level <node>/<way>/<relation> whose type
+    * is in `wantedTypes`; any other structure (bounds, the osm root, …)
+    * is skipped — use `countTags` for raw tag-name censuses over the
+    * full document. Every node/way/relation's whole subtree is consumed,
+    * wanted or not, so an element nested inside one is never emitted
+    * and a pushed type filter returns exactly the matching rows of the
+    * unfiltered read. Closes the stream when exhausted.
+    *
+    * Permissive mode: a malformed document (truncated extract,
+    * unbalanced tags, bad entity) ends THIS stream at the corruption
+    * point — every complete element before it is kept, the one in
+    * flight is dropped. Failfast (default) rethrows the
+    * XMLStreamException: in an analytics gate a silently-shortened
+    * corpus is the worse failure mode, so tolerance is opt-in
+    * (`option("mode","permissive")`), unlike the CSV/JSON sources'
+    * permissive default. */
   def parse(in: InputStream,
+            required: StructType = schema,
             wantedTypes: Option[Set[String]] = None,
-            permissive: Boolean = false): Iterator[Row] = new Iterator[Row] {
-    private val factory = XMLInputFactory.newFactory()
-    factory.setProperty(XMLInputFactory.SUPPORT_DTD, false)
-    factory.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
-    private val r = factory.createXMLStreamReader(in)
-    private var nextRow: Row = _
+            permissive: Boolean = false): Iterator[InternalRow] = new Iterator[InternalRow] {
+    private val r = reader(in)
+    // full-schema ordinal of each required column, in required order
+    private val cols = required.fieldNames.map(schema.fieldIndex)
+    // output ordinal of each array column, -1 when pruned
+    private val Array(tagsAt, ndsAt, membersAt) = Array(9, 10, 11).map(cols.indexOf(_))
+    private def elementAttrs(at: Int): Array[String] =
+      if (at < 0) null
+      else required(at).dataType.asInstanceOf[ArrayType]
+        .elementType.asInstanceOf[StructType].fieldNames.map(childAttr)
+    private val tagAttrs = elementAttrs(tagsAt)
+    private val memberAttrs = elementAttrs(membersAt)
+    private var nextRow: InternalRow = _
     advance()
 
     override def hasNext: Boolean = nextRow != null
 
-    override def next(): Row = {
+    override def next(): InternalRow = {
       val out = nextRow
       advance()
       out
     }
 
-    /** Permissive mode: a malformed document (truncated extract,
-      * unbalanced tags, bad entity) ends THIS file's iteration at the
-      * corruption point — every complete element before it is kept,
-      * other file partitions are unaffected. Failfast (default) lets
-      * the XMLStreamException fail the task: in an analytics gate a
-      * silently-shortened corpus is the worse failure mode, so
-      * tolerance is opt-in (`option("mode","permissive")`), unlike the
-      * CSV/JSON sources' permissive default. */
     private def advance(): Unit = {
       nextRow = null
       try {
         while (nextRow == null && r.hasNext) {
-          if (r.next() == XMLStreamConstants.START_ELEMENT) {
+          if (r.next() == START_ELEMENT) {
             val name = r.getLocalName
-            if ((name == "node" || name == "way" || name == "relation") &&
-                wantedTypes.forall(_.contains(name)))
-              nextRow = readElement(name)
+            if (typeNames.contains(name)) {
+              if (wantedTypes.forall(_.contains(name))) nextRow = readElement(name)
+              else consume(null, null, null)
+            }
           }
         }
       } catch {
-        case e: javax.xml.stream.XMLStreamException =>
+        case e: XMLStreamException =>
           nextRow = null
           closeQuietly()
           if (!permissive) throw e
@@ -193,42 +178,73 @@ object OsmXml {
       try in.close() catch { case _: Exception => () }
     }
 
-    /** Reader is ON the element's START_ELEMENT; consume through its
-      * END_ELEMENT, collecting <tag>/<nd> children. */
-    private def readElement(name: String): Row = {
-      val id = longAttr("id")
-      val lat = if (name == "node") dblAttr("lat") else null
-      val lon = if (name == "node") dblAttr("lon") else null
-      val user = r.getAttributeValue(null, "user")
-      val uid = longAttr("uid")
-      val version = r.getAttributeValue(null, "version")
-      val changeset = longAttr("changeset")
-      val ts = tsAttr("timestamp")
-      val tags = Seq.newBuilder[Row]
-      val nds = Seq.newBuilder[Any]
-      val members = Seq.newBuilder[Row]
-      var depth = 1
-      while (depth > 0 && r.hasNext) {
-        r.next() match {
-          case XMLStreamConstants.START_ELEMENT =>
-            depth += 1
-            if (depth == 2) r.getLocalName match {
-              case "tag" => tags += Row(r.getAttributeValue(null, "k"),
-                                        r.getAttributeValue(null, "v"))
-              case "nd"  => nds += longAttr("ref")
-              case "member" => members += Row(
-                r.getAttributeValue(null, "type"), longAttr("ref"),
-                r.getAttributeValue(null, "role"))
-              case _     => ()
-            }
-          case XMLStreamConstants.END_ELEMENT => depth -= 1
-          case _ => ()
-        }
+    /** Reader is ON the element's START_ELEMENT: read the required
+      * attributes, then the required children. lat/lon belong to nodes,
+      * nds to ways and members to relations; tags is never null. */
+    private def readElement(name: String): InternalRow = {
+      val row = new GenericInternalRow(cols.length)
+      var i = 0
+      while (i < cols.length) {
+        row.update(i, cols(i) match {
+          case 0 => typeNames(name)
+          case 1 => longAttr("id")
+          case 2 => if (name == "node") dblAttr("lat") else null
+          case 3 => if (name == "node") dblAttr("lon") else null
+          case 4 => strAttr("user")
+          case 5 => longAttr("uid")
+          case 6 => strAttr("version")
+          case 7 => longAttr("changeset")
+          case 8 => tsAttr("timestamp")
+          case _ => null // arrays: filled from the children below
+        })
+        i += 1
       }
-      Row(name, id, lat, lon, user, uid, version, changeset, ts,
-          tags.result(), if (name == "way") nds.result() else null,
-          if (name == "relation") members.result() else null)
+      val tags = if (tagsAt >= 0) new ArrayBuffer[Any] else null
+      val nds = if (ndsAt >= 0 && name == "way") new ArrayBuffer[Any] else null
+      val members =
+        if (membersAt >= 0 && name == "relation") new ArrayBuffer[Any] else null
+      consume(tags, nds, members)
+      if (tags != null) row.update(tagsAt, new GenericArrayData(tags.toArray))
+      if (nds != null) row.update(ndsAt, new GenericArrayData(nds.toArray))
+      if (members != null) row.update(membersAt, new GenericArrayData(members.toArray))
+      row
     }
+
+    /** Consume through the current element's END_ELEMENT, appending its
+      * <tag>/<nd>/<member> children to the non-null buffers. Every
+      * node/way/relation goes through here, wanted or not, so an element
+      * nested inside one is never emitted. */
+    private def consume(tags: ArrayBuffer[Any], nds: ArrayBuffer[Any],
+                        members: ArrayBuffer[Any]): Unit = {
+      val collect = tags != null || nds != null || members != null
+      var depth = 1
+      while (depth > 0 && r.hasNext) r.next() match {
+        case START_ELEMENT =>
+          depth += 1
+          if (depth == 2 && collect) r.getLocalName match {
+            case "tag" if tags != null => tags += struct(tagAttrs)
+            case "nd" if nds != null => nds += longAttr("ref")
+            case "member" if members != null => members += struct(memberAttrs)
+            case _ => ()
+          }
+        case END_ELEMENT => depth -= 1
+        case _ => ()
+      }
+    }
+
+    /** One tags/members element struct, fields in the requested order. */
+    private def struct(attrs: Array[String]): InternalRow = {
+      val s = new GenericInternalRow(attrs.length)
+      var j = 0
+      while (j < attrs.length) {
+        s.update(j, if (attrs(j) == "ref") longAttr("ref") else strAttr(attrs(j)))
+        j += 1
+      }
+      s
+    }
+
+    private def strAttr(n: String): UTF8String =
+      UTF8String.fromString(r.getAttributeValue(null, n))
 
     private def longAttr(n: String): Any = {
       val v = r.getAttributeValue(null, n)
@@ -240,12 +256,15 @@ object OsmXml {
       if (v == null) null else v.toDoubleOption.map(Double.box).orNull
     }
 
+    /** Epoch µs; an unparseable or out-of-range instant reads as NULL. */
     private def tsAttr(n: String): Any = {
       val v = r.getAttributeValue(null, n)
       if (v == null) null
       else
-        try Timestamp.from(java.time.Instant.parse(v))
-        catch { case _: java.time.format.DateTimeParseException => null }
+        try {
+          val t = Instant.parse(v)
+          Math.addExact(Math.multiplyExact(t.getEpochSecond, 1000000L), t.getNano / 1000L)
+        } catch { case _: DateTimeParseException | _: ArithmeticException => null }
     }
   }
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Synthetic ×N inflation of a testdata SF directory — the input ETL
@@ -34,7 +34,7 @@ object InflateSf {
     val spark = graft.SparkEntry.localSession(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    // key offsets: far above any real id (order keys are checked below)
+    // key offsets: far above any real id (each is checked below)
     val K_OFF = 1000000L    // order keys (o_orderkey / l_orderkey)
     val C_OFF = 1000000L    // customer keys
     val P_OFF = 1000000L    // part keys
@@ -55,11 +55,25 @@ object InflateSf {
 
     val t = (n: String) => spark.read.parquet(s"$src/$n.parquet")
 
-    // shifted copies must neither collide with each other nor reach the
-    // k + 100000000 rows q105/q112/q117 add
-    val maxOrderKey = t("orders").agg(max(col("o_orderkey"))).head().getLong(0)
-    require(K_OFF > maxOrderKey,
-      s"K_OFF $K_OFF must exceed the source max o_orderkey $maxOrderKey")
+    // shifted copies must not collide: every offset exceeds the source
+    // max of the key it shifts (foreign keys follow their dims' maxes)
+    def guard(table: String, keys: (Column, Long)*): Seq[Long] = {
+      val maxes = t(table).select(keys.map(k => max(k._1).cast("long")): _*).head()
+      keys.zipWithIndex.map { case ((key, off), i) =>
+        require(off > maxes.getLong(i),
+          s"offset $off must exceed the source max ${maxes.getLong(i)} of $table $key")
+        maxes.getLong(i)
+      }
+    }
+    val maxOrderKey = guard("orders", col("o_orderkey") -> K_OFF).head
+    guard("customer", col("c_custkey") -> C_OFF)
+    guard("part", col("p_partkey") -> P_OFF)
+    guard("supplier", col("s_suppkey") -> S_OFF)
+    guard("documents", col("doc_id") -> D_OFF)
+    guard("events", col("event_id") -> E_OFF, col("user_id") -> U_OFF)
+    // q87 adds DUP_OFFSET to vec ids: copies must clear those too
+    guard("embeddings", (col("vec_id") + graft.sim.Similarity.DUP_OFFSET) -> V_OFF)
+    // nor may order keys reach the k + 100000000 rows q105/q112/q117 add
     require(maxOrderKey + (factor - 1) * K_OFF < 100000000L,
       s"factor $factor shifts o_orderkey past 100000000 (max $maxOrderKey)")
 

@@ -91,11 +91,21 @@ class OsmShapeSpec extends AnyFunSuite {
 
     val elems = spark.read.format("osm").load(f.toString)
     assert(elems.schema == graft.sources.OsmXml.schema)
-    // the source serves exactly the rows the streaming parser emits
-    assert(elems.collect().toSeq ==
-      graft.sources.OsmXml.parse(java.nio.file.Files.newInputStream(f)).toSeq)
-    // 3 nodes + 1 way + 1 relation; node 3's bad lat parses to NULL
-    // (validated later)
+    // 3 nodes + 1 way + 1 relation, all 12 columns in document order;
+    // node 3's bad lat parses to NULL (validated later), lat/lon belong
+    // to nodes, nds to ways, members to relations, tags is never null
+    val t0 = Timestamp.from(java.time.Instant.parse("2020-01-01T00:00:00Z"))
+    assert(elems.collect().toSeq == Seq(
+      Row("node", 1L, 39.0, -76.5, "alice", 10L, "1", 100L, t0,
+        Seq(Row("addr:street", "Main St"), Row("amenity", "cafe"),
+          Row("name with space", "bad")), null, null),
+      Row("node", 2L, 95.0, -76.5, "bob", 11L, "1", 101L, t0, Seq(), null, null),
+      Row("node", 3L, null, -76.6, "eve", 13L, "1", 103L, t0, Seq(), null, null),
+      Row("way", 7L, null, null, "carol", 12L, "2", 102L, t0,
+        Seq(Row("highway", "residential")), Seq(1L, 3L, 2L), null),
+      Row("relation", 9L, null, null, "dan", 14L, "1", 104L, t0,
+        Seq(Row("type", "multipolygon"), Row("addr:street", "Main St")), null,
+        Seq(Row("way", 7L, "outer")))))
     assert(elems.count() == 5)
     // relation round-trips with ordered members (type, ref, role)
     val rel = elems.filter(col("type") === "relation").collect()
@@ -165,10 +175,13 @@ class OsmShapeSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1))).toSeq ==
       Seq((1L, 10L), (7L, 12L)))
 
-    // the V2 path agrees with the streaming parser it wraps
-    val parsed = graft.sources.OsmXml.parse(
-      java.nio.file.Files.newInputStream(dir.resolve("a.osm"))).toSeq
-    assert(df.orderBy("id").collect().toSeq == parsed.sortBy(_.getLong(1)))
+    // every column of both elements
+    def at(s: String) = java.sql.Timestamp.from(java.time.Instant.parse(s))
+    assert(df.orderBy("id").collect().toSeq == Seq(
+      Row("node", 1L, 39.0, -76.5, "alice", 10L, "1", 100L,
+        at("2020-01-01T00:00:00Z"), Seq(Row("amenity", "cafe")), null, null),
+      Row("way", 7L, null, null, "carol", 12L, "2", 102L,
+        at("2020-01-02T03:04:05Z"), Seq(), Seq(1L, 2L), null)))
 
     // type filter is absorbed by the source (no residual Filter node):
     // the parser skips non-matching elements before building rows
@@ -226,7 +239,89 @@ class OsmShapeSpec extends AnyFunSuite {
       .select(posexplode(col("members"))).count() == 2L)
   }
 
-  test("DataSourceV2: COUNT aggregate pushdown serves counts without row materialization") {
+  test("DataSourceV2: every pruned column equals the full read's column") {
+    // the scanner reads only the required attributes and children; each
+    // single-column read (unfiltered, per pushed type, and permissive on
+    // a truncated copy) must equal that column of the unpruned read
+    val xml = """<?xml version="1.0"?>
+      |<osm>
+      |  <bounds minlat="0" minlon="0" maxlat="1" maxlon="1"/>
+      |  <node id="1" lat="oops" lon="2.5" user="a" uid="10" version="1"
+      |        changeset="5" timestamp="2020-01-01T00:00:00Z">
+      |    <tag k="amenity" v="cafe"/><note text="unknown child"/><tag k="only-k"/>
+      |  </node>
+      |  <node id="2"/>
+      |  <way id="7" user="b" uid="x" timestamp="not-a-time">
+      |    <nd ref="1"/><nd ref="bad"/><nd ref="2"/>
+      |    <node id="99" lat="1" lon="1"/>
+      |    <tag k="highway" v="path"/>
+      |  </way>
+      |  <relation id="9" version="3" changeset="6"
+      |            timestamp="1969-12-31T23:59:59.500123Z">
+      |    <member type="way" ref="7" role="outer"/>
+      |    <member type="node" ref="x" role="via"/>
+      |    <tag k="type" v="route"/>
+      |  </relation>
+      |  <node id="3" lat="1" lon="1" uid="11"><tag k="a" v="b"/></node>
+      |</osm>""".stripMargin
+    val dir = graft.sources.TmpWorkspace.fresh("osm_prune_eq")
+    val full = dir.resolve("full"); val cut = dir.resolve("cut")
+    java.nio.file.Files.createDirectories(full)
+    java.nio.file.Files.createDirectories(cut)
+    java.nio.file.Files.write(full.resolve("a.osm"), xml.getBytes("UTF-8"))
+    // truncated inside node 3's tag: nodes 1/2, way 7 and relation 9 survive
+    java.nio.file.Files.write(cut.resolve("a.osm"),
+      xml.substring(0, xml.indexOf("<tag k=\"a\"") + 8).getBytes("UTF-8"))
+    val names = graft.sources.OsmXml.schema.fieldNames
+
+    def check(path: java.nio.file.Path, mode: String, ids: Seq[Long]): Unit = {
+      def df = spark.read.format("osm").option("mode", mode).load(path.toString)
+      val rows = df.collect().toSeq
+      assert(rows.map(_.getLong(1)) == ids) // the nested node 99 is never emitted
+      assert(df.count() == ids.length)
+      for (t <- Seq(None, Some("node"), Some("way"), Some("relation"));
+           (c, i) <- names.zipWithIndex) {
+        val filtered = t.fold(df)(v => df.filter(col("type") === v))
+        val want = rows.filter(r => t.forall(_ == r.getString(0))).map(_.get(i))
+        assert(filtered.select(c).collect().toSeq.map(_.get(0)) == want, s"$c $t $mode")
+      }
+    }
+    check(full, "failfast", Seq(1L, 2L, 7L, 9L, 3L))
+    check(cut, "permissive", Seq(1L, 2L, 7L, 9L))
+
+    val byId = spark.read.format("osm").load(full.toString).collect()
+      .map(r => r.getLong(1) -> r).toMap
+    // bad lat → NULL; missing attributes → NULL; unknown child ignored
+    assert(byId(1L).isNullAt(2) && byId(1L).getDouble(3) == 2.5)
+    assert(byId(1L).getSeq[Row](9) == Seq(Row("amenity", "cafe"), Row("only-k", null)))
+    assert((4 to 8).forall(byId(2L).isNullAt) && byId(2L).getSeq[Row](9).isEmpty)
+    // bad uid and timestamp → NULL; a bad <nd ref> is a NULL element
+    assert(byId(7L).isNullAt(5) && byId(7L).isNullAt(8))
+    assert(byId(7L).getSeq[Any](10) == Seq(1L, null, 2L))
+    assert(byId(9L).getSeq[Row](11) == Seq(Row("way", 7L, "outer"), Row("node", null, "via")))
+  }
+
+  test("osm timestamps: µs exact before the epoch, out-of-range instants read as NULL") {
+    val xml = """<?xml version="1.0"?>
+      |<osm>
+      |  <node id="1" lat="1" lon="1" uid="1" timestamp="2020-01-01T00:00:00Z"/>
+      |  <node id="2" lat="1" lon="1" uid="1" timestamp="+300000-01-01T00:00:00Z"/>
+      |  <node id="3" lat="1" lon="1" uid="1" timestamp="+1000000000-01-01T00:00:00Z"/>
+      |  <node id="4" lat="1" lon="1" uid="1" timestamp="1969-12-31T23:59:59.500123Z"/>
+      |</osm>""".stripMargin
+    val dir = graft.sources.TmpWorkspace.fresh("osm_ts")
+    java.nio.file.Files.write(dir.resolve("a.osm"), xml.getBytes("UTF-8"))
+    val e = spark.read.format("osm").load(dir.toString)
+    val us = e.select(col("id"), org.apache.spark.sql.functions.expr("unix_micros(timestamp)"))
+      .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1))))
+    assert(us.toSeq == Seq(1L -> Some(1577836800000000L), 2L -> None, 3L -> None,
+      4L -> Some(-499877L)))
+    // µs overflow no longer wraps into a valid-looking node
+    assert(OsmShape.shapeNodes(e).collect().map(_.getLong(0)).toSeq == Seq(1L, 4L))
+    assert(OsmShape.corrupt(e).collect().map(_.getLong(1)).toSeq == Seq(2L, 3L))
+  }
+
+  test("DataSourceV2: counts, statistics and limits on the fully pruned scanner") {
     // two files → partial counts per file must sum correctly
     val xml1 = """<?xml version="1.0"?>
       |<osm><node id="1" lat="1" lon="2"/><node id="2" lat="1" lon="2"/>
@@ -239,29 +334,22 @@ class OsmShapeSpec extends AnyFunSuite {
     java.nio.file.Files.write(dir.resolve("b.osm"), xml2.getBytes("UTF-8"))
     val df = spark.read.format("osm").load(dir.toString)
 
-    // grouped: counts match the row path, and the plan carries the
-    // count-only scan (no Row is ever built by the source)
+    // grouped: partial counts of both file partitions sum correctly
     val grouped = df.groupBy("type").count()
     assert(grouped.collect().map(r => r.getString(0) -> r.getLong(1)).toMap ==
       Map("node" -> 3L, "way" -> 1L, "relation" -> 1L))
-    val gPlan = grouped.queryExecution.executedPlan.toString
-    assert(gPlan.contains("OsmCountScan"), s"aggregate not pushed:\n$gPlan")
 
     // ungrouped count
     val total = df.count()
     assert(total == 5L)
 
-    // pushed type filter composes with the pushed count
+    // pushed type filter composes with the count
     val nodes = df.filter(col("type") === "node").groupBy("type").count()
     assert(nodes.collect().map(r => r.getString(0) -> r.getLong(1)).toMap ==
       Map("node" -> 3L))
-    val nPlan = nodes.queryExecution.executedPlan.toString
-    assert(nPlan.contains("OsmCountScan") && nPlan.contains("pushedTypes=Some(Set(node))"),
-      s"filter+aggregate not composed:\n$nPlan")
 
-    // a non-count aggregate declines the pushdown and takes the row path
+    // a non-count aggregate over the same scan
     val sums = df.groupBy("type").agg(org.apache.spark.sql.functions.sum("id"))
-    assert(!sums.queryExecution.executedPlan.toString.contains("OsmCountScan"))
     assert(sums.collect().map(r => r.getString(0) -> r.getLong(1)).toMap ==
       Map("node" -> 6L, "way" -> 7L, "relation" -> 9L))
 
@@ -374,8 +462,8 @@ class OsmShapeSpec extends AnyFunSuite {
     java.nio.file.Files.write(dir.resolve("a.osm"), good.getBytes("UTF-8"))
     java.nio.file.Files.write(dir.resolve("b.osm"), corrupt.getBytes("UTF-8"))
 
-    // default (failfast): the corrupt partition fails the job, on both
-    // the row path and the count-pushdown path
+    // default (failfast): the corrupt partition fails the job, whether
+    // columns are read or (count) every column is pruned
     val ff = spark.read.format("osm").load(dir.toString)
     intercept[org.apache.spark.SparkException] {
       ff.select("id").collect()
@@ -383,8 +471,8 @@ class OsmShapeSpec extends AnyFunSuite {
     intercept[org.apache.spark.SparkException] { ff.count() }
 
     // permissive: every complete element before the corruption point
-    // survives; the in-flight way 12 is dropped by BOTH the row path
-    // and the count-only pass (countTypes counts at element completion)
+    // survives; the in-flight way 12 is dropped, and count() agrees
+    // because it is the same scan with every column pruned
     val pm = spark.read.format("osm")
       .option("mode", "permissive").load(dir.toString)
     val ids = pm.select("id").collect().map(_.getLong(0)).toSet
