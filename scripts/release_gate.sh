@@ -44,8 +44,11 @@ echo "== bench @ sf0.1 =="
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt -batch "runMain graft.Bench" 2>&1 \
   | grep -F '"metric"' | sed 's/^\[info\] //'
 
-# Round-stamped copy of the in-process regression adjudication (Bench
-# re-probes every >2x min-mover vs the previous committed bench.json).
+echo "== bench adjudication vs committed bench.json =="
+sbt -batch "runMain graft.tools.Adjudicate" 2>&1 | tail -1
+
+# Round-stamped copy of the regression adjudication (re-probes of every
+# mover vs the committed bench.json).
 if [ -f bench_adjudication.json ]; then
   cp bench_adjudication.json "BENCH_ADJUDICATION_r${ROUND:-0}.json"
   echo "== bench adjudication =="

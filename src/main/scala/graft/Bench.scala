@@ -1,8 +1,15 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.SparkSession
+
 /** Benchmark main: runs every registered query at SPARK_GRAFT_SF_DIR,
   * prints min-of-reps seconds per query, and makes the per-query numbers
-  * driver-attestable even under the driver's ~4 KB stdout tail capture:
+  * driver-attestable even under the driver's ~2 KB stdout tail capture:
   * the final (always-surviving) line carries a sha256 of the committed
   * bench.json, so the full per-query file is tamper-evident without
   * needing to fit on one stdout line.
@@ -35,32 +42,21 @@ package graft
   * Σ committed-min over remaining queries × a recent host-slowdown
   * factor (actual ok-rep seconds / committed expectation over the last
   * REP_WINDOW entries), and the largest rep count in 1..reps that fits
-  * `budget − adjudication tranche` wins. The factor is windowed so the
-  * schedule UPSHIFTS after a storm passes instead of staying panicked;
-  * at the committed 164 s suite total a 3× host still holds 3+ reps
-  * within a 1500 s budget. Failed reps contribute to neither side of
-  * the factor (a fail-fast 0.05 s rep would deflate it).
-  *
-  * ADJUDICATION TRANCHE (r15 post-mortem: 80 movers, ZERO verdicts —
-  * the main loop alone overran the budget under the storm and every
-  * verdict became `deferred_budget`, so the exact runs that generate
-  * movers were the ones guaranteed to adjudicate none of them). A
-  * reserved tranche (~120 s) is carved off the top: the repair pass may
-  * only spend to `budget − tranche`, and adjudication runs
-  * UNCONDITIONALLY — calibration probe first (a contended host defers
-  * everything cheaply as `deferred_contended_host`), then movers in
-  * descending normalized-Δ order with EARLY-EXIT exoneration (one probe
-  * rep under the threshold settles `contention` immediately, so a
-  * storm's false movers cost ~1 rep each). bench_adjudication.json is
-  * persisted incrementally after every verdict, so even a harness kill
-  * mid-probe leaves the verdicts reached so far on disk. No verdict is
-  * ever `deferred_budget`.
+  * the budget wins. The factor is windowed so the schedule UPSHIFTS
+  * after a storm passes instead of staying panicked; at the committed
+  * 164 s suite total a 3× host still holds 3+ reps within a 1500 s
+  * budget. Failed reps contribute to neither side of the factor (a
+  * fail-fast 0.05 s rep would deflate it). A baseline taken at another
+  * SF or core count (see `refusal`) derives nothing.
   *
   * HOST EVIDENCE: every PARTIAL_EVERY queries the loop samples 1-min
   * load, /proc/stat steal ticks, and cgroup cpu.stat throttling
   * counters; the per-chunk deltas land in bench.json ("host_samples")
   * so a contention storm is data in the artifact, not an inference
   * from ratios.
+  *
+  * Regression adjudication against the committed baseline is a separate
+  * builder-side main, `graft.tools.Adjudicate`, run after this one.
   */
 object Bench {
 
@@ -68,13 +64,8 @@ object Bench {
     * CPU-bound query whose min is a stable fingerprint of host speed.
     * Its suite min is stamped into bench.json ("calibration") — only
     * when it received the full requested rep count, so a downshifted
-    * era can never inflate the committed floor — and the adjudicator
-    * refuses to re-probe movers when a fresh measurement of it exceeds
-    * 1.5× the committed floor: a re-probe taken during the same
-    * contention that produced the mover is evidence of nothing (r14:
-    * 8 "real" verdicts, all contention on idle re-probe). */
+    * era can never inflate the committed floor. */
   val CALIB_Q = "q229_lsh_sweep"
-  val CALIB_MAX_RATIO = 1.5
 
   /** Sliding window (completed entries) for the host-slowdown factor
     * the rep schedule uses. Wide enough to smooth heterogeneous query
@@ -82,63 +73,79 @@ object Bench {
     * within ~2 chunks. */
   val REP_WINDOW = 40
 
-  /** (sf, per-query min, calibration floor, provenance) of the baseline
-    * this run adjudicates against. Prefers the COMMITTED
-    * `HEAD:bench.json` (via `git show`) so a second Bench run in the
-    * same checkout does not adjudicate against its own
-    * freshly-overwritten numbers, and a dirty working-tree bench.json
-    * never silently becomes the baseline; falls back to the
-    * working-tree file only when git is unavailable. sf is carried so a
-    * local dev run at a different SF never adjudicates against
-    * incomparable numbers. */
-  private def readPrevBench()
-      : (Option[String], Map[String, Double], Option[Double], String) = {
-    def parse(bytes: Array[Byte])
-        : (Option[String], Map[String, Double], Option[Double]) = {
-      val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(bytes)
-      val sf = Option(root.get("sf")).map(_.asText())
-      val calib = Option(root.get("calibration"))
-        .flatMap(c => Option(c.get("min_sec"))).map(_.asDouble())
-      val q = root.get("queries")
-      if (q == null) (sf, Map.empty, calib)
-      else {
-        val b = Map.newBuilder[String, Double]
-        val it = q.fields()
-        while (it.hasNext) {
-          val e = it.next(); b += e.getKey -> e.getValue.asDouble()
-        }
-        (sf, b.result(), calib)
-      }
-    }
-    val fromGit: Option[(Option[String], Map[String, Double], Option[Double], String)] =
-      try {
-        val p = new ProcessBuilder("git", "show", "HEAD:bench.json").start()
-        val bytes = p.getInputStream.readAllBytes()
-        if (p.waitFor() == 0 && bytes.nonEmpty) {
-          val (sf, m, c) = parse(bytes)
-          Some((sf, m, c, "git:HEAD"))
-        } else None
-      } catch { case _: Throwable => None }
-    fromGit.getOrElse {
-      try {
-        val f = new java.io.File("bench.json")
-        if (!f.exists()) (None, Map.empty, None, "none")
-        else {
-          val (sf, m, c) = parse(java.nio.file.Files.readAllBytes(f.toPath))
-          (sf, m, c, "worktree")
-        }
-      } catch { case _: Throwable => (None, Map.empty, None, "none") }
-    }
+  /** The fields of a bench.json that a later run compares against. */
+  case class Record(sf: Option[String], cpus: Option[Int],
+                    mins: Map[String, Double], calib: Option[Double])
+
+  def parseRecord(bytes: Array[Byte]): Record = {
+    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(bytes)
+    def field(k: String) = Option(root.get(k))
+    Record(
+      field("sf").map(_.asText()),
+      field("cpus").map(_.asInt()),
+      field("queries").toSeq
+        .flatMap(_.fields().asScala.map(e => e.getKey -> e.getValue.asDouble()))
+        .toMap,
+      field("calibration").flatMap(c => Option(c.get("min_sec"))).map(_.asDouble()))
   }
+
+  /** The COMMITTED `HEAD:bench.json` (via `git show`), so a run never
+    * takes its own freshly-overwritten numbers, or a dirty working-tree
+    * file, as its baseline. */
+  def committedRecord(): Option[Record] =
+    try {
+      val p = new ProcessBuilder("git", "show", "HEAD:bench.json").start()
+      val bytes = p.getInputStream.readAllBytes()
+      if (p.waitFor() == 0 && bytes.nonEmpty) Some(parseRecord(bytes)) else None
+    } catch { case _: Throwable => None }
+
+  /** Why `base` cannot serve as the baseline of a run at (sf, cpus), or
+    * None when it can. Timings at another SF or core count are not
+    * comparable (r17: an 8-core run was adjudicated against 32-core
+    * floors), and a baseline that does not record its core count is
+    * refused like one taken at another. */
+  def refusal(base: Option[Record], sf: String, cpus: Int): Option[String] =
+    base match {
+      case None => Some("no committed bench.json")
+      case Some(b) if !b.sf.contains(sf) =>
+        Some(s"baseline sf ${b.sf.getOrElse("missing")} != run sf $sf")
+      case Some(b) if !b.cpus.contains(cpus) =>
+        Some(s"baseline cpus ${b.cpus.getOrElse("missing")} != run cpus $cpus")
+      case _ => None
+    }
 
   // 3-decimal rounding keeps per-query entries ~25 bytes each so the
   // chunked attestation lines below stay far under the tail window.
-  private def r3(v: Double): String = BigDecimal(v)
+  def r3(v: Double): String = BigDecimal(v)
     .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
 
-  private def sha256(bytes: Array[Byte]): String =
-    java.security.MessageDigest.getInstance("SHA-256")
-      .digest(bytes).map("%02x".format(_)).mkString
+  def medianOf(ts: Seq[Double]): Double =
+    // Upper median for odd sizes; mean of the two middle values for even
+    // sizes (ts(size/2) alone would report the max at reps=2). `ts` sorted.
+    if (ts.size % 2 == 1) ts(ts.size / 2)
+    else (ts(ts.size / 2 - 1) + ts(ts.size / 2)) / 2.0
+
+  /** Seconds for one `.count()` of query `name`, and what it threw. A
+    * failed rep must SURFACE, not pass as a fail-fast 0.05 s timing that
+    * makes a broken engine look faster than a working one. */
+  def timeRep(spark: SparkSession, sfDir: String, name: String)
+      : (Double, Option[Throwable]) = {
+    val t0 = System.nanoTime()
+    val err = try { SparkEntry.queries(name)(spark, sfDir).count(); None }
+              catch { case e: Throwable => Some(e) }
+    ((System.nanoTime() - t0) / 1e9, err)
+  }
+
+  /** Session warm-up before anything is timed: JIT/codegen/parquet-reader
+    * first use, the one-time setup hooks (e.g. q134's bucketed-table DDL,
+    * so rep 1 is not charged for materialization), and one untimed
+    * full-query execution for residual codegen/JIT cost. */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    spark.read.parquet(s"$sfDir/region.parquet")
+      .groupBy("r_name").count().collect()
+    SparkEntry.benchSetup(spark, sfDir)
+    timeRep(spark, sfDir, SparkEntry.queries.keys.min)
+  }
 
   /** (1-min load, /proc/stat steal ticks, cgroup nr_throttled, cgroup
     * throttled_usec). Missing counters read as -1 (bare metal, cgroup
@@ -174,9 +181,26 @@ object Bench {
     (load, steal, nThr, usThr)
   }
 
+  /** Host counters as JSON samples, each holding the deltas since the
+    * previous sample (null where a counter is absent). */
+  final class HostSampler(startNanos: Long) {
+    def elapsedS: Double = (System.nanoTime() - startNanos) / 1e9
+    private var last = readHostCounters()
+    private var lastElapsed = elapsedS
+
+    def sample(atIndex: Int, atQuery: String): String = {
+      val cur = readHostCounters()
+      val now = elapsedS
+      def d(a: Long, b: Long): String = if (a < 0 || b < 0) "null" else (b - a).toString
+      val s = s"""{"at_index":$atIndex,"at_query":"$atQuery","elapsed_sec":${r3(now)},"window_sec":${r3(now - lastElapsed)},"load_1m":${r3(cur._1)},"steal_ticks_d":${d(last._2, cur._2)},"nr_throttled_d":${d(last._3, cur._3)},"throttled_usec_d":${d(last._4, cur._4)}}"""
+      last = cur
+      lastElapsed = now
+      s
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Per-query time = min of REPS executions (steady state). Single-pass
     // timings on this host swing 2-4× run-to-run (constant ~2.0 background
     // load); the min is the reproducible per-query cost. Reported
@@ -188,38 +212,24 @@ object Bench {
     // inside it. 1500 s default ≈ 0.8× the shortest harness window the
     // suite has been killed under.
     val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "1500").toDouble
-    // Reserved adjudication tranche: the repair pass may not spend into
-    // it, so calibration + mover probes always have wall-clock left even
-    // when the main loop overran (the r15 failure: 80 movers, 0 verdicts).
-    val trancheS = math.min(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_ADJ_TRANCHE_S", "120").toDouble,
-      budgetS * 0.25)
     val startWall = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - startWall) / 1e9
-    val spark = SparkEntry.localSession(cpus).getOrCreate()
+    val spark = SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // JIT/codegen/parquet-reader warmup so timings measure the queries,
-    // not first-use initialization of the session
-    spark.read.parquet(s"$sfDir/region.parquet")
-      .groupBy("r_name").count().collect()
-    // One-time setup hooks (e.g. q134's bucketed-table DDL) run OUTSIDE
-    // the timed region so rep 1 is not charged for materialization.
-    SparkEntry.benchSetup(spark, sfDir)
-    val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
-    // one untimed full-query execution absorbs residual codegen/JIT cost
-    sorted.headOption.foreach { case (_, fn) =>
-      try fn(spark, sfDir).count() catch { case _: Throwable => () }
-    }
+    val cpus = spark.sparkContext.defaultParallelism
+    warmUp(spark, sfDir)
+    val sorted = SparkEntry.queries.keys.toSeq.sorted
 
     // ---- kill-proof state: partial artifact + last summary line ----
-    // The shutdown hook re-prints the newest partial summary on SIGTERM
-    // (the harness timeout signal), so the stdout tail always ends in a
+    // The shutdown hook re-prints the newest summary on SIGTERM (the
+    // harness timeout signal), so the stdout tail always ends in a
     // parsable line even when the periodic print was many queries ago.
-    @volatile var latestPartialLine: String = null
+    @volatile var summary: String = null
     @volatile var finished = false
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      if (!finished && latestPartialLine != null) {
-        println(latestPartialLine)
+      if (!finished && summary != null) {
+        println(summary)
         System.out.flush()
       }
     }))
@@ -228,28 +238,29 @@ object Bench {
     // Keep min (the graded steady-state number) AND median per query:
     // min-vs-median spread is the host-contention fingerprint, so a
     // future regression can be adjudicated from the committed artifact
-    // alone (median >> min ⇒ noisy reps, not a code change) without a
-    // separate idle-probe session.
-    // A failed rep must SURFACE, not time out at 0.05 s: a query that
-    // throws (analysis error, missing table) would otherwise contribute a
-    // fail-fast "timing" that makes a broken engine look faster than a
-    // working one. Failures are counted per query, failed queries are
-    // excluded from the graded total, and an "errors" map goes in the JSON.
-    // Baseline read up-front: the rep schedule, the repair pass, and the
-    // adjudicator all consume it (git:HEAD preferred, so this run's own
-    // writes to bench.json never become their own baseline).
-    val (prevSf, prevMins, prevCalib, baselineProvenance) = readPrevBench()
-    val sfComparable = prevSf.contains(sfDir)
+    // alone (median >> min ⇒ noisy reps, not a code change).
+    // Failures are counted per query, failed queries are excluded from
+    // the graded total, and an "errors" map goes in the JSON.
+    // Baseline: git:HEAD preferred (this run's own writes to bench.json
+    // never become their own baseline), the working-tree file only when
+    // git has none. Only a same-SF, same-cpus baseline is used at all.
+    val baseline = committedRecord().orElse(
+      try Some(parseRecord(Files.readAllBytes(Paths.get("bench.json"))))
+      catch { case _: Throwable => None })
+    val comparable = refusal(baseline, sfDir, cpus).isEmpty
+    val prevMins = if (comparable) baseline.get.mins else Map.empty[String, Double]
     var curReps = reps
     var repairAdded = 0
     val repairFailures = scala.collection.mutable.Map.empty[String, Int]
     val schedule = scala.collection.mutable.ArrayBuffer.empty[String]
+    // (name, sorted rep seconds, failed reps, reps used)
     val acc = scala.collection.mutable.ArrayBuffer
       .empty[(String, Seq[Double], Int, Int)]
+    def okRows = acc.filter(_._3 == 0).toSeq
     // (committed-expected seconds, actual ok-rep seconds) per completed
     // entry with a baseline — the rep schedule's host-factor basis.
     val factorBasis = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
-    // Fallback projection basis when no same-SF baseline exists:
+    // Fallback projection basis when no comparable baseline exists:
     // SUCCESSFUL rep durations only (a fail-fast rep deflates per-rep
     // cost and delays a needed downshift).
     var okRepSeconds = 0.0
@@ -261,56 +272,32 @@ object Bench {
     val prevMedian =
       if (prevMins.isEmpty) 0.5
       else prevMins.values.toSeq.sorted.apply(prevMins.size / 2)
-    val committedAt: Array[Double] =
-      sorted.map { case (n, _) => prevMins.getOrElse(n, prevMedian) }.toArray
-    val committedSuffix: Array[Double] = {
-      val a = new Array[Double](committedAt.length + 1)
-      var i = committedAt.length - 1
-      while (i >= 0) { a(i) = a(i + 1) + committedAt(i); i -= 1 }
-      a
-    }
+    val committedSuffix: Array[Double] =
+      sorted.map(prevMins.getOrElse(_, prevMedian)).scanRight(0.0)(_ + _).toArray
 
     // ---- host evidence: load / steal / cgroup throttling per chunk ----
+    val host = new HostSampler(startWall)
     val hostSamples = scala.collection.mutable.ArrayBuffer.empty[String]
-    var lastHost = readHostCounters()
-    var lastHostElapsed = 0.0
-    def sampleHost(atIndex: Int, atQuery: String): String = {
-      val cur = readHostCounters()
-      def d(a: Long, b: Long): String = if (a < 0 || b < 0) "null" else (b - a).toString
-      val s = s"""{"at_index":$atIndex,"at_query":"$atQuery","elapsed_sec":${r3(elapsedS)},"window_sec":${r3(elapsedS - lastHostElapsed)},"load_1m":${r3(cur._1)},"steal_ticks_d":${d(lastHost._2, cur._2)},"nr_throttled_d":${d(lastHost._3, cur._3)},"throttled_usec_d":${d(lastHost._4, cur._4)}}"""
-      lastHost = cur
-      lastHostElapsed = elapsedS
-      hostSamples += s
-      s
-    }
 
-    def fmtMap(m: Seq[(String, Double)]): String = m.sortBy(_._1)
-      .map { case (k, v) => s"\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
-    def medianOf(ts: Seq[Double]): Double =
-      // Upper median for odd sizes; mean of the two middle reps for even
-      // sizes (ts(size/2) alone would report the max at reps=2).
-      if (ts.size % 2 == 1) ts(ts.size / 2)
-      else (ts(ts.size / 2 - 1) + ts(ts.size / 2)) / 2.0
+    def fmtMap(m: Seq[(String, Any)]): String = m.sortBy(_._1)
+      .map { case (k, v: Double) => s"\"$k\":${r3(v)}"; case (k, v) => s"\"$k\":$v" }
+      .mkString("{", ",", "}")
 
     /** The full per-query JSON for everything timed so far. `partial`
       * adds the in-flight markers a consumer needs to know the artifact
       * is a prefix, not a finished suite. */
     def buildJson(partial: Boolean): String = {
-      val okRows = acc.filter(_._3 == 0)
-      val entries = fmtMap(okRows.map { case (n, ts, _, _) => n -> ts.min }.toSeq)
-      val meds = fmtMap(okRows.map { case (n, ts, _, _) => n -> medianOf(ts) }.toSeq)
-      val errJson = acc.collect { case (n, _, f, _) if f > 0 => n -> f }
-        .sortBy(_._1)
-        .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-      val repairErrJson = repairFailures.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-      val total = okRows.map(_._2.min).sum
+      val ok = okRows
+      val entries = fmtMap(ok.map { case (n, ts, _, _) => n -> ts.min })
+      val meds = fmtMap(ok.map { case (n, ts, _, _) => n -> medianOf(ts) })
+      val errJson = fmtMap(acc.collect { case (n, _, f, _) if f > 0 => n -> f }.toSeq)
+      val total = ok.map(_._2.min).sum
       val sched = schedule.mkString("[", ",", "]")
       val minUsed = if (acc.isEmpty) reps else acc.map(_._4).min
       // The calibration floor is a committed artifact future rounds gate
       // on; a min taken in a downshifted era (< the requested rep count)
       // is not floor-quality and is withheld rather than stamped inflated.
-      val calib = okRows.collectFirst {
+      val calib = ok.collectFirst {
         case (CALIB_Q, ts, _, used) if used >= reps =>
           s""","calibration":{"query":"$CALIB_Q","min_sec":${r3(ts.min)},"median_sec":${r3(medianOf(ts))},"reps":$used}"""
       }.getOrElse("")
@@ -320,37 +307,33 @@ object Bench {
       val partialPart =
         if (partial) s""","partial":true,"completed":${acc.size},"n_total":${sorted.size}"""
         else ""
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$entries,"queries_median":$meds,"errors":$errJson,"repair_failures":$repairErrJson,"sf":"$sfDir","reps":$reps,"reps_min_used":$minUsed,"reps_schedule":$sched,"repair_reps_added":$repairAdded,"budget_sec":${r3(budgetS)},"adj_tranche_sec":${r3(trancheS)},"wall_sec":${r3(elapsedS)},"host_load_1m":${r3(load)},"host_samples":$hostJson,"generated_at_epoch_s":${System.currentTimeMillis() / 1000}$calib,"timing":"min-of-reps"$partialPart}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$entries,"queries_median":$meds,"errors":$errJson,"repair_failures":${fmtMap(repairFailures.toSeq)},"sf":"$sfDir","cpus":$cpus,"reps":$reps,"reps_min_used":$minUsed,"reps_schedule":$sched,"repair_reps_added":$repairAdded,"budget_sec":${r3(budgetS)},"wall_sec":${r3(elapsedS)},"host_load_1m":${r3(load)},"host_samples":$hostJson,"generated_at_epoch_s":${System.currentTimeMillis() / 1000}$calib,"timing":"min-of-reps"$partialPart}"""
     }
 
-    /** Rewrite bench.json (cheap: ~10 KB) and refresh the summary line
-      * the shutdown hook would print. Returns the artifact sha. */
-    def persist(partial: Boolean): String = {
-      val bytes = (buildJson(partial) + "\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      java.nio.file.Files.write(java.nio.file.Paths.get("bench.json"), bytes)
-      val sha = sha256(bytes)
-      val okRows = acc.filter(_._3 == 0)
-      val total = okRows.map(_._2.min).sum
-      val nErr = acc.size - okRows.size
+    /** Rewrite bench.json (cheap: ~10 KB) and the summary line that
+      * attests it — the one place that line is built. */
+    def persist(partial: Boolean): Unit = {
+      val bytes = (buildJson(partial) + "\n").getBytes(UTF_8)
+      Files.write(Paths.get("bench.json"), bytes)
+      val sha = java.security.MessageDigest.getInstance("SHA-256")
+        .digest(bytes).map("%02x".format(_)).mkString
+      val ok = okRows
       val partialPart =
         if (partial) s""","partial":true,"completed":${acc.size},"n_total":${sorted.size},"reps_current":$curReps,"elapsed_sec":${r3(elapsedS)}"""
         else ""
-      latestPartialLine =
-        s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${okRows.size},"n_errors":$nErr,"sf":"$sfDir","reps":$reps,"timing":"min-of-reps","queries_file":"bench.json","queries_sha256":"$sha"$partialPart}"""
-      sha
+      summary =
+        s"""{"metric":"total","value":${r3(ok.map(_._2.min).sum)},"unit":"sec","n_queries":${ok.size},"n_errors":${acc.size - ok.size},"sf":"$sfDir","cpus":$cpus,"reps":$reps,"timing":"min-of-reps","queries_file":"bench.json","queries_sha256":"$sha"$partialPart}"""
     }
 
     /** Budget-derived rep count for the query at `idx`: the largest
       * r in 1..reps whose projected finish (elapsed + committed
-      * remaining × recent host factor × r) fits the main-loop budget
-      * (total budget minus the adjudication tranche). Windowed factor ⇒
-      * the schedule recovers (upshifts) when a storm passes. Falls back
-      * to the observed ok-rep rate when no same-SF baseline exists. */
+      * remaining × recent host factor × r) fits the budget. Windowed
+      * factor ⇒ the schedule recovers (upshifts) when a storm passes.
+      * Falls back to the observed ok-rep rate when no comparable
+      * baseline exists. */
     def repsFor(idx: Int): Int = {
-      val mainBudget = budgetS - trancheS
       val remaining =
-        if (sfComparable) committedSuffix(idx)
+        if (comparable) committedSuffix(idx)
         else if (okRepsExecuted > 0)
           okRepSeconds / okRepsExecuted * (sorted.size - idx)
         else 0.0
@@ -359,21 +342,20 @@ object Bench {
         val recent = factorBasis.takeRight(REP_WINDOW)
         val exp = recent.map(_._1).sum
         val act = recent.map(_._2).sum
-        if (!sfComparable) 1.0 // remaining is already in observed units
-        else if (exp < 2.0) 1.0
+        if (exp < 2.0) 1.0 // no basis, or remaining is in observed units
         else math.min(10.0, math.max(0.7, act / exp))
       }
       var r = reps
-      while (r > 1 && elapsedS + remaining * factor * r > mainBudget) r -= 1
+      while (r > 1 && elapsedS + remaining * factor * r > budgetS) r -= 1
       // Hysteresis on upshift: moving back up needs 10% headroom beyond
       // "barely fits", so the schedule doesn't flap 3↔4 every query at
       // the budget boundary (each flap is a schedule entry).
       if (r > curReps &&
-          elapsedS + remaining * factor * r > mainBudget * 0.9) curReps
+          elapsedS + remaining * factor * r > budgetS * 0.9) curReps
       else r
     }
 
-    sorted.zipWithIndex.foreach { case ((name, fn), idx) =>
+    sorted.zipWithIndex.foreach { case (name, idx) =>
       val want = repsFor(idx)
       if (want != curReps) {
         schedule += s"""{"at_query":"$name","at_index":$idx,"from":$curReps,"to":$want,"elapsed_sec":${r3(elapsedS)}}"""
@@ -381,44 +363,32 @@ object Bench {
           s"(elapsed ${r3(elapsedS)}s of ${r3(budgetS)}s budget)")
         curReps = want
       }
-      val useReps = curReps
-      var failures = 0
-      var okSecs = 0.0
-      val times = (1 to useReps).map { _ =>
-        val t0 = System.nanoTime()
-        val okRep = try { fn(spark, sfDir).count(); true }
-        catch { case e: Throwable =>
-          failures += 1
-          // e.toString is never empty (class name at minimum), so the
-          // error-surfacing path can't itself throw on a blank message.
-          val msg = e.toString.linesIterator.nextOption()
-            .getOrElse(e.getClass.getName)
-          System.err.println(s"[bench] $name failed: $msg")
-          false
-        }
-        val t = (System.nanoTime() - t0) / 1e9
-        if (okRep) okSecs += t
-        t
-      }.sorted
-      val okReps = useReps - failures
-      okRepsExecuted += okReps
-      okRepSeconds += okSecs
-      if (sfComparable && failures == 0)
-        prevMins.get(name).foreach(p => factorBasis += ((p * okReps, okSecs)))
-      acc += ((name, times, failures, useReps))
+      val runs = Seq.fill(curReps)(timeRep(spark, sfDir, name))
+      runs.foreach { case (_, err) => err.foreach { e =>
+        // e.toString is never empty (class name at minimum), so the
+        // error-surfacing path can't itself throw on a blank message.
+        System.err.println(s"[bench] $name failed: " +
+          e.toString.linesIterator.nextOption().getOrElse(e.getClass.getName))
+      } }
+      val okSecs = runs.collect { case (t, None) => t }
+      val failures = runs.size - okSecs.size
+      okRepsExecuted += okSecs.size
+      okRepSeconds += okSecs.sum
+      if (failures == 0)
+        prevMins.get(name).foreach(p => factorBasis += ((p * okSecs.size, okSecs.sum)))
+      acc += ((name, runs.map(_._1).sorted, failures, curReps))
       persist(partial = true)
       if ((idx + 1) % PARTIAL_EVERY == 0 && idx + 1 < sorted.size) {
-        sampleHost(idx, name)
+        hostSamples += host.sample(idx, name)
         persist(partial = true) // pick up the fresh host sample
-        println(latestPartialLine)
+        println(summary)
         System.out.flush()
       }
     }
-    sampleHost(sorted.size - 1, "main_loop_end")
+    hostSamples += host.sample(sorted.size - 1, "main_loop_end")
     // Every query is timed: the suite is complete from here on. Persist
-    // the artifact as FINAL now — a kill during the repair pass or the
-    // adjudication probes must never leave a fully-covered suite marked
-    // "partial":true on disk.
+    // the artifact as FINAL now — a kill during the repair pass must
+    // never leave a fully-covered suite marked "partial":true on disk.
     persist(partial = false)
 
     // ---- Repair pass: spend LEFTOVER budget restoring rep quality ----
@@ -427,14 +397,12 @@ object Bench {
     // the r15 driver-sim: benchSetup took 169 s in a contended window,
     // the projection downshifted 5→1 within three queries, and the
     // finished artifact carried 1-rep minima 6–12× the idle baseline
-    // with 700 s of budget UNSPENT). While wall-clock remains — capped
-    // at budget − tranche, so the adjudicator's reserve is untouchable —
-    // re-run single reps against the entries farthest below the
-    // requested rep count, folding each timing into the entry's sorted
-    // rep list. Mins are monotone under repair: a second contention
-    // window stops improvement, never corrupts.
-    val repairStop = budgetS - trancheS
-    if (elapsedS < repairStop) {
+    // with 700 s of budget UNSPENT). While wall-clock remains, re-run
+    // single reps against the entries farthest below the requested rep
+    // count, folding each timing into the entry's sorted rep list. Mins
+    // are monotone under repair: a second contention window stops
+    // improvement, never corrupts.
+    if (elapsedS < budgetS) {
       // Priority 0: CALIB_Q up to the full rep count — its min becomes
       // the committed calibration floor, and the floor stamp is withheld
       // unless it got all its reps, so it must be topped up FIRST while
@@ -445,12 +413,9 @@ object Bench {
       // failure shape was full-rep minima taken entirely inside a
       // contention window (q239: five reps, min 14.6 s vs 0.29 s
       // baseline); with budget left those entries deserve more chances
-      // on the recovered host. Ratio-less entries (new queries, SF
-      // mismatch) never get bonus reps — there is no evidence they
-      // need them.
-      // Ratios are only meaningful against a SAME-SF baseline: a dev run
-      // at another SF would otherwise see phantom >2× ratios everywhere
-      // and burn the whole repair budget on bonus reps.
+      // on the recovered host. Ratio-less entries (new queries, no
+      // comparable baseline) never get bonus reps — there is no
+      // evidence they need them.
       def worstIdx(): Int = {
         var best = -1
         var bestUsed = Int.MaxValue
@@ -462,10 +427,8 @@ object Bench {
           val (n, ts, f, used) = acc(i)
           if (f == 0) {
             if (n == CALIB_Q && used < reps) return i
-            val ratio =
-              if (!sfComparable) 1.0
-              else prevMins.get(n).filter(_ > 0.05)
-                .map(ts.min / _).getOrElse(1.0)
+            val ratio = prevMins.get(n).filter(_ > 0.05)
+              .map(ts.min / _).getOrElse(1.0)
             if (used < reps) {
               if (used < bestUsed || (used == bestUsed && ratio > bestRatio)) {
                 best = i; bestUsed = used; bestRatio = ratio
@@ -479,22 +442,18 @@ object Bench {
         if (best >= 0) best else bonus
       }
       var i = worstIdx()
-      while (i >= 0 && elapsedS < repairStop) {
+      while (i >= 0 && elapsedS < budgetS) {
         val (n, ts, f, used) = acc(i)
-        val fn = SparkEntry.queries(n)
-        val t0 = System.nanoTime()
-        val okRep = try { fn(spark, sfDir).count(); true }
-                    catch { case _: Throwable => false }
-        val t = (System.nanoTime() - t0) / 1e9
         // a failed repair rep still consumes the slot — repeated failure
         // must not spin the loop; the entry keeps its loop-pass timings,
         // and the failure is COUNTED (repair_failures in the artifact)
         // so post-loop instability leaves a trace.
-        acc(i) = if (okRep) (n, (ts :+ t).sorted, f, used + 1)
-                 else {
-                   repairFailures(n) = repairFailures.getOrElse(n, 0) + 1
-                   (n, ts, f, used + 1)
-                 }
+        acc(i) = timeRep(spark, sfDir, n) match {
+          case (t, None) => (n, (ts :+ t).sorted, f, used + 1)
+          case _ =>
+            repairFailures(n) = repairFailures.getOrElse(n, 0) + 1
+            (n, ts, f, used + 1)
+        }
         repairAdded += 1
         if (repairAdded % 50 == 0) persist(partial = false)
         i = worstIdx()
@@ -503,224 +462,25 @@ object Bench {
         System.err.println(s"[bench] repair pass added $repairAdded reps " +
           s"(elapsed ${r3(elapsedS)}s of ${r3(budgetS)}s budget)")
       }
-      sampleHost(sorted.size - 1, "repair_end")
+      hostSamples += host.sample(sorted.size - 1, "repair_end")
       persist(partial = false)
     }
-
-    val allTimes = acc.toSeq.map { case (n, ts, f, _) => (n, ts, f) }
-    val errors = allTimes.collect { case (n, _, f) if f > 0 => n -> f }.toMap
-    val ok = allTimes.filter(_._3 == 0)
-    val results = ok.map { case (n, ts, _) => n -> ts.min }.toMap
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    val json = buildJson(partial = false)
-    // Persist the FINAL artifact before the adjudication probe pass —
-    // probes can run for minutes and a kill there must not lose the
-    // suite (only the not-yet-persisted tail of bench_adjudication.json
-    // would be lost, and that file is persisted incrementally below).
-    val jsonBytes = (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    java.nio.file.Files.write(java.nio.file.Paths.get("bench.json"), jsonBytes)
-    val sha = sha256(jsonBytes)
-    latestPartialLine =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"n_errors":${errors.size},"sf":"$sfDir","reps":$reps,"timing":"min-of-reps","queries_file":"bench.json","queries_sha256":"$sha"}"""
-    // ---- Automated regression adjudication (pre-overwrite baseline) ----
-    // Four rounds (r4/r5/r10/r11) ended with judge or builder hand-probing
-    // >2× "regressions" that were driver-host contention, not code. This
-    // closes that loop in-process: any query whose min regressed >2× vs
-    // the PREVIOUS committed bench.json gets a dedicated re-probe right
-    // after the suite (no other queries interleaving — the isolation a
-    // manual per-query probe gives), and both numbers land in
-    // bench_adjudication.json so the verdict needs zero manual probes.
-    // The pass runs UNCONDITIONALLY inside its reserved tranche (r15: the
-    // main loop overran the whole budget and 80 movers got zero verdicts
-    // under the old `elapsedS > budgetS` defer).
-    // (prevSf/prevMins/prevCalib were read before the main loop.)
-    // ---- Host calibration (r13 judge finding: 10/10 "real" verdicts were
-    // false — the committed baseline came from a faster host era, so every
-    // comparison carried a hidden host factor). The suite itself is the
-    // calibration instrument: the MEDIAN per-query min ratio vs the
-    // baseline over all common queries is a robust host-speed estimate
-    // (a handful of genuinely changed queries among ~300 cannot move a
-    // median), costs zero extra timing, and is recorded in the artifact
-    // so a verdict can be re-derived. All mover selection and verdicts
-    // below compare host-NORMALIZED times (graded / hostFactor) against
-    // the baseline. Clamped to [0.5, 3.0]: outside that the baseline is
-    // not comparable at all and raw ratios would mislead either way.
-    val ratios =
-      if (!sfComparable) Seq.empty[Double]
-      else ok.flatMap { case (n, ts, _) =>
-        prevMins.get(n).filter(_ > 0.05).map(p => ts.min / p) }.sorted
-    val hostFactor =
-      if (ratios.size < 20) 1.0
-      else math.min(3.0, math.max(0.5,
-        if (ratios.size % 2 == 1) ratios(ratios.size / 2)
-        else (ratios(ratios.size / 2 - 1) + ratios(ratios.size / 2)) / 2.0))
-    def norm(t: Double): Double = t / hostFactor
-    val adjMovers =
-      if (!sfComparable) Seq.empty
-      else ok.collect { case (n, ts, _) if prevMins.get(n).exists(p =>
-        norm(ts.min) > 2 * p && norm(ts.min) - p > 0.15) =>
-        (n, prevMins(n), ts.min) }
-    // Absolute-drift panel: the 2× ratio gate misses slow creep on cheap
-    // queries (r12: seven 1.3–1.9× movers, all ≤0.5 s absolute, cleared by
-    // hand) AND on expensive ones (r13: q86's 1.20× / +0.86 s slipped
-    // under the old 1.25× floor). Queries with prev ≥ 1 s skip the ratio
-    // floor entirely — for them any normalized Δ > 0.15 s is probe-worthy;
-    // the top-N-by-Δ cap keeps the panel bounded. Probe the top-N
-    // regressions by Δseconds that the ratio gate did NOT already select,
-    // so the artifact clears them without a judge session.
-    val driftN = 8
-    val ratioSelected = adjMovers.map(_._1).toSet
-    val driftMovers =
-      if (!sfComparable) Seq.empty
-      else ok.collect { case (n, ts, _) if !ratioSelected(n) &&
-        prevMins.get(n).exists(p => norm(ts.min) - p > 0.15 &&
-          (norm(ts.min) > 1.25 * p || p >= 1.0)) =>
-        (n, prevMins(n), ts.min)
-      }.sortBy { case (_, p, g) => p - norm(g) }.take(driftN)
-    // ---- Calibration gate on the re-probe itself (r14 post-mortem: 8
-    // "real" verdicts, every one exonerated by idle probes — the
-    // re-probes ran during the SAME contended window as the graded reps,
-    // so they confirmed nothing). It runs FIRST, before any mover probe:
-    // re-measure the calibration query min-of-3 against the committed
-    // floor; if the host is >1.5× its recorded idle speed, every verdict
-    // becomes "deferred_contended_host" — an explicit "no evidence either
-    // way" the next session re-probes idle, instead of a false "real" —
-    // at the cost of three calibration reps, not 80 mover probes.
-    val adjStart = elapsedS
-    val hostAtAdj = sampleHost(sorted.size - 1, "adjudication_start")
-    val anyMovers = adjMovers.nonEmpty || driftMovers.nonEmpty
-    val calibFloor = prevCalib.orElse(prevMins.get(CALIB_Q))
-    val (calibProbe, calibRatio, deferReason) =
-      if (!anyMovers) (Double.NaN, Double.NaN, "")
-      else calibFloor match {
-        case None => (Double.NaN, Double.NaN, "")
-        case Some(floor) =>
-          val fn = SparkEntry.queries(CALIB_Q)
-          val ts = (1 to 3).flatMap { _ =>
-            val t0 = System.nanoTime()
-            val okRep = try { fn(spark, sfDir).count(); true }
-                        catch { case _: Throwable => false }
-            if (okRep) Some((System.nanoTime() - t0) / 1e9) else None
-          }
-          if (ts.isEmpty) (Double.NaN, Double.NaN, "")
-          else {
-            val ratio = ts.min / floor
-            (ts.min, ratio,
-             if (ratio > CALIB_MAX_RATIO) "deferred_contended_host" else "")
-          }
-      }
-    // Probe reps are adaptive inside the tranche: each probe rep that
-    // lands under the exoneration threshold settles "contention"
-    // immediately (a storm's false movers cost ~1 rep each), and a mover
-    // is only charged the full rep count while tranche remains — past it,
-    // the verdict stands on the reps taken (min-of-3 under a green
-    // calibration gate is still real evidence; "deferred_budget" is not).
-    val probeReps = 7
-    val probeRepsMin = 3
-    def trancheLeft: Double = trancheS - (elapsedS - adjStart)
-    // A probe rep that throws must not contribute a fail-fast "timing":
-    // a query that OOMs or errors during the re-probe would otherwise get
-    // an artificially tiny min and be adjudicated 'contention'. Failed reps
-    // are excluded; all-failed ⇒ verdict 'probe_failed'.
-    def adjudicateOne(n: String, prev: Double, graded: Double)
-        : (String, Double, Double, Double, Int, String) = {
-      if (deferReason.nonEmpty) return (n, prev, graded, Double.NaN, 0, deferReason)
-      val fn = SparkEntry.queries(n)
-      val exonerationBar = math.max(1.5 * prev, prev + 0.15)
-      var probeMin = Double.NaN
-      var taken = 0
-      var failed = 0
-      var verdict: String = null
-      while (verdict == null) {
-        val t0 = System.nanoTime()
-        val okRep = try { fn(spark, sfDir).count(); true }
-                    catch { case _: Throwable => false }
-        val t = (System.nanoTime() - t0) / 1e9
-        taken += 1
-        if (okRep) { if (probeMin.isNaN || t < probeMin) probeMin = t }
-        else failed += 1
-        if (failed >= taken && taken >= probeRepsMin) verdict = "probe_failed"
-        else if (!probeMin.isNaN &&
-                 norm(math.min(graded, probeMin)) <= exonerationBar)
-          // Both timings measure the SAME code; the steady-state estimate
-          // is the best of them (the re-probe itself can land on a
-          // contended window — observed: graded 0.44 s, re-probe 1.10 s,
-          // idle 0.18 s). Host-normalized before comparing: "real" must
-          // mean a code-level regression, not a slower host era.
-          verdict = "contention"
-        else if (taken >= probeReps ||
-                 (taken >= probeRepsMin && trancheLeft <= 0))
-          verdict = if (probeMin.isNaN) "probe_failed" else "real"
-      }
-      (n, prev, graded, probeMin, taken, verdict)
-    }
-    def moversJson(rows: Seq[(String, Double, Double, Double, Int, String)]) =
-      rows.sortBy(_._1).map { case (n, p, g, pr, taken, v) =>
-        val prS = if (pr.isNaN) "null" else r3(pr)
-        s"""{"query":"$n","prev_min":${r3(p)},"graded_min":${r3(g)},"reprobe_min":$prS,"probe_reps":$taken,"verdict":"$v"}"""
-      }.mkString("[", ",", "]")
-    val adjudicated = scala.collection.mutable.ArrayBuffer
-      .empty[(String, Double, Double, Double, Int, String)]
-    val drifted = scala.collection.mutable.ArrayBuffer
-      .empty[(String, Double, Double, Double, Int, String)]
-    def adjJson(): String = {
-      val nReal = adjudicated.count(_._6 == "real")
-      // Fresh host sample per persist: the probe WINDOW is where
-      // verdicts form, and r16's first re-baseline run showed probes
-      // degrading 4-34x late in the run with no counter covering that
-      // era (host_at_adjudication is a point sample at the start). The
-      // delta since the previous sample makes probe-window steal data
-      // in the artifact, not an inference from the probe times.
-      val hostNow = sampleHost(sorted.size - 1, "adjudication_window")
-      val baseline = if (sfComparable) s""""$sfDir"""" else "null"
-      val calibFloorS = calibFloor.map(r3).getOrElse("null")
-      val calibProbeS = if (calibProbe.isNaN) "null" else r3(calibProbe)
-      val calibRatioS = if (calibRatio.isNaN) "null" else r3(calibRatio)
-      val deferS = if (deferReason.isEmpty) "null" else s""""$deferReason""""
-      s"""{"metric":"adjudication","threshold":2.0,"abs_floor_sec":0.15,"probe_reps_max":$probeReps,"tranche_sec":${r3(trancheS)},"tranche_spent_sec":${r3(elapsedS - adjStart)},"baseline_sf":$baseline,"baseline_source":"$baselineProvenance","host_factor":${r3(hostFactor)},"host_factor_method":"median per-query min ratio vs baseline over ${ratios.size} common queries; all mover selection and verdicts use graded/host_factor","host_at_adjudication":$hostAtAdj,"host_at_last_persist":$hostNow,"calibration_gate":{"query":"$CALIB_Q","floor_sec":$calibFloorS,"probe_min_sec":$calibProbeS,"ratio":$calibRatioS,"max_ratio":$CALIB_MAX_RATIO,"deferred":$deferS},"n_movers":${adjudicated.size},"n_real":$nReal,"n_contention":${adjudicated.count(_._6 == "contention")},"movers":${moversJson(adjudicated.toSeq)},"drift":{"top_n_by_abs_delta":$driftN,"ratio_floor":"1.25x, waived for prev>=1s","n_movers":${drifted.size},"n_real":${drifted.count(_._6 == "real")},"movers":${moversJson(drifted.toSeq)}}}"""
-    }
-    def persistAdj(): Unit =
-      java.nio.file.Files.write(java.nio.file.Paths.get("bench_adjudication.json"),
-        (adjJson() + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // Probe order: worst normalized regression first, so if a kill lands
-    // mid-pass the verdicts that matter most are already on disk.
-    val adjOrdered = adjMovers.sortBy { case (n, p, g) => -(norm(g) - p) }
-    val driftOrdered = driftMovers.sortBy { case (n, p, g) => -(norm(g) - p) }
-    adjOrdered.foreach { case (n, p, g) =>
-      adjudicated += adjudicateOne(n, p, g); persistAdj()
-    }
-    driftOrdered.foreach { case (n, p, g) =>
-      drifted += adjudicateOne(n, p, g); persistAdj()
-    }
-    persistAdj()
-    val adjOut = adjJson()
     finished = true
     spark.stop()
-    println(json)
-    println(adjOut)
     // Chunked per-query attestation: 10 queries per line, each line a
-    // self-describing JSON fragment ~300 bytes. The LAST few lines of
+    // self-describing JSON fragment ~600 bytes. The LAST few lines of
     // stdout always survive tail capture, so at minimum the final chunks
     // plus the summary line parse; the sha256 covers whatever scrolled off.
-    val okSorted = ok.sortBy(_._1)
-    val entrySeq = okSorted.map { case (n, ts, _) =>
-      s"\"" + n + "\":" + r3(ts.min) }
-    val medSeq = okSorted.map { case (n, ts, _) =>
-      s"\"" + n + "\":" + r3(medianOf(ts)) }
-    entrySeq.zip(medSeq).grouped(10).zipWithIndex.foreach { case (chunk, i) =>
-      val mins = chunk.map(_._1).mkString("{", ",", "}")
-      val meds = chunk.map(_._2).mkString("{", ",", "}")
+    okRows.grouped(10).zipWithIndex.foreach { case (chunk, i) =>
+      val mins = fmtMap(chunk.map { case (n, ts, _, _) => n -> ts.min })
+      val meds = fmtMap(chunk.map { case (n, ts, _, _) => n -> medianOf(ts) })
       println(s"""{"metric":"chunk","i":$i,"queries":$mins,"medians":$meds}""")
     }
-    // Host-evidence attestation line: the per-chunk load/steal/throttle
-    // deltas sampled during the run, so contention storms are readable
-    // off the stdout tail as data, not inferred from ratios.
-    println(s"""{"metric":"host","samples":${hostSamples.mkString("[", ",", "]")}}""")
     // Final line: compact summary, shape deliberately DISTINCT from the
     // full report (no "queries" key at all) so a consumer can never
     // mistake it for a full run that recorded zero queries. Whatever
     // window the tail capture keeps, this last line survives and parses.
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"n_errors":${errors.size},"sf":"$sfDir","reps":$reps,"timing":"min-of-reps","queries_file":"bench.json","queries_sha256":"$sha"}""")
+    println(summary)
     System.out.flush()
   }
 }

@@ -166,119 +166,8 @@ case class DotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Top-`probe` quantizer cells for a vector, as ONE codegen expression:
-  * scores every centroid (s_k = 2·c_k·v − |c_k|², the squared-distance
-  * argmin rewritten so the row-constant |v|² drops out) in a single
-  * tight loop over a referenced double[][] and keeps a probe-sized
-  * insertion top-list. Replaces the previous formulation —
-  * `sort_array(array(struct(dot_const…) × K))` — whose K inlined
-  * sub-expressions re-read the vector through K separate null-checked
-  * paths and whose generated code grew past JIT comfort at K = 64
-  * (probed: the assignment projection alone cost 0.75 s at sf0.1;
-  * one-loop form is ~10×, min-of-5 stage split of q204).
-  *
-  * Ordering matches the old struct sort EXACTLY — score descending,
-  * cell id descending on ties, compared via Double.compare (the
-  * nan-safe total order Spark's struct ordering uses) — so assignments
-  * are bit-identical to the sort_array formulation. */
-case class TopCells(child: Expression, cents: Array[Array[Double]],
-                    cids: Array[Int], probe: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-
-  @transient private lazy val bias: Array[Double] =
-    cents.map(c => c.map(x => x * x).sum)
-
-  override def nullSafeEval(v: Any): Any = {
-    val a = v.asInstanceOf[ArrayData]
-    val k = cents.length
-    val keep = math.min(probe, k)
-    val ts = new Array[Double](keep)
-    val tc = new Array[Int](keep)
-    var filled = 0
-    var ki = 0
-    while (ki < k) {
-      val c = cents(ki)
-      val n = math.min(a.numElements(), c.length)
-      var dot = 0.0; var i = 0
-      while (i < n) { dot += VecAccess.get(child.dataType)(a, i) * c(i); i += 1 }
-      val s = 2.0 * dot - bias(ki)
-      val cid = cids(ki)
-      var pos = filled
-      while (pos > 0 && (java.lang.Double.compare(s, ts(pos - 1)) > 0 ||
-          (java.lang.Double.compare(s, ts(pos - 1)) == 0 && cid > tc(pos - 1))))
-        pos -= 1
-      if (pos < keep) {
-        val end = math.min(filled, keep - 1)
-        var m = end
-        while (m > pos) { ts(m) = ts(m - 1); tc(m) = tc(m - 1); m -= 1 }
-        ts(pos) = s; tc(pos) = cid
-        if (filled < keep) filled += 1
-      }
-      ki += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      java.util.Arrays.copyOf(tc, filled))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("cents", cents, "double[][]")
-    val bRef = ctx.addReferenceObj("bias", bias, "double[]")
-    val idRef = ctx.addReferenceObj("cids", cids, "int[]")
-    nullSafeCodeGen(ctx, ev, a => {
-      val keep = ctx.freshName("keep"); val ts = ctx.freshName("ts")
-      val tc = ctx.freshName("tc"); val filled = ctx.freshName("filled")
-      val ki = ctx.freshName("ki"); val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot"); val i = ctx.freshName("i")
-      val s = ctx.freshName("s"); val cid = ctx.freshName("cid")
-      val pos = ctx.freshName("pos"); val end = ctx.freshName("end")
-      val m = ctx.freshName("m"); val cmp = ctx.freshName("cmp")
-      // NOTE: no generated line may START with '|' — downstream
-      // formatting passes treat a leading pipe as a margin char and eat
-      // it (observed: the `|| (` continuation of a multi-line while
-      // lost its operator, Janino failed, and the whole Predicate fell
-      // back to interpreted mode). The tie-break runs through an int
-      // cmp temp so every line begins with an identifier or keyword.
-      s"""
-         |int $keep = Math.min($probe, $cRef.length);
-         |double[] $ts = new double[$keep];
-         |int[] $tc = new int[$keep];
-         |int $filled = 0;
-         |for (int $ki = 0; $ki < $cRef.length; $ki++) {
-         |  int $n = Math.min($a.numElements(), $cRef[$ki].length);
-         |  double $dot = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $dot += ${VecAccess.gen(child.dataType, a, i)} * $cRef[$ki][$i];
-         |  }
-         |  double $s = 2.0 * $dot - $bRef[$ki];
-         |  int $cid = $idRef[$ki];
-         |  int $pos = $filled;
-         |  while ($pos > 0) {
-         |    int $cmp = java.lang.Double.compare($s, $ts[$pos - 1]);
-         |    if ($cmp > 0 || ($cmp == 0 && $cid > $tc[$pos - 1])) $pos--;
-         |    else break;
-         |  }
-         |  if ($pos < $keep) {
-         |    int $end = Math.min($filled, $keep - 1);
-         |    for (int $m = $end; $m > $pos; $m--) {
-         |      $ts[$m] = $ts[$m - 1]; $tc[$m] = $tc[$m - 1];
-         |    }
-         |    $ts[$pos] = $s; $tc[$pos] = $cid;
-         |    if ($filled < $keep) $filled++;
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  java.util.Arrays.copyOf($tc, $filled));
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Integer-exact variant of TopCells for the oracle-checked IVF path
+/** Top-`probe` quantizer cells for a vector, as ONE integer-exact
+  * codegen expression, for the oracle-checked IVF path
   * (q55): the vector is quantized ONCE per row to 1e-6 fixed point with
   * half-away-from-zero rounding (the ROUND both engines apply — JVM
   * Math.round is half-toward-+∞, which differs at negative .5), and
@@ -353,9 +242,11 @@ case class TopCellsInt(child: Expression, cents: Array[Array[Long]],
       val pos = ctx.freshName("pos"); val end = ctx.freshName("end")
       val m = ctx.freshName("m"); val dim = ctx.freshName("dim")
       val xq = ctx.freshName("xq"); val xv = ctx.freshName("xv")
-      // Same no-leading-pipe rule as TopCells: downstream formatting
-      // eats a leading '|' as a margin char, so tie-breaks run through
-      // plain statements.
+      // NOTE: no generated line may START with '|' — downstream
+      // formatting eats a leading pipe as a margin char (observed: a
+      // `|| (` continuation lost its operator, Janino failed, and the
+      // Predicate fell back to interpreted mode), so tie-breaks run
+      // through plain statements.
       s"""
          |int $dim = $a.numElements();
          |long[] $xq = new long[$dim];
@@ -500,11 +391,6 @@ object VectorFunctions {
   /** Dot product with a constant weight vector (LSH projections). */
   def dot_const(a: Column, weights: Array[Double]): Column =
     GraftInternal.toColumn(DotWithConst(GraftInternal.toExpression(a), weights))
-
-  /** Nearest-`probe` quantizer cells (IVF / SemDeDup assignment). */
-  def top_cells(v: Column, cents: Seq[(Int, Array[Double])], probe: Int): Column =
-    GraftInternal.toColumn(TopCells(GraftInternal.toExpression(v),
-      cents.map(_._2).toArray, cents.map(_._1).toArray, probe))
 
   /** Integer-exact nearest-`probe` cells over 1e-6-quantized coords
     * (the oracle-checked IVF path). */

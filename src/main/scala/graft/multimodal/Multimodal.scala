@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
 
@@ -16,36 +16,9 @@ import graft.Tables._
   * function arithmetically — a fake decode cannot hash-match it.
   * As of round 11 the audio/video modalities have REAL codecs too —
   * see `Codecs.scala` (q276 G.711 μ-law in RIFF/WAVE, q277 stateful
-  * IMA ADPCM, q278 multi-frame animated-GIF LZW video). The
-  * `decodeStub`/`fakeDecode` pair below remains only as the documented
-  * slot-shape for codecs the JVM cannot host (MP3/H.264); everything
-  * around it — binary schema, batch shape, partition-wise execution,
-  * metadata struct — is the same plumbing the real paths exercise.
+  * IMA ADPCM, q278 multi-frame animated-GIF LZW video).
   */
 object Multimodal {
-
-  case class MediaMeta(doc_id: Long, n_bytes: Long, width: Int, height: Int,
-                       format: String)
-
-  /** DETERMINISTIC FAKE of a media decode — stands in for e.g. libjpeg.
-    * Derives stable pseudo-dimensions from payload length and first
-    * bytes; a real build replaces only this function. */
-  def fakeDecode(docId: Long, payload: Array[Byte]): MediaMeta = {
-    val n = payload.length.toLong
-    val head = if (payload.nonEmpty) payload(0) & 0xff else 0
-    MediaMeta(docId, n, (64 + n % 512).toInt, (64 + (n * 7 + head) % 512).toInt,
-      if (n % 2 == 0) "png" else "jpeg")
-  }
-
-  /** Partition-wise decode over a binary column — the Scala analogue of a
-    * `mapInPandas` decode UDF: one iterator pass per partition, no
-    * per-row task overhead, codec state reusable across rows. */
-  def decodeStub(df: DataFrame)(implicit s: SparkSession): Dataset[MediaMeta] = {
-    import s.implicits._
-    df.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it => it.map { case (id, bytes) => fakeDecode(id, bytes) } }
-  }
 
   /** Frame sampling over a binary payload: every k-th fixed-size block
     * (the video-frame-subsample shape — deterministic, pure expression,
@@ -58,43 +31,7 @@ object Multimodal {
         lit(everyK)),
       i => payload.substr(i * blockSize + 1, lit(blockSize)))
 
-  /** Resize stub: recompute the fake dimensions to a bounded box,
-    * preserving the deterministic contract of `fakeDecode`. */
-  def resizeStub(m: MediaMeta, maxSide: Int): MediaMeta = {
-    val scale = math.min(1.0, maxSide.toDouble / math.max(m.width, m.height))
-    m.copy(width = math.max(1, (m.width * scale).toInt),
-           height = math.max(1, (m.height * scale).toInt))
-  }
-
-  /** Feature extraction over a binary payload: L1-normalized byte
-    * histogram as an Array[Float] embedding — the partition-wise
-    * "model inference" slot (swap for an ONNX/codec call; schema,
-    * batch shape and downstream ANN compatibility stay identical). */
-  def byteHistogram(payload: Array[Byte], bins: Int = 64): Array[Float] = {
-    val h = new Array[Float](bins)
-    var i = 0
-    while (i < payload.length) { h((payload(i) & 0xff) % bins) += 1f; i += 1 }
-    if (payload.length > 0) {
-      var j = 0
-      while (j < bins) { h(j) /= payload.length; j += 1 }
-    }
-    h
-  }
-
-  /** Binary column → embedding column, partition-wise (mapInPandas
-    * analogue), ready for graft.sim ANN operators. */
-  def embedStub(df: DataFrame, bins: Int = 64)
-               (implicit s: SparkSession): DataFrame = {
-    import s.implicits._
-    df.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) => (id, byteHistogram(bytes, bins)) })
-      .toDF("doc_id", "embedding")
-  }
-
-  /** q45: binary payload + metadata extraction, SQL-expressible part.
-    * (The decodeStub path is exercised in MultimodalSpec; the registry
-    * query keeps to expressions both engines can hash-match.) */
+  /** q45: binary payload + metadata extraction, SQL-expressible part. */
   def q45MultimodalMeta(s: SparkSession, d: String): DataFrame =
     documents(s, d)
       .withColumn("payload", col("text").cast("binary"))
@@ -185,9 +122,7 @@ object Multimodal {
 
   /** REAL image decode: sniff the container format with the registered
     * `ImageReader`s, parse the payload, and return typed metadata plus
-    * an exact pixel checksum (sum of all channel bytes). This is the
-    * codec-backed replacement for `fakeDecode` the round-1 design left
-    * a slot for. */
+    * an exact pixel checksum (sum of all channel bytes). */
   def decodeImage(payload: Array[Byte]): (String, Int, Int, Long) = {
     val iis = javax.imageio.ImageIO.createImageInputStream(
       new java.io.ByteArrayInputStream(payload))

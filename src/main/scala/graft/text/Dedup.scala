@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables._
@@ -310,26 +310,6 @@ object Dedup {
   def minhashSig(sgs: Seq[String]): Array[Long] =
     sgs.foldLeft(Array.fill(NUM_HASHES)(Long.MaxValue))(minhashUpdate)
 
-  /** Single-pass MinHash signature aggregator: one buffer holds all
-    * NUM_HASHES minima (vs NUM_HASHES separate MIN expressions). The
-    * aggregation formulation is for pre-exploded / streaming shapes;
-    * on an array column prefer the row-local `minhashSig` (equality
-    * of the two asserted in DedupSpec). */
-  object MinhashAgg extends org.apache.spark.sql.expressions.Aggregator[String, Array[Long], Seq[Long]] {
-    def zero: Array[Long] = Array.fill(NUM_HASHES)(Long.MaxValue)
-    def reduce(b: Array[Long], sg: String): Array[Long] = minhashUpdate(b, sg)
-    def merge(x: Array[Long], y: Array[Long]): Array[Long] = {
-      var i = 0
-      while (i < NUM_HASHES) { if (y(i) < x(i)) x(i) = y(i); i += 1 }
-      x
-    }
-    def finish(b: Array[Long]): Seq[Long] = b.toSeq
-    def bufferEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    def outputEncoder: Encoder[Seq[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]()
-  }
-
   /** q41: MinHash+LSH near-dup join — banded signatures generate the
     * candidate set (linear scale path); exact verification makes the
     * output identical to q40, so it shares the oracle.
@@ -398,7 +378,7 @@ object Dedup {
 
   /** Row-local SimHash of a whole shingle set (counterpart of
     * `minhashSig`): per-row function over the array column, zero
-    * shuffle; agrees with SimhashAgg over the same hashes. */
+    * shuffle. */
   def simhashSig(sgs: Seq[String]): Long = {
     val c = new Array[Int](64)
     sgs.foreach { sg =>
@@ -411,33 +391,6 @@ object Dedup {
     sig
   }
 
-  /** Single-pass SimHash signature aggregator: one typed Aggregator
-    * maintaining all 64 bit-counters per group (vs 64 separate SUM
-    * expressions — one buffer, one pass, partial+final merge like any
-    * built-in aggregate). For pre-exploded / streaming shapes; on an
-    * array column prefer the row-local `simhashSig`. */
-  object SimhashAgg extends org.apache.spark.sql.expressions.Aggregator[Long, Array[Int], Long] {
-    def zero: Array[Int] = new Array[Int](64)
-    def reduce(b: Array[Int], h: Long): Array[Int] = {
-      var j = 0
-      while (j < 64) { b(j) += (if (((h >>> j) & 1L) == 1L) 1 else -1); j += 1 }
-      b
-    }
-    def merge(x: Array[Int], y: Array[Int]): Array[Int] = {
-      var j = 0
-      while (j < 64) { x(j) += y(j); j += 1 }
-      x
-    }
-    def finish(b: Array[Int]): Long = {
-      var sig = 0L; var j = 0
-      while (j < 64) { if (b(j) > 0) sig |= (1L << j); j += 1 }
-      sig
-    }
-    def bufferEncoder: Encoder[Array[Int]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Int]]()
-    def outputEncoder: Encoder[Long] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Long]()
-  }
 
   /** q42: SimHash near-dup pairs — 60-bit per-doc signature from shingle
     * hashes, Hamming ≤ HAM_MAX via 4×16-bit chunk blocking (pigeonhole:

@@ -1,0 +1,179 @@
+package graft.tools
+
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+
+import graft.{Bench, SparkEntry}
+import graft.Bench.r3
+
+/** Builder-side regression adjudication of a finished `graft.Bench` run:
+  * reads the run from the working-tree `bench.json`, compares it with
+  * the COMMITTED baseline (`git show HEAD:bench.json` only — once Bench
+  * has run, the working-tree file is the run being judged), re-probes
+  * every mover in a fresh session at the run's SF and core count, and
+  * writes `bench_adjudication.json`, persisted after every verdict so a
+  * kill mid-probe keeps the verdicts reached so far.
+  *
+  * Why (r4/r5/r10/r11): rounds ended with hand-probing >2× "regressions"
+  * that were host contention, not code. A dedicated re-probe of each
+  * mover, with no other query interleaving, gives the isolation a
+  * manual probe gives, and both numbers land in the artifact.
+  *
+  *  - Host factor (r13: 10/10 "real" verdicts were false because the
+  *    baseline came from a faster host era): the MEDIAN per-query min
+  *    ratio run/baseline over the common queries is a robust host-speed
+  *    estimate — a handful of genuinely changed queries among ~300
+  *    cannot move a median. All selection and verdicts compare
+  *    host-normalized times (graded / host factor).
+  *  - Calibration gate (r14: 8 "real" verdicts, all contention — the
+  *    re-probes ran in the same contended window): before any mover,
+  *    `Bench.CALIB_Q` is re-measured min-of-3 against the committed
+  *    floor; above CALIB_MAX_RATIO every verdict is
+  *    `deferred_contended_host`, an explicit "no evidence either way".
+  *  - Early exit: a probe rep under the exoneration bar settles
+  *    `contention` at once, so a storm's false movers cost ~1 rep each.
+  *
+  * Run after Bench, from the same directory: sbt "runMain graft.tools.Adjudicate"
+  */
+object Adjudicate {
+
+  /** Ratio movers: normalized min > THRESHOLD × baseline and more than
+    * ABS_FLOOR_S above it. */
+  val THRESHOLD = 2.0
+  val ABS_FLOOR_S = 0.15
+  /** Drift panel size: the top regressions by Δseconds the ratio gate
+    * missed (r12: seven 1.3–1.9× movers, all ≤ 0.5 s absolute; r13:
+    * q86's 1.20× / +0.86 s slipped under the 1.25× floor, which is why
+    * baselines ≥ 1 s skip that floor). */
+  val DRIFT_N = 8
+  val CALIB_MAX_RATIO = 1.5
+  val PROBE_REPS = 7
+  val PROBE_REPS_MIN = 3
+
+  case class Mover(query: String, prev: Double, graded: Double)
+
+  /** (host factor, number of common queries it was taken over): the
+    * median run/baseline min ratio over queries whose baseline min is
+    * above 0.05 s, clamped to [0.5, 3.0] (outside that the baseline is
+    * not comparable at all); 1.0 with fewer than 20 such queries. */
+  def hostFactor(prev: Map[String, Double], run: Map[String, Double]): (Double, Int) = {
+    val ratios = run.toSeq.flatMap { case (n, g) =>
+      prev.get(n).filter(_ > 0.05).map(g / _) }.sorted
+    val f =
+      if (ratios.size < 20) 1.0
+      else math.min(3.0, math.max(0.5, Bench.medianOf(ratios)))
+    (f, ratios.size)
+  }
+
+  /** (ratio movers, drift movers), each worst normalized regression
+    * first, so a kill mid-pass has already settled the ones that matter
+    * most. */
+  def movers(prev: Map[String, Double], run: Map[String, Double],
+             hostFactor: Double): (Seq[Mover], Seq[Mover]) = {
+    def delta(m: Mover): Double = m.graded / hostFactor - m.prev
+    val common = run.toSeq.sortBy(_._1).flatMap { case (n, g) =>
+      prev.get(n).map(Mover(n, _, g)) }
+    val ratio = common.filter(m =>
+      m.graded / hostFactor > THRESHOLD * m.prev && delta(m) > ABS_FLOOR_S)
+    val picked = ratio.map(_.query).toSet
+    val drift = common.filter(m => !picked(m.query) && delta(m) > ABS_FLOOR_S &&
+      (m.graded / hostFactor > 1.25 * m.prev || m.prev >= 1.0))
+    (ratio.sortBy(-delta(_)), drift.sortBy(-delta(_)).take(DRIFT_N))
+  }
+
+  /** Re-probes one mover with `rep` (seconds of one rep, None if it
+    * threw) until a rep clears the exoneration bar max(1.5·prev,
+    * prev + 0.15 s) — `contention` — or PROBE_REPS reps are taken —
+    * `real`. Both the graded min and the probe measure the same code, so
+    * the better of them is the steady-state estimate. Failed reps never
+    * count as timings; all-failed is `probe_failed`.
+    * Returns (probe min or NaN, reps taken, verdict). */
+  def probe(m: Mover, hostFactor: Double, rep: () => Option[Double])
+      : (Double, Int, String) = {
+    val bar = math.max(1.5 * m.prev, m.prev + ABS_FLOOR_S)
+    var probeMin = Double.NaN
+    var taken = 0
+    var failed = 0
+    var verdict: String = null
+    while (verdict == null) {
+      rep() match {
+        case Some(t) => if (probeMin.isNaN || t < probeMin) probeMin = t
+        case None => failed += 1
+      }
+      taken += 1
+      if (failed >= taken && taken >= PROBE_REPS_MIN) verdict = "probe_failed"
+      else if (!probeMin.isNaN && math.min(m.graded, probeMin) / hostFactor <= bar)
+        verdict = "contention"
+      else if (taken >= PROBE_REPS)
+        verdict = if (probeMin.isNaN) "probe_failed" else "real"
+    }
+    (probeMin, taken, verdict)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val host = new Bench.HostSampler(System.nanoTime())
+    val run = Bench.parseRecord(Files.readAllBytes(Paths.get("bench.json")))
+    val (sf, cpus) = (run.sf, run.cpus) match {
+      case (Some(s), Some(c)) => (s, c)
+      case _ =>
+        System.err.println("bench.json records no sf or cpus: run graft.Bench first")
+        sys.exit(2)
+    }
+    val base = Bench.committedRecord()
+    val refused = Bench.refusal(base, sf, cpus)
+    val prev = if (refused.isEmpty) base.get.mins else Map.empty[String, Double]
+    val (hf, nCommon) = hostFactor(prev, run.mins)
+    val (ratioMovers, driftMovers) = movers(prev, run.mins, hf)
+    val calibFloor = base.flatMap(b => b.calib.orElse(b.mins.get(Bench.CALIB_Q)))
+
+    val atIndex = run.mins.size - 1
+    val anyMovers = ratioMovers.nonEmpty || driftMovers.nonEmpty
+    val spark = if (!anyMovers) None else {
+      val s = SparkEntry.localSession(cpus.toString).getOrCreate()
+      s.sparkContext.setLogLevel("WARN")
+      Bench.warmUp(s, sf)
+      Some(s)
+    }
+    def rep(name: String): Option[Double] = Bench.timeRep(spark.get, sf, name) match {
+      case (t, None) => Some(t)
+      case _ => None
+    }
+    val hostAtStart = host.sample(atIndex, "adjudication_start")
+    val calibProbe =
+      if (anyMovers && calibFloor.nonEmpty) (1 to 3).flatMap(_ => rep(Bench.CALIB_Q)).minOption
+      else None
+    val calibRatio = for (p <- calibProbe; f <- calibFloor) yield p / f
+    val deferReason = calibRatio.filter(_ > CALIB_MAX_RATIO).map(_ => "deferred_contended_host")
+
+    val done = scala.collection.mutable.Map.empty[Mover, (Double, Int, String)]
+    def verdicts(ms: Seq[Mover]) = ms.filter(done.contains).sortBy(_.query).map(m => m -> done(m))
+    def count(vs: Seq[(Mover, (Double, Int, String))], v: String) = vs.count(_._2._3 == v)
+    def rowsJson(vs: Seq[(Mover, (Double, Int, String))]): String = vs.map {
+      case (m, (pr, taken, v)) =>
+        val prS = if (pr.isNaN) "null" else r3(pr)
+        s"""{"query":"${m.query}","prev_min":${r3(m.prev)},"graded_min":${r3(m.graded)},"reprobe_min":$prS,"probe_reps":$taken,"verdict":"$v"}"""
+    }.mkString("[", ",", "]")
+    def opt(v: Option[Double]): String = v.map(r3).getOrElse("null")
+    def persist(hostAtEnd: String): String = {
+      val (ra, dr) = (verdicts(ratioMovers), verdicts(driftMovers))
+      val baselineSf = if (refused.isEmpty) s""""$sf"""" else "null"
+      val source = refused.fold("git:HEAD")(r => s"refused: $r")
+      val deferS = deferReason.fold("null")(r => s""""$r"""")
+      val json = s"""{"metric":"adjudication","threshold":$THRESHOLD,"abs_floor_sec":$ABS_FLOOR_S,"probe_reps_max":$PROBE_REPS,"cpus":$cpus,"baseline_sf":$baselineSf,"baseline_source":"$source","host_factor":${r3(hf)},"host_factor_method":"median per-query min ratio vs baseline over $nCommon common queries; all mover selection and verdicts use graded/host_factor","host_at_adjudication":$hostAtStart,"host_at_last_persist":$hostAtEnd,"calibration_gate":{"query":"${Bench.CALIB_Q}","floor_sec":${opt(calibFloor)},"probe_min_sec":${opt(calibProbe)},"ratio":${opt(calibRatio)},"max_ratio":$CALIB_MAX_RATIO,"deferred":$deferS},"n_movers":${ra.size},"n_real":${count(ra, "real")},"n_contention":${count(ra, "contention")},"movers":${rowsJson(ra)},"drift":{"top_n_by_abs_delta":$DRIFT_N,"ratio_floor":"1.25x, waived for prev>=1s","n_movers":${dr.size},"n_real":${count(dr, "real")},"movers":${rowsJson(dr)}}}"""
+      Files.write(Paths.get("bench_adjudication.json"), (json + "\n").getBytes(UTF_8))
+      json
+    }
+    (ratioMovers ++ driftMovers).foreach { m =>
+      done(m) = deferReason match {
+        case Some(r) => (Double.NaN, 0, r)
+        case None =>
+          rep(m.query) // untimed: this JVM has not run the query yet
+          probe(m, hf, () => rep(m.query))
+      }
+      persist("null")
+    }
+    val out = persist(host.sample(atIndex, "adjudication_end"))
+    spark.foreach(_.stop())
+    println(out)
+  }
+}
