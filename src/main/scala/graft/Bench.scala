@@ -63,9 +63,21 @@ object Bench {
   /** The host-calibration probe: an expensive, shuffle-heavy,
     * CPU-bound query whose min is a stable fingerprint of host speed.
     * Its suite min is stamped into bench.json ("calibration") — only
-    * when it received the full requested rep count, so a downshifted
-    * era can never inflate the committed floor. */
+    * when it received the full requested rep count and at least
+    * `CALIB_REPS`, so a downshifted era can never inflate the committed
+    * floor. */
   val CALIB_Q = "q229_lsh_sweep"
+
+  /** Reps of the adjudicator's fresh calibration probe (min-of-3). */
+  val CALIB_REPS = 3
+
+  /** Whether a q229 min over `used` of the `reps` requested reps is
+    * floor-quality. The calibration floor is a committed artifact later
+    * runs gate on, against a fresh min-of-`CALIB_REPS`: a min of fewer
+    * reps than requested (a downshifted era) or than that probe reads
+    * high and would loosen the gate, so it is withheld rather than
+    * stamped inflated. */
+  def stampsCalibration(used: Int, reps: Int): Boolean = used >= math.max(reps, CALIB_REPS)
 
   /** Sliding window (completed entries) for the host-slowdown factor
     * the rep schedule uses. Wide enough to smooth heterogeneous query
@@ -294,11 +306,8 @@ object Bench {
       val total = ok.map(_._2.min).sum
       val sched = schedule.mkString("[", ",", "]")
       val minUsed = if (acc.isEmpty) reps else acc.map(_._4).min
-      // The calibration floor is a committed artifact future rounds gate
-      // on; a min taken in a downshifted era (< the requested rep count)
-      // is not floor-quality and is withheld rather than stamped inflated.
       val calib = ok.collectFirst {
-        case (CALIB_Q, ts, _, used) if used >= reps =>
+        case (CALIB_Q, ts, _, used) if stampsCalibration(used, reps) =>
           s""","calibration":{"query":"$CALIB_Q","min_sec":${r3(ts.min)},"median_sec":${r3(medianOf(ts))},"reps":$used}"""
       }.getOrElse("")
       val load = java.lang.management.ManagementFactory

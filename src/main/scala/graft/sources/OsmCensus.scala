@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
   */
 object OsmCensus {
 
-  /** Two per-region-extract-style files (multi-file: exercises the
-    * one-task-per-file partitioning) + a `_SUCCESS` marker that BOTH
+  /** Two per-region-extract-style files (multi-file, each below the
+    * split size: one task per file) + a `_SUCCESS` marker that BOTH
     * readers must ignore (Hadoop hiddenFileFilter convention). */
   private[sources] def fixtureXml: Seq[String] = Seq(
     """<?xml version="1.0" encoding="UTF-8"?>

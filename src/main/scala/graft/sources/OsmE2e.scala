@@ -30,10 +30,12 @@ import graft.ops.OsmShape
   *
   * Scale shape: serialization is one row-local projection + an
   * O(#partitions) file fan-out (executor-side streaming writes, never
-  * a driver collect); the scan is one task per file (OsmScan's
-  * partitioning); the audit is one map-side-combined aggregate. At
-  * 100 TB the extract count scales with partitions and each file
-  * streams through constant StAX memory.
+  * a driver collect); the scan is one task per byte range (OsmScan's
+  * partitioning: these extract files are below Spark's split size, so
+  * one range each); the audit is one map-side-combined aggregate. At
+  * 100 TB the extract count scales with partitions, a file above the
+  * split size is cut into ranges, and each range streams through
+  * constant StAX memory.
   */
 object OsmE2e {
 

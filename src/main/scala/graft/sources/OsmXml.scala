@@ -32,13 +32,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * the pushed `type` set are never decoded. With every column pruned,
   * as under `count()`, it only walks start and end elements.
   *
-  * Scale stance: OSM distributes data as many per-region extracts, so
-  * file-granularity parallelism is the natural partitioning for XML
-  * input (a single planet-scale file ships as PBF, whose block
-  * structure is splittable; XML is not record-splittable without a
-  * start-tag-scanning InputFormat). Everything after this source is
-  * ordinary DataFrame code: parse once, write parquet, and all
-  * downstream queries scan columnar data.
+  * Scale stance: a large file is parsed as byte ranges in parallel
+  * (`OsmDataSource`): each range re-syncs on the first `<node`, `<way`
+  * or `<relation` start tag at or after its offset and hands `parse` a
+  * bounded stream of the elements it owns inside a synthetic `<osm>`
+  * root. That split rests on two properties of OSM files: node, way and
+  * relation are children of the root (never nested in one another), and
+  * their start tags do not occur inside comments, CDATA sections or
+  * processing instructions. The files are UTF-8, so an ASCII tag never
+  * matches inside a multibyte character. A document that breaks either
+  * property must be read with `mode=permissive`, which never splits.
+  * Everything after this source is ordinary DataFrame code: parse once,
+  * write parquet, and all downstream queries scan columnar data.
   *
   * Untrusted input: `reader` refuses DTDs and external entities (XXE)
   * for every loop here; a malformed attribute value — including a
@@ -73,8 +78,9 @@ object OsmXml {
   /** A1 in its raw-XML form (the reference family's `count_tags`): a
     * census of EVERY element tag name in the document — including the
     * structure the row model doesn't carry (`osm` root, `bounds`,
-    * nested `tag`/`nd`/`member`) — as (tag, count). Same execution
-    * model as the `osm` source: one streaming StAX pass per file, constant
+    * nested `tag`/`nd`/`member`) — as (tag, count). One streaming
+    * StAX pass per whole file (the root and prolog are counted too, so
+    * this census is not split into byte ranges), constant
     * memory (the per-file map is bounded by the XML vocabulary, ~10
     * names), partial counts merged by one tiny reduceByKey. */
   def countTags(spark: SparkSession, path: String): DataFrame = {
@@ -256,15 +262,61 @@ object OsmXml {
       if (v == null) null else v.toDoubleOption.map(Double.box).orNull
     }
 
-    /** Epoch µs; an unparseable or out-of-range instant reads as NULL. */
     private def tsAttr(n: String): Any = {
       val v = r.getAttributeValue(null, n)
-      if (v == null) null
-      else
-        try {
-          val t = Instant.parse(v)
-          Math.addExact(Math.multiplyExact(t.getEpochSecond, 1000000L), t.getNano / 1000L)
-        } catch { case _: DateTimeParseException | _: ArithmeticException => null }
+      if (v == null) null else timestampMicros(v)
     }
+  }
+
+  /** Epoch µs of an OSM `timestamp`; an unparseable or out-of-range
+    * instant reads as NULL. The form OSM writes takes the integer fast
+    * path; anything else `Instant.parse` decides. */
+  private[graft] def timestampMicros(v: String): Any = {
+    val fast = secondsInstantMicros(v)
+    if (fast != Long.MinValue) fast
+    else
+      try {
+        val t = Instant.parse(v)
+        Math.addExact(Math.multiplyExact(t.getEpochSecond, 1000000L), t.getNano / 1000L)
+      } catch { case _: DateTimeParseException | _: ArithmeticException => null }
+  }
+
+  /** Epoch µs of exactly `YYYY-MM-DDTHH:MM:SSZ` with every field in
+    * range (proleptic Gregorian, as `Instant`), or Long.MinValue to
+    * decline: lowercase `t`/`z`, fractions, offsets, second 60, hour 24,
+    * signed years and impossible dates are left to `Instant.parse`. */
+  private[graft] def secondsInstantMicros(v: String): Long = {
+    def digits(from: Int, to: Int): Int = {
+      var n = 0
+      var i = from
+      while (i < to) {
+        val d = v.charAt(i) - '0'
+        if (d < 0 || d > 9) return -1
+        n = n * 10 + d
+        i += 1
+      }
+      n
+    }
+    if (v.length != 20 || v.charAt(4) != '-' || v.charAt(7) != '-' || v.charAt(10) != 'T' ||
+        v.charAt(13) != ':' || v.charAt(16) != ':' || v.charAt(19) != 'Z') return Long.MinValue
+    val y = digits(0, 4)
+    val mo = digits(5, 7)
+    val d = digits(8, 10)
+    val h = digits(11, 13)
+    val mi = digits(14, 16)
+    val s = digits(17, 19)
+    val leap = y % 4 == 0 && (y % 100 != 0 || y % 400 == 0)
+    val monthDays =
+      if (mo == 2) (if (leap) 29 else 28) else if (mo == 4 || mo == 6 || mo == 9 || mo == 11) 30 else 31
+    if (y < 0 || mo < 1 || mo > 12 || d < 1 || d > monthDays || h < 0 || h > 23 ||
+        mi < 0 || mi > 59 || s < 0 || s > 59) return Long.MinValue
+    // days from 0000-03-01, counting years from March so the leap day
+    // falls last, then shifted to 1970-01-01 (719468 days later)
+    val ym = if (mo <= 2) y - 1 else y
+    val era = Math.floorDiv(ym, 400)
+    val yoe = ym - era * 400
+    val doy = (153 * (if (mo > 2) mo - 3 else mo + 9) + 2) / 5 + d - 1
+    val days = era * 146097L + yoe * 365 + yoe / 4 - yoe / 100 + doy - 719468
+    (days * 86400L + h * 3600 + mi * 60 + s) * 1000000L
   }
 }

@@ -140,7 +140,7 @@ object Adjudicate {
     }
     val hostAtStart = host.sample(atIndex, "adjudication_start")
     val calibProbe =
-      if (anyMovers && calibFloor.nonEmpty) (1 to 3).flatMap(_ => rep(Bench.CALIB_Q)).minOption
+      if (anyMovers && calibFloor.nonEmpty) (1 to Bench.CALIB_REPS).flatMap(_ => rep(Bench.CALIB_Q)).minOption
       else None
     val calibRatio = for (p <- calibProbe; f <- calibFloor) yield p / f
     val deferReason = calibRatio.filter(_ > CALIB_MAX_RATIO).map(_ => "deferred_contended_host")

@@ -80,4 +80,13 @@ class AdjudicateSpec extends AnyFunSuite {
     val (pm, taken, v) = Adjudicate.probe(m, 1.0, reps(None, None, None))
     assert(pm.isNaN && taken == 3 && v == "probe_failed")
   }
+
+  test("the calibration floor is stamped only from a min of at least 3 reps") {
+    // a SPARK_GRAFT_BENCH_REPS=1 run got all its reps, but one rep is no floor
+    assert(!Bench.stampsCalibration(1, 1) && !Bench.stampsCalibration(2, 2))
+    assert(Bench.stampsCalibration(3, 3) && Bench.stampsCalibration(3, 1))
+    // a downshifted era (fewer reps than requested) is still withheld
+    assert(!Bench.stampsCalibration(4, 5) && Bench.stampsCalibration(5, 5))
+    assert(Bench.stampsCalibration(7, 5))
+  }
 }
