@@ -15,6 +15,15 @@ import org.apache.spark.sql.types._
   *    oracle-parity trick: at 1000-executor scale, double summation order
   *    is nondeterministic across retries/AQE re-plans; decimal sums are
   *    exact and therefore stable run-to-run.
+  *
+  * Lifetime of materialized frames: a `localCheckpoint` frame's blocks
+  * live exactly as long as the frame is reachable. Operators call
+  * `df.localCheckpoint()` where a subtree has several consumers in one
+  * query; once the query and everything built from it is unreachable,
+  * Spark's `ContextCleaner` frees the blocks after a GC. Nothing is
+  * freed by name, so two live results of the same query never share or
+  * free each other's blocks. Artifacts shared across queries are held
+  * by `perSession`, which keeps them reachable for the application.
   */
 object Tables {
 
@@ -102,47 +111,32 @@ object Tables {
     scala.util.Try(s.conf.get("spark.sql.shuffle.partitions").toInt)
       .getOrElse(s.sparkContext.defaultParallelism)
 
-  /** The RDDs a `localCheckpoint` persisted for `df`, derived from the
-    * DataFrame's own plan (the `LogicalRDD` leaves a checkpoint rewrites
-    * the plan to). A global before/after diff of
-    * `sc.getPersistentRDDs` — the previous approach — could capture an
-    * unrelated RDD persisted concurrently by another thread on the shared
-    * context and later unpersist it mid-use; the plan-derived form cannot. */
-  def checkpointedRdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+  /** Compute `build` once per (application, `key`) and share the value.
+    * For artifacts a workload trains or materializes once and many
+    * queries read: merge tables, quantizers, pair and label tables.
+    * The key must name the dataset and every parameter of the build.
+    * Same-key callers wait on one per-key lock, so `build` never runs
+    * twice for one application; other keys are not blocked. Each value
+    * is stored with the `applicationId` of the session that built it, so
+    * a later application rebuilds it and the stopped one's value is
+    * replaced, not kept. */
+  def perSession[T](s: SparkSession, key: String)(build: => T): T = {
+    val slot = sessionSlots.computeIfAbsent(key, _ => new SessionSlot)
+    slot.synchronized {
+      val app = s.sparkContext.applicationId
+      if (slot.app != app) {
+        slot.value = build
+        slot.app = app
+      }
+      slot.value.asInstanceOf[T]
     }
-
-  private val cycledCheckpoints =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[org.apache.spark.rdd.RDD[_]]]()
-
-  /** localCheckpoint for a plan subtree that is consumed by MULTIPLE
-    * downstream operators in one query (materialize once instead of
-    * recomputing per consumer), with per-tag cycling: the PREVIOUS
-    * invocation's blocks for the same tag are freed when the query is
-    * built again (bench reps, repeated verify), so checkpoints never
-    * accumulate across a session. The current invocation's blocks must
-    * stay persisted — the returned frame's lineage is truncated at the
-    * checkpoint. */
-  def checkpointCycled(tag: String, df: DataFrame): DataFrame = {
-    val out = df.localCheckpoint()
-    // Try-guarded: the displaced entry may belong to a PREVIOUS, now
-    // stopped SparkSession (multi-session processes — ClusterSmoke,
-    // test harnesses); unpersist on a dead context throws and the
-    // blocks are already gone with it.
-    Option(cycledCheckpoints.put(tag, checkpointedRdds(out)))
-      .foreach(_.foreach(r =>
-        scala.util.Try(r.unpersist(blocking = false))))
-    out
   }
 
-  /** Free a tag's previously-cycled checkpoint blocks WITHOUT creating a
-    * new checkpoint — for code paths that replace a formerly-checkpointed
-    * result with a driver-computed LocalRelation (no blocks of its own)
-    * but must keep the tag's cycling lifecycle honest: a prior
-    * distributed-path invocation's blocks still get freed. */
-  def cycleCheckpointTag(tag: String): Unit =
-    Option(cycledCheckpoints.put(tag, Seq.empty))
-      .foreach(_.foreach(r =>
-        scala.util.Try(r.unpersist(blocking = false))))
+  private final class SessionSlot {
+    var app: String = null
+    var value: Any = null
+  }
+
+  private val sessionSlots =
+    new java.util.concurrent.ConcurrentHashMap[String, SessionSlot]()
 }

@@ -724,10 +724,7 @@ object Codecs {
     // branch) read `per`; materialize the decode ONCE so the dominant
     // cost — ImageIO encode+decode of every payload — is not paid twice
     // per run (the repo's standing multi-consumer pattern).
-    // tag carries the dataset like every other site (":$d"): a bare tag
-    // would let a second dataset's construction unpersist blocks a live
-    // first-dataset frame still references
-    val perCk = graft.Tables.checkpointCycled(s"q303_per:$d", per)
+    val perCk = per.localCheckpoint()
     // corpus-level lossiness evidence (1 row, broadcast back)
     val lossy = perCk.agg(sum(col("mae_milli")).as("tot_err"))
     perCk

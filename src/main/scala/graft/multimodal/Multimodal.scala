@@ -318,7 +318,7 @@ object Multimodal {
           new java.io.ByteArrayInputStream(encodeImage(id)))
         (id, dHash(img))
       }).toDF("doc_id", "dh")
-    val sigC = graft.Tables.checkpointCycled("dhash-sig", sig)
+    val sigC = sig.localCheckpoint()
     val chunks = sigC.select(col("doc_id"), col("dh"), explode(array(
       (0 until 4).map(c => struct(lit(c).as("c"),
         expr(s"(dh >> ${c * 16}) & 65535").as("v"))): _*)).as("ck"))
@@ -425,7 +425,7 @@ object Multimodal {
     * equi-join the planner broadcasts at this SF and shuffle-joins at
     * scale. Payloads never shuffle; only (id, 4 ints, caption) rows
     * do. The decoded-feature frame is materialized ONCE
-    * (checkpointCycled): it feeds THREE plan consumers (img, the true
+    * (localCheckpoint): it feeds THREE plan consumers (img, the true
     * caption join, the ⊕1 swap join), and the decode map is opaque to
     * Spark's subtree dedup — without the barrier every consumer re-ran
     * the full encode→ImageIO-decode pass (3 decodes per image; at
@@ -434,8 +434,7 @@ object Multimodal {
     * 1.0 s at sf0.1/32c. */
   def q228ClipAlign(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val rows = graft.Tables.checkpointCycled(s"q228-feat:$d",
-      documents(s, d).select(col("doc_id")).as[Long]
+    val rows = documents(s, d).select(col("doc_id")).as[Long]
       .mapPartitions(_.map { id =>
         val (_, wd, hd, sumd) = decodeImage(encodeImage(id))
         val (wc, hc) = plantedDims(id)
@@ -443,7 +442,8 @@ object Multimodal {
           + (if (id % CAP_BAD_MOD == 0) 1L else 0L)) % TONE_MOD
         (id, wd.toLong, hd.toLong, sumd,
           s"img depicts grid ${wc}x$hc tone $tone")
-      }).toDF("doc_id", "wd", "hd", "sumd", "caption"))
+      }).toDF("doc_id", "wd", "hd", "sumd", "caption")
+      .localCheckpoint()
     val capt = rows.select(col("doc_id"),
       regexp_extract(col("caption"), "grid (\\d+)x", 1).cast("long").as("wc"),
       regexp_extract(col("caption"), "x(\\d+) tone", 1).cast("long").as("hc"),
@@ -677,7 +677,7 @@ object Multimodal {
         explode(frameSample(col("payload"), VID_FRAME_BYTES, 1)).as("frame"))
       .select(col("doc_id"), md5(hex(col("frame"))).as("fp"))
       .distinct()
-    val fC = graft.Tables.checkpointCycled("video-frames", f)
+    val fC = f.localCheckpoint()
     val nf = fC.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val m = fC.select(col("doc_id").as("i"), col("fp"))
       .join(fC.select(col("doc_id").as("j"), col("fp")), Seq("fp"))

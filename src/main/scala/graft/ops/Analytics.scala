@@ -933,12 +933,13 @@ object Analytics {
     // the ≤ |types|·168 cell ledger feeds the dow rollup, the type
     // totals AND the peak argmax — materialize it once instead of
     // re-scanning the fact table per consumer
-    val cells = graft.Tables.checkpointCycled("weekly-cells", events(s, d)
+    val cells = events(s, d)
       .select(col("event_type"),
         expr("(ts div 86400000000000 + 4) % 7").as("dow"),
         expr("(ts div 3600000000000) % 24").as("hod"))
       .groupBy(col("event_type"), col("dow"), col("hod"))
-      .agg(count(lit(1)).as("c")))
+      .agg(count(lit(1)).as("c"))
+      .localCheckpoint()
     val byDow = cells.groupBy(col("event_type"), col("dow"))
       .agg(sum(col("c")).as("n_events"))
     val tot = byDow.groupBy(col("event_type").as("et"))
@@ -1014,15 +1015,15 @@ object Analytics {
     // User panel materialized ONCE (r16): the global-moments aggregate
     // and the per-variant rollup each re-ran the events scan + split
     // otherwise (4 events scans in the executed plan). |users| rows.
-    val panel = graft.Tables.checkpointCycled(s"q270-panel:$d",
-      ev.crossJoin(broadcast(split))
+    val panel = ev.crossJoin(broadcast(split))
       .groupBy(col("user_id"))
       .agg(sum(when(col("ts") < col("split_ns"), col("cents"))
         .otherwise(0L)).as("pre"),
         sum(when(col("ts") >= col("split_ns"), col("cents"))
           .otherwise(0L)).as("post"))
       .withColumn("variant", expr(
-        "cast(conv(substr(md5(cast(user_id as string)), 1, 4), 16, 10) as bigint) % 2")))
+        "cast(conv(substr(md5(cast(user_id as string)), 1, 4), 16, 10) as bigint) % 2"))
+      .localCheckpoint()
     val mom = panel.agg(count(lit(1)).as("n"),
       sum(col("pre").cast(d38)).as("spre"),
       sum(col("post").cast(d38)).as("spost"),
@@ -1130,7 +1131,7 @@ object Analytics {
       .select(col("user_id"),
         expr("cast(round(value * 100) as bigint)").as("cents"))
       .groupBy(col("user_id")).agg(sum(col("cents")).as("cents"))
-    val stats = graft.Tables.checkpointCycled(s"perm-stats:$d", panel
+    val stats = panel
       .select(col("user_id"), col("cents"),
         explode(expr(s"sequence(0, $PERM_K)")).as("p"))
       .withColumn("g", expr(
@@ -1149,7 +1150,8 @@ object Analytics {
                cast(p as string))) as bigint)
              else cast(round(abs(cast(s1 as double) / n1
                - cast(s - s1 as double) / (n - n1)) * 1000) as bigint) end""")
-        .as("diff_milli")))
+        .as("diff_milli"))
+        .localCheckpoint()
     val obs = stats.filter(col("p") === 0)
       .select(col("diff_milli").as("obs_milli"))
     stats.filter(col("p") > 0)
@@ -1225,7 +1227,7 @@ object Analytics {
       .agg(count(lit(1)).as("n"),
         sum(expr("cast(o_totalprice as decimal(12,2)) * 100").cast("long"))
           .as("s"))
-    val cc = graft.Tables.checkpointCycled(s"simpson-cells:$d", cells)
+    val cc = cells.localCheckpoint()
     val a = cc.select(col("seg").as("seg_a"), col("nat"),
       col("n").as("na"), col("s").as("sa"))
     val b = cc.select(col("seg").as("seg_b"), col("nat"),

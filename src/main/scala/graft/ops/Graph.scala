@@ -33,54 +33,28 @@ import graft.Tables._
 object Graph {
 
   /** Distinct (order o, part p) basket rows — one shuffle, reused by
-    * every consumer via a cycled local checkpoint at the call site. */
+    * every consumer through the local checkpoint in `basketsShared`. */
   def baskets(s: SparkSession, d: String): DataFrame =
     lineitem(s, d)
       .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
       .distinct()
 
-  /** Session-lifetime memo of the shared graph inputs, keyed on data
-    * path: the basket table and the minSup=2 pair/edge table are the
-    * SAME derivation for q156–q159, so they are materialized
-    * (localCheckpoint) once per dataset and every graph query reads
-    * the cut lineage — the q134 amortized-layout stance applied to a
-    * derived table instead of a physical one. In a production pipeline
+  /** The shared graph inputs, materialized (localCheckpoint) once per
+    * (session, dataset): the basket table and the minSup=2 pair/edge
+    * table are the SAME derivation for q156–q159, so every graph query
+    * reads the cut lineage — the q134 amortized-layout stance applied to
+    * a derived table instead of a physical one. In a production pipeline
     * this is the curated co-purchase edge table the graph workload
     * shares; per-query rebuilds would re-shuffle the fact four times.
     * (q156's minSup=3 pair table is the minSup=2 table filtered —
     * HAVING floors compose monotonically.) */
-  private val memo = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  // A localCheckpoint'd DataFrame is bound to the session that built it,
-  // so a memo hit is only valid for the SAME live session — test suites
-  // and Verify/Bench each build their own. compute() revalidates under
-  // the map lock and rebuilds on a session change (the stale entry's
-  // checkpoint RDDs die with their stopped session; nothing to unpersist).
-  private val memoLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  private def memoized(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    // Serialize per KEY on a dedicated monitor, not the memo map's bin
-    // lock: the build runs Spark jobs, and map.compute would block
-    // every unrelated key hashing to the same bin for the duration.
-    // Same-key waiters SHOULD block (get-or-build-once semantics — a
-    // racing duplicate build would also let checkpointCycled's per-tag
-    // cycling unpersist the winner's blocks). The lock objects are
-    // key-count-bounded driver objects, never evicted — fine for the
-    // handful of shared graph artifacts this memo serves.
-    val lock = memoLocks.computeIfAbsent(key, _ => new Object)
-    lock.synchronized {
-      val cached = memo.get(key)
-      if (cached != null && (cached.sparkSession eq s)) cached
-      else { val built = checkpointCycled(key, build); memo.put(key, built); built }
-    }
-  }
-
   def basketsShared(s: SparkSession, d: String): DataFrame =
-    memoized(s, s"graph_baskets:$d")(baskets(s, d))
+    perSession(s, s"graph_baskets:$d")(baskets(s, d).localCheckpoint())
 
   /** Shared minSup=2 oriented edge table (p1 < p2) with pair support. */
   def pairs2Shared(s: SparkSession, d: String): DataFrame =
-    memoized(s, s"graph_pairs2:$d")(pairCounts(basketsShared(s, d), 2))
+    perSession(s, s"graph_pairs2:$d")(
+      pairCounts(basketsShared(s, d), 2).localCheckpoint())
 
   /** Co-purchase pair counts: (p1 < p2, pair_orders = co-occurrence
     * count), kept when pair_orders >= minSup. The apriori-style
@@ -193,24 +167,25 @@ object Graph {
     * every triangle is counted exactly once and the count is
     * orientation-invariant — which is what lets the oracle run the
     * naive a<b<c three-way self-join instead. */
-  def triangleStats(ep: DataFrame, tag: String): DataFrame = {
+  def triangleStats(ep: DataFrame): DataFrame = {
     // deg is read FOUR times (two orientation joins, the wedge-count
     // aggregate) and oe THREE times (both wedge sides + the closing-
     // edge probe, each under a different projection so ReuseExchange
     // can't unify them) — materialize each once instead of re-running
     // the degree aggregate / orientation joins per consumer.
-    val deg = graft.Tables.checkpointCycled(s"$tag-deg",
-      ep.select(col("p1").as("v")).unionAll(ep.select(col("p2").as("v")))
-        .groupBy(col("v")).agg(count(lit(1)).as("dg")))
+    val deg = ep.select(col("p1").as("v")).unionAll(ep.select(col("p2").as("v")))
+      .groupBy(col("v")).agg(count(lit(1)).as("dg"))
+      .localCheckpoint()
     val withDeg = ep
       .join(deg.select(col("v").as("p1"), col("dg").as("d1")), "p1")
       .join(deg.select(col("v").as("p2"), col("dg").as("d2")), "p2")
     val k1 = struct(col("d1").as("dg"), col("p1").as("v"))
     val k2 = struct(col("d2").as("dg"), col("p2").as("v"))
-    val oe = graft.Tables.checkpointCycled(s"$tag-oe", withDeg.select(
+    val oe = withDeg.select(
       when(k1 < k2, col("p1")).otherwise(col("p2")).as("src"),
       when(k1 < k2, k2).otherwise(k1).as("kd"))
-      .withColumn("dst", col("kd.v")))
+      .withColumn("dst", col("kd.v"))
+      .localCheckpoint()
     val e1 = oe.select(col("src"), col("kd").as("ka"))
     val e2 = oe.select(col("src").as("src2"), col("kd").as("kb"))
     val e3 = oe.select(col("src").as("a3"), col("dst").as("b3"))
@@ -231,8 +206,7 @@ object Graph {
     * (pair support >= 2). One row out; the closing-edge probe is the
     * only join proportional to wedge count. */
   def q157Triangles(s: SparkSession, d: String): DataFrame =
-    triangleStats(pairs2Shared(s, d).select(col("p1"), col("p2")),
-      tag = s"tri:$d")
+    triangleStats(pairs2Shared(s, d).select(col("p1"), col("p2")))
 
   val o157 = """
     WITH b AS (SELECT DISTINCT l_orderkey o, l_partkey p FROM lineitem),
@@ -267,7 +241,7 @@ object Graph {
     * hash-match oracle (3 unrolled CTE iterations in DuckDB).
     *
     * Scale shape: the adjacency (src, dst, deg) is materialized once
-    * (cycled checkpoint) and each iteration is one equi-join + one
+    * (localCheckpoint) and each iteration is one equi-join + one
     * grouped aggregate — rank mass moves as map-side partial sums. On
     * a cluster the adjacency would be bucketed by src so the per-step
     * join never re-exchanges the big side; the rank table (|V| rows)
@@ -277,11 +251,11 @@ object Graph {
     * ~10^6 vertices the per-vertex init (and teleport constant) must
     * scale down to keep the TOTAL at ~10^18 — same arithmetic,
     * smaller constants. */
-  def pageRanks(ep: DataFrame, iters: Int, tag: String): DataFrame = {
+  def pageRanks(ep: DataFrame, iters: Int): DataFrame = {
     val e = ep.select(col("p1").as("src"), col("p2").as("dst"))
       .unionAll(ep.select(col("p2").as("src"), col("p1").as("dst")))
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("dg"))
-    val adj = checkpointCycled(s"${tag}_adj", e.join(deg, "src"))
+    val adj = e.join(deg, "src").localCheckpoint()
     var r = deg.select(col("src").as("id"), lit(1000000000000L).as("r"))
     for (_ <- 1 to iters) {
       r = adj.join(r, col("src") === col("id"))
@@ -295,7 +269,7 @@ object Graph {
   /** q158: top-25 co-purchase parts by 3-iteration exact PageRank. */
   def q158PageRank(s: SparkSession, d: String): DataFrame = {
     val ep = pairs2Shared(s, d).select(col("p1"), col("p2"))
-    pageRanks(ep, 3, "q158")
+    pageRanks(ep, 3)
       .select(col("id").as("part_id"), col("r").as("rank_scaled"))
       .orderBy(desc("rank_scaled"), col("part_id"))
       .limit(25)
@@ -343,12 +317,12 @@ object Graph {
     * localCheckpointed per layer — the lineage cut every iterative
     * dataflow needs, without which the plan tree doubles per hop and
     * the optimizer re-derives the whole prefix each step. */
-  def bfsLayers(ep: DataFrame, hops: Int, tag: String): DataFrame = {
+  def bfsLayers(ep: DataFrame, hops: Int): DataFrame = {
     val e = ep.select(col("p1").as("src"), col("p2").as("dst"))
       .unionAll(ep.select(col("p2").as("src"), col("p1").as("dst")))
-    val adj = checkpointCycled(s"${tag}_adj", e)
-    var layers = checkpointCycled(s"${tag}_l0",
-      ep.agg(min(col("p1")).as("v")).withColumn("dist", lit(0L)))
+    val adj = e.localCheckpoint()
+    var layers = ep.agg(min(col("p1")).as("v")).withColumn("dist", lit(0L))
+      .localCheckpoint()
     var frontier = layers
     for (k <- 1 to hops) {
       val next = adj
@@ -356,7 +330,7 @@ object Graph {
         .select(col("dst").as("v")).distinct()
         .join(layers.select(col("v")), Seq("v"), "left_anti")
         .withColumn("dist", lit(k.toLong))
-      frontier = checkpointCycled(s"${tag}_l$k", next)
+      frontier = next.localCheckpoint()
       layers = layers.unionAll(frontier)
     }
     layers
@@ -366,7 +340,7 @@ object Graph {
     * graph — (part_id, hop distance) for every reached vertex. */
   def q159BfsKhop(s: SparkSession, d: String): DataFrame = {
     val ep = pairs2Shared(s, d).select(col("p1"), col("p2"))
-    bfsLayers(ep, 3, "q159")
+    bfsLayers(ep, 3)
       .select(col("v").as("part_id"), col("dist"))
       .orderBy(col("dist"), col("part_id"))
   }
@@ -411,21 +385,21 @@ object Graph {
     * footprint as PageRank's rank table; on a cluster the adjacency
     * is bucketed on src (q134) making each round exchange-free on the
     * big side. */
-  def labelProp(ep: DataFrame, iters: Int, tag: String): DataFrame = {
+  def labelProp(ep: DataFrame, iters: Int): DataFrame = {
     val e = ep.select(col("p1").as("src"), col("p2").as("dst"))
       .unionAll(ep.select(col("p2").as("src"), col("p1").as("dst")))
-    val adj = checkpointCycled(s"${tag}_adj", e)
-    var lab = checkpointCycled(s"${tag}_lab0",
-      adj.select(col("src").as("v")).distinct().withColumn("lab", col("v")))
+    val adj = e.localCheckpoint()
+    var lab = adj.select(col("src").as("v")).distinct().withColumn("lab", col("v"))
+      .localCheckpoint()
     val w = Window.partitionBy(col("v")).orderBy(desc("c"), col("lab"))
     for (k <- 1 to iters) {
       val counts = adj
         .join(lab.select(col("v").as("src"), col("lab")), "src")
         .groupBy(col("dst").as("v"), col("lab"))
         .agg(count(lit(1)).as("c"))
-      lab = checkpointCycled(s"${tag}_lab$k",
-        counts.withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1).select(col("v"), col("lab")))
+      lab = counts.withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1).select(col("v"), col("lab"))
+        .localCheckpoint()
     }
     lab
   }
@@ -434,7 +408,7 @@ object Graph {
     * graph — (part_id, community) for every vertex. */
   def q163LabelProp(s: SparkSession, d: String): DataFrame = {
     val ep = pairs2Shared(s, d).select(col("p1"), col("p2"))
-    labelProp(ep, 2, "q163")
+    labelProp(ep, 2)
       .select(col("v").as("part_id"), col("lab").as("community"))
       .orderBy(col("part_id"))
   }
@@ -474,18 +448,18 @@ object Graph {
     * float path sums. Per round: one join against the checkpointed
     * adjacency + one map-side-combinable min agg; only the dist table
     * (≤ |V| rows) carries between rounds. */
-  def shortestPaths(epw: DataFrame, rounds: Int, tag: String): DataFrame = {
+  def shortestPaths(epw: DataFrame, rounds: Int): DataFrame = {
     val e = epw.select(col("p1").as("src"), col("p2").as("dst"), col("w"))
       .unionAll(epw.select(col("p2").as("src"), col("p1").as("dst"), col("w")))
-    val adj = checkpointCycled(s"${tag}_adj", e)
-    var dist = checkpointCycled(s"${tag}_d0",
-      epw.agg(min(col("p1")).as("v")).withColumn("dist", lit(0L)))
+    val adj = e.localCheckpoint()
+    var dist = epw.agg(min(col("p1")).as("v")).withColumn("dist", lit(0L))
+      .localCheckpoint()
     for (k <- 1 to rounds) {
       val relaxed = adj
         .join(dist.select(col("v").as("src"), col("dist").as("ds")), "src")
         .select(col("dst").as("v"), (col("ds") + col("w")).as("dist"))
-      dist = checkpointCycled(s"${tag}_d$k",
-        dist.unionAll(relaxed).groupBy(col("v")).agg(min(col("dist")).as("dist")))
+      dist = dist.unionAll(relaxed).groupBy(col("v")).agg(min(col("dist")).as("dist"))
+        .localCheckpoint()
     }
     dist
   }
@@ -496,7 +470,7 @@ object Graph {
     val epw = pairs2Shared(s, d)
       .select(col("p1"), col("p2"),
         expr("1000000 div pair_orders").as("w"))
-    shortestPaths(epw, 3, "q164")
+    shortestPaths(epw, 3)
       .select(col("v").as("part_id"), col("dist").as("path_cost"))
       .orderBy(col("part_id"))
   }
@@ -589,14 +563,14 @@ object Graph {
     * Each round is ONE degree aggregate over the surviving edge set
     * (two semi-joins against the alive set, map-side combined count)
     * — the q158/q163/q164 k-bounded synchronous-round shape, with the
-    * alive frontier checkpointCycled so lineage stays flat. The edge
+    * alive frontier localCheckpointed so lineage stays flat. The edge
     * table is the memoized q163 pair graph; only (vertex, degree)
     * ledgers shuffle. Oracle: $CORE_ROUNDS unrolled CTE rounds. */
   def q235KCore(s: SparkSession, d: String): DataFrame = {
     val ep = pairs2Shared(s, d).select(col("p1"), col("p2"))
-    val edges = graft.Tables.checkpointCycled(s"kcore-edges:$d",
-      ep.select(col("p1").as("src"), col("p2").as("dst"))
-        .unionAll(ep.select(col("p2").as("src"), col("p1").as("dst"))))
+    val edges = ep.select(col("p1").as("src"), col("p2").as("dst"))
+      .unionAll(ep.select(col("p2").as("src"), col("p1").as("dst")))
+      .localCheckpoint()
     var alive = edges.select(col("src").as("v")).distinct()
     val peeled = scala.collection.mutable.ListBuffer.empty[DataFrame]
     for (r <- 1 to CORE_ROUNDS) {
@@ -611,9 +585,9 @@ object Graph {
       // and the peeled rows now derive from the one materialized pass;
       // `alive` is a filter over the checkpoint, so per-round lineage
       // stays flat exactly as before.
-      val withDeg = graft.Tables.checkpointCycled(s"kcore-wd-$r:$d",
-        alive.join(deg, Seq("v"), "left")
-          .withColumn("deg", coalesce(col("deg"), lit(0L))))
+      val withDeg = alive.join(deg, Seq("v"), "left")
+        .withColumn("deg", coalesce(col("deg"), lit(0L)))
+        .localCheckpoint()
       peeled += withDeg.filter(col("deg") < K_CORE)
         .select(col("v"), lit("peeled").as("status"),
           lit(r.toLong).as("peel_round"), col("deg"))

@@ -125,14 +125,15 @@ object Lifecycle {
     // |customers|-row RFM panel materialized ONCE (r16): the fence
     // percentiles and the scoring pass each re-ran the orders
     // aggregate otherwise (4 orders scans in the executed plan).
-    val rfm = graft.Tables.checkpointCycled(s"q202-rfm:$d", orders(s, d)
+    val rfm = orders(s, d)
       .groupBy(col("o_custkey"))
       .agg(to_date(max(col("o_orderdate"))).as("last_d"),
         count(lit(1)).as("f"),
         sum((dec2(col("o_totalprice")) * 100).cast("long")).as("m"))
       .crossJoin(broadcast(asOf))
       .select(col("o_custkey"), datediff(col("d1"), col("last_d"))
-        .cast("long").as("r"), col("f"), col("m")))
+        .cast("long").as("r"), col("f"), col("m"))
+        .localCheckpoint()
     val fences = rfm.agg(
       expr("percentile(r, 0.25)").as("r1"), expr("percentile(r, 0.5)").as("r2"),
       expr("percentile(r, 0.75)").as("r3"),

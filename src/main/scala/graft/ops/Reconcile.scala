@@ -101,7 +101,7 @@ object Reconcile {
     // materialize once (the q117 pattern) so the census subtree (two
     // full signature scans + full-outer) isn't evaluated per consumer.
     val changed = broadcast(
-      checkpointCycled("q105-changed", changedBuckets(s, d)))
+      changedBuckets(s, d).localCheckpoint())
     // bucket prune FIRST, md5 after: only surviving buckets pay the
     // row-signature hash on the re-read (plan-visible: the md5 Project
     // sits above the broadcast bucket join now, below it before r17)
@@ -390,8 +390,8 @@ object Reconcile {
     // bucket-diff subtree (the r6/r7 plan audits counted 28 exchanges
     // here). The list is changed-rows-sized (a few % of the snapshot) —
     // exactly what a delta-maintenance job would persist between steps.
-    val changedKeys = checkpointCycled("q117-changed",
-      q105SnapshotDiff(s, d).select(col("o_orderkey").as("k")))
+    val changedKeys = q105SnapshotDiff(s, d).select(col("o_orderkey").as("k"))
+      .localCheckpoint()
     val signed = nw.join(broadcast(changedKeys), Seq("k"), "left_semi")
         .withColumn("sign", lit(1L))
       .unionByName(

@@ -433,11 +433,12 @@ object Relational {
     // un-checkpointed shape re-ran the events scan + md5 + distinct
     // per consumer (3 events scans in the executed plan; the HLL
     // tripwire leg is the intrinsic extra pass).
-    val hh = graft.Tables.checkpointCycled(s"q49-hh:$d", events(s, d)
+    val hh = events(s, d)
       .select(col("event_type"),
         expr("cast(conv(substr(md5(cast(user_id as string)),1,15),16,10) as bigint)")
           .as("h"))
-      .distinct())
+      .distinct()
+      .localCheckpoint()
     val exact = hh.groupBy(col("event_type"))
       .agg(count(lit(1)).as("exact_users"))
     val bottomK = graft.plans.TopKPerGroup(
@@ -533,9 +534,9 @@ object Relational {
     // the persisted per-group sketch state (k smallest hashes); two
     // consumers (per-group estimate, union merge) — materialize the
     // ≤ k·|groups| rows once
-    val kept = graft.Tables.checkpointCycled(s"q90-kmv:$d",
-      graft.plans.TopKPerGroup(hh, groupCols = Seq("event_type"),
-        sortCols = Seq("h" -> false), k = K))
+    val kept = graft.plans.TopKPerGroup(hh, groupCols = Seq("event_type"),
+      sortCols = Seq("h" -> false), k = K)
+      .localCheckpoint()
     val perGroup = kept.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_sketch"), max(col("h")).as("kth_hash"))
       .join(events(s, d).groupBy(col("event_type"))

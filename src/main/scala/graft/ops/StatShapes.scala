@@ -242,9 +242,10 @@ object StatShapes {
     // cumulative window and the per-group totals, and without the
     // barrier each consumer re-ran the phase-1 fact scan (3 lineitem
     // scans in the executed plan; the design's budget is 2).
-    val buckets = graft.Tables.checkpointCycled(s"q194-buckets:$d", base
+    val buckets = base
       .groupBy(col("l_returnflag"), expr(s"v div $WMED_BUCKET").as("bkt"))
-      .agg(sum(col("w")).as("bw")))
+      .agg(sum(col("w")).as("bw"))
+      .localCheckpoint()
     val bcum = buckets.withColumn("cum", sum(col("bw")).over(
       Window.partitionBy(col("l_returnflag")).orderBy(col("bkt"))))
     val tot = buckets.groupBy(col("l_returnflag").as("tf"))
@@ -391,13 +392,14 @@ object StatShapes {
   def q258LDiversity(s: SparkSession, d: String): DataFrame = {
     // the (class, sensitive) ledger is |classes|·|segments| rows and
     // feeds four derived aggregates — materialize once
-    val cells = graft.Tables.checkpointCycled("ldiv-cells", t(s, d, "customer")
+    val cells = t(s, d, "customer")
       .select(col("c_nationkey").cast("long").as("nat"),
         expr("(cast(round(c_acctbal * 100) as bigint) + 100000L) div 100000L")
           .as("band"),
         col("c_mktsegment").as("sv"))
       .groupBy(col("nat"), col("band"), col("sv"))
-      .agg(count(lit(1)).as("nv")))
+      .agg(count(lit(1)).as("nv"))
+      .localCheckpoint()
     val cls = cells.groupBy(col("nat"), col("band"))
       .agg(sum(col("nv")).as("k_rows"),
         countDistinct(col("sv")).as("l_distinct"))

@@ -49,21 +49,11 @@ object Pca {
     * max-norm top component (1e-6 scale), and the Rayleigh eigenvalue. */
   case class PcaModel(mean: Array[Long], v: Array[Long], lambda: Long)
 
-  /** Fit cache, keyed per (application, dataset) — the train-once /
+  /** The fit, once per (session, dataset) — the train-once /
     * apply-many lifecycle (the BPE-merge / ANN-index stance): q217 IS
-    * the training run, q218 applies the component. The fit is built
-    * OUTSIDE the map lock (get/putIfAbsent — it runs a Spark job). */
-  private val fitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, PcaModel]()
-
-  private[graft] def fitPca(s: SparkSession, d: String): PcaModel = {
-    val key = s"${s.sparkContext.applicationId}|$d|$PCA_DIM|$PCA_ITERS"
-    val cached = fitCache.get(key)
-    if (cached != null) return cached
-    val fit = fitPcaUncached(s, d)
-    val prev = fitCache.putIfAbsent(key, fit)
-    if (prev != null) prev else fit
-  }
+    * the training run, q218 applies the component. */
+  private[graft] def fitPca(s: SparkSession, d: String): PcaModel =
+    perSession(s, s"pca-fit:$d|$PCA_DIM|$PCA_ITERS")(fitPcaUncached(s, d))
 
   private def fitPcaUncached(s: SparkSession, d: String): PcaModel = {
     // ONE partition-wise pass accumulates the exact raw moments
@@ -433,7 +423,15 @@ object Pca {
       .orderBy(col("stage"))
   }
 
-  val o249: String = pcaCtes + s""",
+  /** The o249 CTEs read more than once. DuckDB 1.0 inlines a CTE at
+    * each reference, so without `AS MATERIALIZED` the covariance
+    * self-join, the power steps and both audit legs each recomputed the
+    * chain below them: a working set DuckDB pins rather than spills,
+    * which ran out of memory on a 15 GB machine even at sf0.001. */
+  private val O249_REUSED = Seq("e", "m", "c", "cov", "cp", "dots", "ms",
+    s"v$PCA_ITERS") ++ (1 to PCA_ITERS).map(r => s"u$r")
+
+  val o249: String = (pcaCtes + s""",
     den AS (SELECT SUM(v * v) AS den FROM v$PCA_ITERS),
     p AS (SELECT c.vec_id, CAST(SUM(c.c * v.v) AS HUGEINT) AS p
           FROM c JOIN v$PCA_ITERS v USING (i) GROUP BY c.vec_id),
@@ -461,7 +459,8 @@ object Pca {
       FROM ms, dots
       UNION ALL
       SELECT 'whitened', n_vecs, n_pairs, mw, dw FROM ms, dots)
-    ORDER BY stage"""
+    ORDER BY stage""").replaceAll(
+    O249_REUSED.mkString("\\b(", "|", ") AS \\("), "$1 AS MATERIALIZED (")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q217_pca_power"  -> (q217PcaPower _),

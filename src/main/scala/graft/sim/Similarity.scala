@@ -351,11 +351,8 @@ object Similarity {
                                  floor: Double, tag: String): DataFrame = {
     // The approximate plan (bucketed search + window ranking) is
     // referenced twice below — once by the evidence join, once as the
-    // returned rows. checkpointCycled materializes it once per
-    // invocation AND frees the previous invocation's blocks (bench
-    // reps, repeated verify runs) so evidence checkpoints never
-    // accumulate across a session.
-    val resC = checkpointCycled(s"ann-evidence-$tag", res)
+    // returned rows — so it is materialized once per invocation.
+    val resC = res.localCheckpoint()
     // one pass over ONE instance of the sampled exact baseline (it is
     // the expensive side of the evidence join): a left join marks hits,
     // count(hit)/count(*) is the recall — no second scan for the
@@ -471,14 +468,14 @@ object Similarity {
     // explode and both verify joins), and the JL projection + sketch
     // fold re-ran per consumer — 8 embeddings scans in the executed
     // plan, i.e. 3 full projection passes at 100 TB. One pass now.
-    val sk = graft.Tables.checkpointCycled(s"q236-sk:$d",
-      Pca.jlProjectFrame(base.unionAll(aug))
+    val sk = Pca.jlProjectFrame(base.unionAll(aug))
       .withColumn("sk", expr(
         s"""aggregate(zip_with(y, sequence(0L, ${SRP_BITS - 1}L),
             (v, j) -> case when v > 0 then shiftleft(1L, cast(j as int))
                       else 0L end), 0L, (acc, x) -> acc + x)"""))
       .withColumn("na2", expr("aggregate(c, 0L, (acc, x) -> acc + x * x)"))
-      .select(col("vec_id"), col("c"), col("sk"), col("na2")))
+      .select(col("vec_id"), col("c"), col("sk"), col("na2"))
+      .localCheckpoint()
     val chunks = sk.select(col("vec_id"), col("sk"),
       explode(array(
         struct(lit(0).as("ci"), expr("sk % 256").as("cv")),
@@ -598,10 +595,11 @@ object Similarity {
     // the contingency table is ≤ 256·|labels| rows and feeds FOUR
     // downstream aggregates — materialize it once instead of
     // re-deriving the JL sketch per consumer
-    val cont = graft.Tables.checkpointCycled("ari-cont", sk
+    val cont = sk
       .join(embeddings(s, d).select(col("vec_id"),
         col("label").cast("long").as("label")), Seq("vec_id"))
-      .groupBy(col("cluster"), col("label")).agg(count(lit(1)).as("nij")))
+      .groupBy(col("cluster"), col("label")).agg(count(lit(1)).as("nij"))
+      .localCheckpoint()
     val stats = cont.agg(
       sum(col("nij")).as("n"),
       countDistinct(col("cluster")).as("n_clusters"),
@@ -905,26 +903,11 @@ object Similarity {
     FROM dev JOIN mad ON label = gl
     GROUP BY 1 ORDER BY label"""
 
-  private val embedPairCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   /** q47's exact pair verdict table, materialized once per (session,
     * dataset) for downstream consumers (q220) — the embed-side twin of
-    * `Dedup.cachedTextPairs`, same get/putIfAbsent-outside-the-lock
-    * idiom and applicationId keying. */
-  def cachedEmbedPairs(s: SparkSession, d: String): DataFrame = {
-    val key = s"${s.sparkContext.applicationId}|$d"
-    val hit = embedPairCache.get(key)
-    if (hit != null) return hit
-    val built = q47EmbedNearDup(s, d).localCheckpoint()
-    val prev = embedPairCache.putIfAbsent(key, built)
-    if (prev != null) {
-      // racer lost: free its checkpoint blocks instead of leaking them
-      // for the application's lifetime
-      graft.Tables.checkpointedRdds(built).foreach(_.unpersist(blocking = false))
-      prev
-    } else built
-  }
+    * `Dedup.cachedTextPairs`. */
+  def cachedEmbedPairs(s: SparkSession, d: String): DataFrame =
+    perSession(s, s"embed-pairs:$d")(q47EmbedNearDup(s, d).localCheckpoint())
 
   /** The 1-bucket-theta exact pair engine behind q47, parameterized on
     * the vector set so audit stages (q204's recall evidence) can run it
@@ -983,25 +966,16 @@ object Similarity {
     * corpus at τ=0.45 it under-recalls by design — SimilaritySpec
     * asserts both facts (equality on planted near-dups at τ=0.8, the
     * documented miss on the margin-free corpus). */
-  def embedNearDupLsh(s: SparkSession, df: DataFrame, tau: Double,
-      tag: String): DataFrame = {
+  def embedNearDupLsh(s: SparkSession, df: DataFrame, tau: Double): DataFrame = {
     import graft.functions.VectorFunctions.dot_product
     // Vector+norm frame materialized ONCE (r16): it feeds the bucket
     // entries (self-joined) and both verify joins, and without the
     // barrier each consumer re-derived the input frame — for q87 that
     // meant re-building the planted-margin fixture up to 4× (8
-    // embeddings scans in the executed plan). Tag is CALLER-SUPPLIED
-    // (r17, per advice): the previous semanticHash(input-plan) key
-    // could collide across two concurrently-live input frames, and the
-    // second call's cycle would unpersist the first frame's
-    // localCheckpoint blocks — unrecoverable, since the checkpoint
-    // truncates lineage. tau is deliberately NOT in the tag: the
-    // materialized frame (vec_id, embedding, nrm) does not depend on
-    // it, so tau-distinct calls share one cycle slot per tag.
-    val e = graft.Tables.checkpointCycled(
-      s"embed-lsh-e:$tag",
-      df.select(col("vec_id"), col("embedding"),
-        sqrt(dot_product(col("embedding"), col("embedding"))).as("nrm")))
+    // embeddings scans in the executed plan).
+    val e = df.select(col("vec_id"), col("embedding"),
+      sqrt(dot_product(col("embedding"), col("embedding"))).as("nrm"))
+      .localCheckpoint()
     val entries = bucketEntries(
       e.select(col("vec_id").as("nid"), col("embedding").as("nv")), "nv")
       .select(col("tb"), col("nid"))
@@ -1061,7 +1035,7 @@ object Similarity {
   }
 
   def q87MarginNearDup(s: SparkSession, d: String): DataFrame =
-    embedNearDupLsh(s, marginFixture(s, d), MARGIN_TAU, tag = s"q87:$d")
+    embedNearDupLsh(s, marginFixture(s, d), MARGIN_TAU)
 
   /** Oracle = the EXACT pair join over the same fixture: under the
     * margin the LSH candidates + exact verify must return identical
@@ -1118,27 +1092,6 @@ object Similarity {
   val KMEANS_ITERS = 2
   val FIT_SAMPLE = 1000
 
-  /** Trained-quantizer cache: an IVF index fits its coarse quantizer
-    * once and serves many queries with it. The fit is deterministic
-    * (integer-exact, no RNG, fixed init), so memoizing per (dataset,
-    * params) changes no results — it just reflects the real lifecycle.
-    * Built OUTSIDE the map's bin lock (the fit runs Spark jobs;
-    * computeIfAbsent would hold a ConcurrentHashMap bin across them,
-    * blocking every other thread hashing to that bin for the duration).
-    * A concurrent racer may fit twice; the result is deterministic
-    * driver-side data, so the duplicate is garbage, not a leak. */
-  private val quantizerIntCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, Array[Long])]]()
-
-  private def fitQuantizerInt(key: String, fit: => Seq[(Int, Array[Long])])
-      : Seq[(Int, Array[Long])] = {
-    val hit = quantizerIntCache.get(key)
-    if (hit != null) return hit
-    val built = fit
-    val prev = quantizerIntCache.putIfAbsent(key, built)
-    if (prev != null) prev else built
-  }
-
   /** IVF search without the evidence wrapper — parameterized so the
     * recall/cost curve is measurable (tools.AnnTune) without editing
     * the graded constants. Cell assignment is INTEGER-EXACT over
@@ -1155,8 +1108,11 @@ object Similarity {
                              frozenCents: Option[Seq[(Int, Array[Long])]] = None)
       : DataFrame = {
     val e = embeddings(s, d)
-    val cents = frozenCents.getOrElse(fitQuantizerInt(
-      s"$d|$nCells|$iters|$sample|int",
+    // An IVF index fits its coarse quantizer once and serves many
+    // queries with it; the fit is deterministic (integer-exact, no RNG,
+    // fixed init), so sharing it per (dataset, params) changes no result.
+    val cents = frozenCents.getOrElse(perSession(s,
+        s"ivf-quantizer:$d|$nCells|$iters|$sample|int")(
       KMeans.fitQuantized(e.filter(col("vec_id") < sample), nCells, iters,
         Pca.PCA_SCALE)))
     import graft.functions.VectorFunctions.top_cells_int
@@ -1279,13 +1235,6 @@ object Similarity {
   val PQ_RERANK = 128
   val Q162_RECALL_FLOOR = 0.85
 
-  /** Codebook cache, same lifecycle stance as `quantizerIntCache`: a PQ
-    * index trains once and serves many queries; the fit is
-    * deterministic (integer-exact, no RNG), memoization changes no
-    * results. Holds (dim, per-subspace codebooks). */
-  private val pqCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Int, IndexedSeq[Seq[(Int, Array[Long])]])]()
-
   /** Integer unit-quantized view of the embeddings: PQ's ADC score
     * approximates the INNER PRODUCT, which on unit vectors IS the
     * cosine. uq_i = ROUND(xq_i·1e6 / √(Σxq²)) over xq = ROUND(x·1e6):
@@ -1326,27 +1275,20 @@ object Similarity {
     * tables the graded path serves, so codebook drift fails the build,
     * not the driver's hash gate. */
   private[graft] def pqCodebooksFit(s: SparkSession, d: String)
-      : (Int, IndexedSeq[Seq[(Int, Array[Long])]]) = {
-    // Built outside the bin lock (fitQuantizerInt rationale): M KMeans
-    // fits are Spark jobs; a racing duplicate is deterministic driver
-    // data, discarded, never leaked.
-    val key = s"$d|$PQ_M|$PQ_K|int"
-    val hit = pqCache.get(key)
-    if (hit != null) return hit
-    val u = unitQuantized(s, d)
-    val dim = u.select(size(col("uq"))).head().getInt(0)
-    require(dim % PQ_M == 0, s"dim $dim not divisible by $PQ_M subspaces")
-    val sub = dim / PQ_M
-    val sample = u.filter(col("vec_id") < FIT_SAMPLE)
-    val books = (0 until PQ_M).map { m =>
-      KMeans.fitQuantized(sample.select(col("vec_id"),
-        slice(col("uq"), m * sub + 1, sub).as("sv")),
-        PQ_K, KMEANS_ITERS, 1L, "sv")
+      : (Int, IndexedSeq[Seq[(Int, Array[Long])]]) =
+    perSession(s, s"pq-codebooks:$d|$PQ_M|$PQ_K|int") {
+      val u = unitQuantized(s, d)
+      val dim = u.select(size(col("uq"))).head().getInt(0)
+      require(dim % PQ_M == 0, s"dim $dim not divisible by $PQ_M subspaces")
+      val sub = dim / PQ_M
+      val sample = u.filter(col("vec_id") < FIT_SAMPLE)
+      val books = (0 until PQ_M).map { m =>
+        KMeans.fitQuantized(sample.select(col("vec_id"),
+          slice(col("uq"), m * sub + 1, sub).as("sv")),
+          PQ_K, KMEANS_ITERS, 1L, "sv")
+      }
+      (dim, books)
     }
-    val built = (dim, books)
-    val prev = pqCache.putIfAbsent(key, built)
-    if (prev != null) prev else built
-  }
 
   /** PQ search: encode the base once (M argmins per row, all codegen
     * DotWithConst projections), score every (query, code-row) pair with
@@ -1365,22 +1307,9 @@ object Similarity {
     * (M argmin centroid scans per row), and the serving path reads the
     * M-bytes/row codes directly. Cached + materialized once per
     * (session, dataset) so the timed region of q162 is LUT-broadcast +
-    * ADC scan + re-rank, exactly what a warm index serves. Keyed on
-    * applicationId (not object identity) so entries can't outlive or
-    * collide across sessions. */
-  private val pqCodesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private def pqCodes(s: SparkSession, d: String): DataFrame = {
-    val key = s"${s.sparkContext.applicationId}|$d|$PQ_M|$PQ_K"
-    val hit = pqCodesCache.get(key)
-    if (hit != null) hit
-    else {
-      // Build OUTSIDE any map lock (computeIfAbsent would run a full
-      // Spark job — persist + count — while holding the bin lock):
-      // get/putIfAbsent means a concurrent racer may build twice, but
-      // the loser's duplicate is unpersisted immediately instead of
-      // leaking for the application's lifetime.
+    * ADC scan + re-rank, exactly what a warm index serves. */
+  private def pqCodes(s: SparkSession, d: String): DataFrame =
+    perSession(s, s"pq-codes:$d|$PQ_M|$PQ_K") {
       val (dim, books) = pqCodebooks(s, d)
       val sub = dim / PQ_M
       import graft.functions.VectorFunctions.top_cells_int
@@ -1390,10 +1319,8 @@ object Similarity {
         ): _*).as("codes"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       c.count() // force the build outside any timed consumer
-      val prev = pqCodesCache.putIfAbsent(key, c)
-      if (prev != null) { c.unpersist(blocking = false); prev } else c
+      c
     }
-  }
 
   private[graft] def pqTopK(s: SparkSession, d: String): DataFrame = {
     val (dim, books) = pqCodebooks(s, d)
@@ -1583,25 +1510,26 @@ object Similarity {
     // sort_array projection cost 0.75 s at sf0.1 and the join was
     // recomputing it per side — top_cells_int is the one-loop codegen
     // replacement).
-    val assigned = checkpointCycled("semdedup-assign", e
+    val assigned = e
       .withColumn("nrm", sqrt(dot_product(col("embedding"), col("embedding"))))
       .select(col("vec_id"), col("embedding"), col("nrm"),
         explode(top_cells_int(col("embedding"), cents, SEM_PROBE,
-          Pca.PCA_SCALE)).as("cell")))
+          Pca.PCA_SCALE)).as("cell"))
+      .localCheckpoint()
     val aS = assigned.select(col("cell"), col("vec_id").as("i"),
       col("embedding").as("va"), col("nrm").as("na"))
     val bS = assigned.select(col("cell"), col("vec_id").as("j"),
       col("embedding").as("vb"), col("nrm").as("nb"))
     // multi-probe duplicates collapse in the distinct; the pair set is
     // consumed twice (evidence + verdicts) → materialize once.
-    val pairs = checkpointCycled("semdedup-pairs",
-      aS.join(bS, Seq("cell")).filter(col("i") < col("j"))
-        .withColumn("sim",
-          when(col("na") === 0.0 || col("nb") === 0.0, 0.0)
-            .otherwise(dot_product(col("va"), col("vb"))
-                       / (col("na") * col("nb"))))
-        .filter(col("sim") >= NEAR_DUP_TAU)
-        .select(col("i"), col("j")).distinct())
+    val pairs = aS.join(bS, Seq("cell")).filter(col("i") < col("j"))
+      .withColumn("sim",
+        when(col("na") === 0.0 || col("nb") === 0.0, 0.0)
+          .otherwise(dot_product(col("va"), col("vb"))
+                     / (col("na") * col("nb"))))
+      .filter(col("sim") >= NEAR_DUP_TAU)
+      .select(col("i"), col("j")).distinct()
+      .localCheckpoint()
     // Recall evidence on the 1-in-EVIDENCE_MOD vector subsample (the
     // q44/q55 stance): the exact baseline is quadratic in its input, so
     // auditing the subsampled pair graph (both endpoints sampled) costs

@@ -229,11 +229,12 @@ object PartitionedScan {
     // n_files census); materialize it once instead of rescanning part
     // and recomputing the 20-term interleave per layout — the audit's
     // input is one scan by construction, the plan should show it.
-    val pts = checkpointCycled("zorder-pts", part(s, d).select(
+    val pts = part(s, d).select(
       col("p_partkey").as("k"),
       (col("p_partkey") * 37 % 1024).as("x"),
       (col("p_partkey") * 91 % 1024).as("y"))
-      .withColumn("z", expr(zExpr("x", "y", "div"))))
+      .withColumn("z", expr(zExpr("x", "y", "div")))
+      .localCheckpoint()
     val boxes = broadcast(
       Z_BOXES.toDF("query_id", "x1", "x2", "y1", "y2"))
     // ONE pass for all three layouts: explode each point into

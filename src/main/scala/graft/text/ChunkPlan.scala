@@ -302,11 +302,12 @@ object ChunkPlan {
     // reads it again — without the checkpoint the distinct (and the
     // whole position assignment under it) runs twice (23 exchanges
     // measured vs 8)
-    val bg = graft.Tables.checkpointCycled(s"novelty-bg:$d", ordered
+    val bg = ordered
       .select(col("batch_id"),
         explode(graft.functions.ShingleSet.shingle_set(col("text")))
           .as("sg"))
-      .distinct())
+      .distinct()
+      .localCheckpoint()
     val fb = bg.groupBy(col("sg")).agg(min(col("batch_id")).as("first_batch"))
     val perBatch = bg.join(fb, Seq("sg"))
       .groupBy(col("batch_id"))
@@ -376,10 +377,10 @@ object ChunkPlan {
     // ordering (scan + banded positions), the length-offset table AND
     // the by-length ordering — without the checkpoint each consumer
     // re-reads documents and re-tokenizes (20 exchanges measured vs 8)
-    val docs = graft.Tables.checkpointCycled(s"padding-docs:$d",
-      documents(s, d)
-        .select(col("doc_id"),
-          size(split(col("text"), " ")).cast("long").as("n_tok")))
+    val docs = documents(s, d)
+      .select(col("doc_id"),
+        size(split(col("text"), " ")).cast("long").as("n_tok"))
+      .localCheckpoint()
     val shuffled = shufflePositions(docs, 1)
       .select(col("doc_id"), col("n_tok"), col("pos"))
     val wLen = Window.partitionBy(col("n_tok")).orderBy(col("doc_id"))

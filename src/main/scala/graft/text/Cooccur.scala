@@ -44,10 +44,10 @@ object Cooccur {
     // sides re-exploded the corpus per consumer (5 documents scans in
     // the executed plan); n_docs is a parquet row-count read inlined
     // as an exact literal. One corpus scan at any scale.
-    val postings = graft.Tables.checkpointCycled(s"q196-postings:$d",
-      documents(s, d)
+    val postings = documents(s, d)
       .select(col("doc_id"),
-        explode(array_distinct(split(col("text"), " "))).as("tok")))
+        explode(array_distinct(split(col("text"), " "))).as("tok"))
+      .localCheckpoint()
     val dfCounts = postings.groupBy(col("tok"))
       .agg(count(lit(1)).as("df"))
     val vocab = dfCounts

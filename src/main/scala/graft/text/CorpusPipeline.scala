@@ -35,15 +35,14 @@ object CorpusPipeline {
     // quality + shingle_set (up to 5 evaluations per invocation; the
     // q80 lesson: subtrees with real per-row hash work win from one
     // materialization). Survivor-bounded, within-query, recomputed
-    // from parquet on every invocation. Same TAG-REUSE CONTRACT as
-    // cc-curation below: callers build-then-immediately-execute.
-    val sv = graft.Tables.checkpointCycled(s"curation-sv:$d",
-      TextOps.withQuality(docs)
-        .filter(TextOps.langGuess(col("text")) === "en"
-          && col("quality") >= QUALITY_FLOOR)
-        .select(col("doc_id"), col("text"), col("lang"), col("n_tok"),
-          col("quality"),
-          graft.functions.ShingleSet.shingle_set(col("text")).as("sgs")))
+    // from parquet on every invocation.
+    val sv = TextOps.withQuality(docs)
+      .filter(TextOps.langGuess(col("text")) === "en"
+        && col("quality") >= QUALITY_FLOOR)
+      .select(col("doc_id"), col("text"), col("lang"), col("n_tok"),
+        col("quality"),
+        graft.functions.ShingleSet.shingle_set(col("text")).as("sgs"))
+      .localCheckpoint()
     val survivors = sv.drop("sgs")
     // dedup over survivors only: shingle AFTER the cheap filters
     val arr = sv.select(col("doc_id"), col("sgs"))
@@ -54,14 +53,7 @@ object CorpusPipeline {
     // asserts (the oracle below stays the EXACT pair join, so the gate
     // re-proves the equality every round).
     val pairs = Dedup.lshVerifiedPairs(s, arr).select(col("i"), col("j"))
-    // TAG-REUSE CONTRACT: connectedComponents(tag = "cc-curation") cycles
-    // the PREVIOUS same-tag invocation's localCheckpoint blocks, and the
-    // returned frame's lineage is truncated at that checkpoint — so a
-    // result from an earlier call must NOT be held across a later call
-    // (it would fail at execution once its blocks are freed). Every
-    // caller of curatedKeepers builds-then-immediately-executes, which
-    // satisfies the contract; keep it that way.
-    val labels = DedupCluster.connectedComponents(pairs, tag = "cc-curation")
+    val labels = DedupCluster.connectedComponents(pairs)
       .withColumnRenamed("node", "doc_id")
     survivors
       .join(labels, Seq("doc_id"), "left")

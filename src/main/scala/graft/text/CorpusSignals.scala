@@ -108,13 +108,12 @@ object CorpusSignals {
     // the self-join's both sides, and re-deriving it costs the dt⋈df
     // join twice. One corpus scan total at any scale.
     val nd = documents(s, d).count()
-    val dt = graft.Tables.checkpointCycled(s"q123-dt:$d",
-      occurrences(s, d).distinct())
+    val dt = occurrences(s, d).distinct().localCheckpoint()
     val df = dt.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    val kept = graft.Tables.checkpointCycled(s"q123-kept:$d",
-      dt.join(df, Seq("tok"))
+    val kept = dt.join(df, Seq("tok"))
       .filter(col("df") * 5 < lit(nd) * 4)
-      .select(col("doc_id"), col("tok")))
+      .select(col("doc_id"), col("tok"))
+      .localCheckpoint()
     kept.select(col("doc_id"), col("tok").as("t1"))
       .join(kept.select(col("doc_id"), col("tok").as("t2")), Seq("doc_id"))
       .filter(col("t1") < col("t2"))
@@ -384,8 +383,8 @@ object CorpusSignals {
     // Pair table materialized ONCE (r16): its four consumers (both
     // margins, N, the support-filtered join) each re-exploded the
     // corpus otherwise (4 documents scans in the executed plan).
-    val pairCnt = graft.Tables.checkpointCycled(s"q140-paircnt:$d",
-      bi.groupBy(col("x"), col("y")).agg(count(lit(1)).as("cxy")))
+    val pairCnt = bi.groupBy(col("x"), col("y")).agg(count(lit(1)).as("cxy"))
+      .localCheckpoint()
     val leftCnt = pairCnt.groupBy(col("x")).agg(sum(col("cxy")).as("cxl"))
     val rightCnt = pairCnt.groupBy(col("y")).agg(sum(col("cxy")).as("cyr"))
     val nBi = pairCnt.agg(sum(col("cxy")).as("n_bi"))
@@ -522,7 +521,7 @@ object CorpusSignals {
       .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
 
   def q215BigramLm(s: SparkSession, d: String): DataFrame = {
-    // The (w1,w2) types table is materialized ONCE (checkpointCycled):
+    // The (w1,w2) types table is materialized ONCE (localCheckpoint):
     // it feeds three consumers (the scoring join's broadcast, the c1
     // marginal, the V scalar), and without the barrier each consumer
     // re-derived it from its own full corpus explode (20 Exchange
@@ -530,8 +529,8 @@ object CorpusSignals {
     // 100 TB). The corpus is now exploded exactly twice — model build
     // + scoring — the same two passes the oracle's CTE chain makes.
     val bg = bigramPairs(s, d)
-    val c12 = graft.Tables.checkpointCycled(s"bglm-c12:$d",
-      bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12")))
+    val c12 = bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
+      .localCheckpoint()
     val c1 = c12.groupBy(col("w1")).agg(sum(col("c12")).as("c1"))
     val v = c12.agg(countDistinct(col("w1")).as("v"))
     bg.join(broadcast(c12), Seq("w1", "w2"))
@@ -607,8 +606,8 @@ object CorpusSignals {
     // extra corpus scans at 100 TB). Two corpus explodes remain: model
     // build + scoring (the oracle's own pass count).
     val bg = bigramPairs(s, d)
-    val c12 = graft.Tables.checkpointCycled(s"knbg-c12:$d",
-      bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12")))
+    val c12 = bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
+      .localCheckpoint()
     // one pass over the types table gives BOTH the prefix marginal c1
     // and the distinct-continuation count r1
     val left = c12.groupBy(col("w1"))
@@ -743,7 +742,7 @@ object CorpusSignals {
     * Scale shape (r16 rework): both LM scorers share the SAME bigram
     * sufficient statistic — the (w1,w2) types table — and both score
     * per occurrence keyed on (w1,w2), so the composition computes the
-    * types table ONCE (checkpointCycled) and scores BOTH models in ONE
+    * types table ONCE (localCheckpoint) and scores BOTH models in ONE
     * occurrence pass: the combined score ledger carries (n7_kn, n7_a1)
     * per bigram type, and one groupBy(doc) yields both per-doc NLLs —
     * no doc_id join between scorer outputs at all. The previous shape
@@ -757,8 +756,8 @@ object CorpusSignals {
     * composes o281/o215 textually). */
   def q289ExcessMix(s: SparkSession, d: String): DataFrame = {
     val bg = bigramPairs(s, d)
-    val c12 = graft.Tables.checkpointCycled(s"excess-c12:$d",
-      bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12")))
+    val c12 = bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
+      .localCheckpoint()
     val left = c12.groupBy(col("w1"))
       .agg(sum(col("c12")).as("c1"), count(lit(1)).as("r1"))
     val right = c12.groupBy(col("w2")).agg(count(lit(1)).as("r2"))
@@ -792,13 +791,13 @@ object CorpusSignals {
     // |sources|-row ledger materialized once: it feeds the 1-row total
     // AND the final projection — without the barrier the whole scoring
     // pyramid ran twice
-    val perSrc = graft.Tables.checkpointCycled(s"excess-src:$d",
-      documents(s, d).select(col("doc_id"), col("source"))
+    val perSrc = documents(s, d).select(col("doc_id"), col("source"))
       .join(perDoc, Seq("doc_id"))
       .withColumn("exc", greatest(lit(0L), col("nll_a1") - col("nll_kn")))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("exc")).as("exc_sum"))
-      .withColumn("excess_micro", expr("exc_sum div n_docs")))
+      .withColumn("excess_micro", expr("exc_sum div n_docs"))
+      .localCheckpoint()
     val tot = perSrc.agg(sum(col("excess_micro")).as("exc_tot"))
     perSrc.crossJoin(broadcast(tot))
       .select(col("source"), col("n_docs"), col("excess_micro"),
@@ -1141,10 +1140,10 @@ object CorpusSignals {
     // (source, term) census materialized ONCE (r16): ns, cf (and via
     // it nAll) and the contribution join each re-exploded the corpus
     // otherwise (4 documents scans in the executed plan).
-    val tf = graft.Tables.checkpointCycled(s"q246-tf:$d",
-      documents(s, d)
+    val tf = documents(s, d)
       .select(col("source"), explode(split(col("text"), " ")).as("t"))
-      .groupBy(col("source"), col("t")).agg(count(lit(1)).as("c")))
+      .groupBy(col("source"), col("t")).agg(count(lit(1)).as("c"))
+      .localCheckpoint()
     val ns = tf.groupBy(col("source")).agg(sum(col("c")).as("n_s"))
     val cf = tf.groupBy(col("t")).agg(sum(col("c")).as("c_all"))
     val nAll = cf.agg(sum(col("c_all")).as("n_all"))

@@ -146,8 +146,8 @@ object CorpusStats {
     // corpus (3 documents scans in the executed plan before). The
     // stream-shaped builder `cmsSketch` stays as the ingest/merge
     // surface (spec-covered); the sketch TABLE here is identical.
-    val exact = checkpointCycled(s"q144-exact:$d",
-      toks.groupBy(col("w")).agg(count(lit(1)).as("true_cnt")))
+    val exact = toks.groupBy(col("w")).agg(count(lit(1)).as("true_cnt"))
+      .localCheckpoint()
     val sketch = exact
       .select(col("true_cnt"), explode(expr(
         s"transform(sequence(0, ${CMS_DEPTH - 1}), i -> " +
@@ -201,14 +201,15 @@ object CorpusStats {
     // self-join sides and the per-source sizes); materialize it once —
     // ReuseExchange only covers the identical a/b subtrees, the sizes
     // aggregate was re-deriving the whole explode+distinct chain.
-    val spans = checkpointCycled("source-overlap-spans", documents(s, d)
+    val spans = documents(s, d)
       .select(col("source"), explode(
         graft.functions.ShingleSet.shingle_set(col("text"), Dedup.SPAN))
         .as("span"))
       .select(col("source"),
         expr("cast(conv(substr(md5(span),1,15),16,10) as bigint)").as("h"))
       .distinct() // per-source span vocabulary
-      .repartition(shufflePartitions(s), col("h")))
+      .repartition(shufflePartitions(s), col("h"))
+      .localCheckpoint()
     val sizes = spans.groupBy(col("source")).agg(count(lit(1)).as("n"))
     spans.as("a")
       .join(spans.as("b"),
@@ -259,9 +260,9 @@ object CorpusStats {
     // |sources|×|langs| counts materialized ONCE (r16): totals, the
     // lang-distinct grid and the densify join each re-ran the corpus
     // aggregate otherwise (6 documents scans in the executed plan).
-    val counts = checkpointCycled(s"q116-counts:$d",
-      documents(s, d)
-      .groupBy(col("source"), col("lang")).agg(count(lit(1)).as("cnt")))
+    val counts = documents(s, d)
+      .groupBy(col("source"), col("lang")).agg(count(lit(1)).as("cnt"))
+      .localCheckpoint()
     val totals = counts.groupBy(col("source")).agg(sum(col("cnt")).as("tot"))
     // Densify to the full source×lang grid so a language exclusive to
     // one source contributes its (p−0)²/(p+0) term instead of silently
@@ -507,11 +508,11 @@ object CorpusStats {
     // ONE corpus aggregate; every other frame (grid, cumulatives,
     // totals) derives from this domain-bounded ledger — materialized
     // so no branch re-plans the scan (the q287 exchange lesson)
-    val cnt = graft.Tables.checkpointCycled(s"w1-cnt:$d",
-      documents(s, d)
-        .select(col("source"),
-          size(split(col("text"), " ")).cast("long").as("v"))
-        .groupBy(col("source"), col("v")).agg(count(lit(1)).as("c")))
+    val cnt = documents(s, d)
+      .select(col("source"),
+        size(split(col("text"), " ")).cast("long").as("v"))
+      .groupBy(col("source"), col("v")).agg(count(lit(1)).as("c"))
+      .localCheckpoint()
     val vals = cnt.select(col("v")).distinct()
     val grid = cnt.select(col("source")).distinct()
       .crossJoin(broadcast(vals))
@@ -597,17 +598,17 @@ object CorpusStats {
     * The exact side is the q94-shape hash-equi self-join over the
     * per-source distinct-hash sets — the audit, not the scale path. */
   def q301KmvOverlap(s: SparkSession, d: String): DataFrame = {
-    val hh = graft.Tables.checkpointCycled(s"kmvov-hh:$d",
-      documents(s, d)
-        .select(col("source"),
-          graft.functions.ShingleSet.shingle_set(col("text")).as("sgs"))
-        .select(col("source"), explode(col("sgs")).as("sg"))
-        .select(col("source"),
-          expr("cast(conv(substr(md5(sg), 1, 15), 16, 10) as bigint)").as("h"))
-        .distinct())
-    val bk = graft.Tables.checkpointCycled(s"kmvov-bk:$d",
-      graft.plans.TopKPerGroup(hh, groupCols = Seq("source"),
-        sortCols = Seq("h" -> false), k = KMV_K))
+    val hh = documents(s, d)
+      .select(col("source"),
+        graft.functions.ShingleSet.shingle_set(col("text")).as("sgs"))
+      .select(col("source"), explode(col("sgs")).as("sg"))
+      .select(col("source"),
+        expr("cast(conv(substr(md5(sg), 1, 15), 16, 10) as bigint)").as("h"))
+      .distinct()
+      .localCheckpoint()
+    val bk = graft.plans.TopKPerGroup(hh, groupCols = Seq("source"),
+      sortCols = Seq("h" -> false), k = KMV_K)
+      .localCheckpoint()
     val srcs = bk.select(col("source")).distinct()
     val pairs = srcs.select(col("source").as("sa"))
       .crossJoin(broadcast(srcs.select(col("source").as("sb"))))

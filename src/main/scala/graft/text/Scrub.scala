@@ -192,11 +192,11 @@ object Scrub {
     * Scale shape (this IS how distributed BPE trainers run): each round
     * is one map-side pair expansion + one count shuffle + a 1-ROW argmax
     * broadcast back; merge application is a row-local fold (sequences
-    * never shuffle). The corpus is re-materialized once per round
-    * (checkpointCycled — truncates lineage so round k doesn't recompute
-    * rounds 1..k-1 per consumer; blocks from the previous invocation are
-    * freed). k passes over the data is the algorithm's intrinsic cost;
-    * production trainers batch non-interacting merges per pass, an
+    * never shuffle). The corpus is re-materialized once per round (a
+    * lazy persist the round's argmax fills, so round k doesn't recompute
+    * rounds 1..k-1; the previous round's cache is dropped once the new
+    * one is filled). k passes over the data is the algorithm's intrinsic
+    * cost; production trainers batch non-interacting merges per pass, an
     * optimization that changes the learned vocabulary and so stays out
     * of the graded query. Oracle: k unrolled CTE rounds (the
     * q158/q163/q164 iterative-fixpoint precedent) with DuckDB's
@@ -291,26 +291,16 @@ object Scrub {
 
   // ---- q209: BPE APPLICATION (tokenize with the learned merges) ----
 
-  /** Trained-merge-table cache, keyed per (application, dataset, k) —
-    * the tokenizer lifecycle is train-once/apply-many (the
+  /** The trained merge table, once per (session, dataset, k) — the
+    * tokenizer lifecycle is train-once/apply-many (the
     * `ensureAnnIndexes` stance): q207 IS the training run, q209 applies
-    * the artifact. Deterministic training ⇒ memoizing changes nothing. */
-  private val mergeCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(Long, String, String, Long)]]()
-
+    * the artifact. Deterministic training ⇒ sharing changes nothing. */
   private[graft] def trainedMerges(s: SparkSession, d: String)
-      : Seq[(Long, String, String, Long)] = {
-    // Built outside the map's bin lock (the train is a multi-round
-    // Spark job); a concurrent racer may train twice — deterministic
-    // driver data, the duplicate is discarded.
-    val key = s"${s.sparkContext.applicationId}|$d|$BPE_ROUNDS"
-    val hit = mergeCache.get(key)
-    if (hit != null) return hit
-    val built = q207BpeTrain(s, d).collect().toSeq
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-    val prev = mergeCache.putIfAbsent(key, built)
-    if (prev != null) prev else built
-  }
+      : Seq[(Long, String, String, Long)] =
+    perSession(s, s"bpe-merges:$d|$BPE_ROUNDS") {
+      q207BpeTrain(s, d).collect().toSeq
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
+    }
 
   /** Warm the merge cache outside any timed region (Bench setup). */
   def ensureBpeMerges(s: SparkSession, d: String): Unit = {

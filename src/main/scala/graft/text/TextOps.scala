@@ -744,9 +744,10 @@ object TextOps {
     // langGuess) otherwise — 4 documents scans in the executed plan.
     // The roster derives from cm (every document contributes a cm row,
     // so cm's distinct lang == the corpus's distinct lang).
-    val cm = graft.Tables.checkpointCycled(s"q245-cm:$d", documents(s, d)
+    val cm = documents(s, d)
       .groupBy(col("lang"), langGuess(col("text")).as("predicted"))
-      .agg(count(lit(1)).as("n")))
+      .agg(count(lit(1)).as("n"))
+      .localCheckpoint()
     val tp = cm.filter(col("lang") === col("predicted"))
       .select(col("lang"), col("n").as("tp"))
     val fn = cm.filter(col("lang") =!= col("predicted"))
@@ -872,7 +873,7 @@ object TextOps {
       .groupBy(col("source"), langGuess(col("text")).as("a"),
         langVote(col("text")).as("b"))
       .agg(count(lit(1)).as("n"))
-    val cmc = graft.Tables.checkpointCycled(s"kappa-cm:$d", cm)
+    val cmc = cm.localCheckpoint()
     val tot = cmc.groupBy(col("source")).agg(
       sum(col("n")).as("n_docs"),
       sum(when(col("a") === col("b"), col("n")).otherwise(0L)).as("agree"))

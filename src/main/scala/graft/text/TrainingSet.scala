@@ -250,9 +250,9 @@ object TrainingSet {
     // of running curation's similarity join + CC per consumer. This is
     // what a real pipeline does with its curated corpus; on a cluster
     // the same point in the plan is a reliable-checkpoint/table write.
-    val keep = checkpointCycled("q86-keepers",
-      CorpusPipeline.curatedKeepers(s, d)
-        .filter(col("doc_id") % EVAL_MOD =!= 0)) // eval holdout never trains
+    val keep = CorpusPipeline.curatedKeepers(s, d)
+      .filter(col("doc_id") % EVAL_MOD =!= 0) // eval holdout never trains
+      .localCheckpoint()
     val cont = contaminatedDocs(s, d, keep.select(col("doc_id"), col("text")))
     val decon = keep.join(cont, Seq("doc_id"), "left_anti")
     val mixed = withMixtureDraw(decon).filter(col("u") < col("rate"))
@@ -965,16 +965,16 @@ object TrainingSet {
     // — whole-stage codegen, not per-element interpretation (the
     // q207/q217 HOF lesson); the hashed gram table is materialized once
     // and feeds both the model fit and the scoring pass.
-    val g = graft.Tables.checkpointCycled("dsir-grams",
-      documents(s, d)
-        .select(col("doc_id"), col("lang"), split(col("text"), " ").as("toks"))
-        .filter(size(col("toks")) >= 2)
-        .select(col("doc_id"), col("lang"), explode(expr(
-          "transform(sequence(0, size(toks) - 2), " +
-            "i -> named_struct('w1', toks[i], 'w2', toks[i + 1]))")).as("p"))
-        .select(col("doc_id"), col("lang"), expr(
-          s"cast(conv(substr(md5(concat(p.w1, ' ', p.w2)), 1, 6), 16, 10)" +
-            s" as bigint) % $DSIR_BUCKETS").as("bkt")))
+    val g = documents(s, d)
+      .select(col("doc_id"), col("lang"), split(col("text"), " ").as("toks"))
+      .filter(size(col("toks")) >= 2)
+      .select(col("doc_id"), col("lang"), explode(expr(
+        "transform(sequence(0, size(toks) - 2), " +
+          "i -> named_struct('w1', toks[i], 'w2', toks[i + 1]))")).as("p"))
+      .select(col("doc_id"), col("lang"), expr(
+        s"cast(conv(substr(md5(concat(p.w1, ' ', p.w2)), 1, 6), 16, 10)" +
+          s" as bigint) % $DSIR_BUCKETS").as("bkt"))
+      .localCheckpoint()
     val stats = g.groupBy(col("bkt")).agg(
       count(when(col("lang") === "en", lit(1))).as("t"),
       count(when(col("lang") =!= "en", lit(1))).as("r"))
@@ -1040,22 +1040,22 @@ object TrainingSet {
     * Scale shape: each round is ONE conditional aggregate over the
     * feature scan (map-side combined to a single 5-value row) with the
     * incoming weights folded in as literals — the q207/k-means k-bounded
-    * driver round-trip; features are materialized once (checkpointCycled)
+    * driver round-trip; features are materialized once (localCheckpoint)
     * so round k doesn't rescan text. Weights grow with Σ|x| and stay in
     * int64 at any corpus size a single label fits (decimal(38) swap-in
     * documented if not). */
   /** Feature frame shared by the q216 trainer and the q262 selector
     * (doc_id rides along; the trainer's aggregates ignore it). */
   private def percFeatures(s: SparkSession, d: String): DataFrame =
-    graft.Tables.checkpointCycled("perc-features",
-      documents(s, d).select(
-        col("doc_id"),
-        when(col("lang") === "en", 1L).otherwise(-1L).as("y"),
-        lit(1L).as("x0"),
-        expr("cast(size(split(text, ' ')) as bigint)").as("x1"),
-        expr("cast(size(array_distinct(split(text, ' '))) as bigint)").as("x2"),
-        expr("cast(size(filter(split(text, ' '), " +
-          "t -> t IN ('the','a','of','and'))) as bigint)").as("x3")))
+    documents(s, d).select(
+      col("doc_id"),
+      when(col("lang") === "en", 1L).otherwise(-1L).as("y"),
+      lit(1L).as("x0"),
+      expr("cast(size(split(text, ' ')) as bigint)").as("x1"),
+      expr("cast(size(array_distinct(split(text, ' '))) as bigint)").as("x2"),
+      expr("cast(size(filter(split(text, ' '), " +
+        "t -> t IN ('the','a','of','and'))) as bigint)").as("x3"))
+      .localCheckpoint()
 
   /** The PERC_ROUNDS batch-update loop: per-round cumulative weights +
     * miss counts. k-bounded driver iteration (4 aggregates), the q158
@@ -1342,14 +1342,14 @@ object TrainingSet {
       expr("percentile(q_micro, 0.75)").as("f75"),
       expr("percentile(q_micro, 0.5)").as("f50"),
       expr("percentile(q_micro, 0.25)").as("f25"))
-    val cells = graft.Tables.checkpointCycled(s"curriculum-cells:$d",
-      docs.crossJoin(broadcast(fences))
-        .withColumn("phase",
-          lit(1L) + when(col("q_micro") < col("f75"), 1L).otherwise(0L)
-            + when(col("q_micro") < col("f50"), 1L).otherwise(0L)
-            + when(col("q_micro") < col("f25"), 1L).otherwise(0L))
-        .groupBy(col("phase"), col("source"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens")))
+    val cells = docs.crossJoin(broadcast(fences))
+      .withColumn("phase",
+        lit(1L) + when(col("q_micro") < col("f75"), 1L).otherwise(0L)
+          + when(col("q_micro") < col("f50"), 1L).otherwise(0L)
+          + when(col("q_micro") < col("f25"), 1L).otherwise(0L))
+      .groupBy(col("phase"), col("source"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"))
+      .localCheckpoint()
     val wBefore = Window.orderBy(col("phase"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val wUpto = Window.orderBy(col("phase"))
@@ -1438,15 +1438,15 @@ object TrainingSet {
     // sized, and every downstream aggregate (cells, class ledger,
     // seen-term pass, per-doc ledger) derives from it or from bounded
     // collects — the corpus text is scanned exactly once per run.
-    val docTok = graft.Tables.checkpointCycled(s"nb-doctok:$d",
-      documents(s, d)
-        .select(col("doc_id"), col("source"),
-          explode(split(col("text"), " ")).as("tok"))
-        .groupBy(col("doc_id"), col("source"), col("tok"))
-        .agg(count(lit(1)).as("n")))
-    val cnt = graft.Tables.checkpointCycled(s"nb-cnt:$d",
-      docTok.groupBy(col("tok"), col("source").as("cls"))
-        .agg(sum(col("n")).as("c")))
+    val docTok = documents(s, d)
+      .select(col("doc_id"), col("source"),
+        explode(split(col("text"), " ")).as("tok"))
+      .groupBy(col("doc_id"), col("source"), col("tok"))
+      .agg(count(lit(1)).as("n"))
+      .localCheckpoint()
+    val cnt = docTok.groupBy(col("tok"), col("source").as("cls"))
+      .agg(sum(col("n")).as("c"))
+      .localCheckpoint()
     // ---- the |cls|-row model ledger, built ON THE DRIVER (the q287/
     // q300 r13 pattern): class token mass N_s / doc count D_s are one
     // bounded collect (|cls| rows at ANY corpus scale), vocab V is a
@@ -1636,12 +1636,12 @@ object TrainingSet {
     // eagerly materialized the raw explode PLUS per-(tok,cls[,f]) cell
     // tables — four checkpoint jobs over corpus-sized frames whose
     // fixed cost dominated the query once the fan-out was beamed.)
-    val docTok = graft.Tables.checkpointCycled(s"nbcv-doctok:$d",
-      documents(s, d)
-        .select(col("doc_id"), foldE.as("f"), col("source"),
-          explode(split(col("text"), " ")).as("tok"))
-        .groupBy(col("doc_id"), col("f"), col("source"), col("tok"))
-        .agg(count(lit(1)).as("n")))
+    val docTok = documents(s, d)
+      .select(col("doc_id"), foldE.as("f"), col("source"),
+        explode(split(col("text"), " ")).as("tok"))
+      .groupBy(col("doc_id"), col("f"), col("source"), col("tok"))
+      .agg(count(lit(1)).as("n"))
+      .localCheckpoint()
     // The doc-level cube collect depends only on docTok, so its job is
     // LAUNCHED FIRST and runs concurrently with cellF's materialization
     // below — the two barriers overlap. n_tok = Σn over the doc's
@@ -1666,9 +1666,9 @@ object TrainingSet {
     // measured cheaper materialized than recomputed (dropping this
     // barrier re-aggregated docTok twice inside scored's job and cost
     // ~0.5 s net)
-    val cellF = graft.Tables.checkpointCycled(s"nbcv-cellf:$d",
-      docTok.groupBy(col("tok"), col("source").as("cls"), col("f"))
-        .agg(sum(col("n")).as("cf")))
+    val cellF = docTok.groupBy(col("tok"), col("source").as("cls"), col("f"))
+      .agg(sum(col("n")).as("cf"))
+      .localCheckpoint()
     val cell = cellF.groupBy(col("tok"), col("cls"))
       .agg(sum(col("cf")).as("c"))
     val foldGen = explode(sequence(lit(0L), lit(CV_FOLDS - 1))).as("f")
@@ -1760,18 +1760,18 @@ object TrainingSet {
     // long form), each n7 the identical floor(log(den_α/(c_tr+α))·1e7)
     // expression the long form computed. Materialized once; the single
     // scoring pass below broadcasts it whole.
-    val scoredW = graft.Tables.checkpointCycled(s"nbcv-scoredw:$d",
-      cell.select(col("tok"), col("cls"), col("c"), foldGen)
-        .join(cellF, Seq("tok", "cls", "f"), "left")
-        .withColumn("c_tr", col("c") - coalesce(col("cf"), lit(0L)))
-        .filter(col("c_tr") > 0)
-        .join(broadcast(ledgerW.select(col("cls") +: col("f") +:
-          CV_ALPHAS.map(a => col(s"den_$a")): _*)), Seq("cls", "f"))
-        .select(col("tok") +: col("f") +: col("cls") +:
-          CV_ALPHAS.map(a =>
-            floor(log(col(s"den_$a").cast("double")
-              / (col("c_tr") + lit(a)).cast("double")) * lit(1e7))
-              .cast("long").as(s"n7_$a")): _*))
+    val scoredW = cell.select(col("tok"), col("cls"), col("c"), foldGen)
+      .join(cellF, Seq("tok", "cls", "f"), "left")
+      .withColumn("c_tr", col("c") - coalesce(col("cf"), lit(0L)))
+      .filter(col("c_tr") > 0)
+      .join(broadcast(ledgerW.select(col("cls") +: col("f") +:
+        CV_ALPHAS.map(a => col(s"den_$a")): _*)), Seq("cls", "f"))
+      .select(col("tok") +: col("f") +: col("cls") +:
+        CV_ALPHAS.map(a =>
+          floor(log(col(s"den_$a").cast("double")
+            / (col("c_tr") + lit(a)).cast("double")) * lit(1e7))
+            .cast("long").as(s"n7_$a")): _*)
+      .localCheckpoint()
     // ONE doc-level scoring pass for EVERY α: |cls| fan-out per
     // distinct (doc, tok) — the old screen's fan-out, with the rerank
     // pass folded in as extra sum columns. docTok already collapsed
@@ -1799,17 +1799,17 @@ object TrainingSet {
     // explode), and the screen pyramid above it is the query's
     // heaviest sub-plan — measured in r16, exchange reuse does NOT
     // dedupe it across consumers.
-    val nllW = graft.Tables.checkpointCycled(s"nbcv-nllw:$beamK:$d",
-      perDoc.join(broadcast(ledgerW.select(col("cls") +: col("f") +:
-          col("prior7") +: CV_ALPHAS.map(a => col(s"u7_$a")): _*)),
-          Seq("f"))
-        .join(seen, Seq("doc_id", "cls"), "left")
-        .select(col("doc_id") +: col("f") +: col("source") +: col("cls") +:
-          CV_ALPHAS.map(nllCol): _*)
-        .withColumn("rn", row_number().over(wBeam))
-        .filter(col("rn") <= beamK)
-        .select(col("doc_id") +: col("f") +: col("source") +: col("cls") +:
-          col("rn") +: CV_ALPHAS.tail.map(a => col(s"nll7_$a")): _*))
+    val nllW = perDoc.join(broadcast(ledgerW.select(col("cls") +: col("f") +:
+        col("prior7") +: CV_ALPHAS.map(a => col(s"u7_$a")): _*)),
+        Seq("f"))
+      .join(seen, Seq("doc_id", "cls"), "left")
+      .select(col("doc_id") +: col("f") +: col("source") +: col("cls") +:
+        CV_ALPHAS.map(nllCol): _*)
+      .withColumn("rn", row_number().over(wBeam))
+      .filter(col("rn") <= beamK)
+      .select(col("doc_id") +: col("f") +: col("source") +: col("cls") +:
+        col("rn") +: CV_ALPHAS.tail.map(a => col(s"nll7_$a")): _*)
+      .localCheckpoint()
     val win1 = nllW.filter(col("rn") === 1)
       .select(lit(alpha0).as("alpha"), col("f"), col("source"), col("cls"))
     // RERANK: per remaining α, argmin over the beam classes — a
@@ -1989,11 +1989,11 @@ object TrainingSet {
     // the old shape re-scanned the raw text twice more (size(split) for
     // the class ledger, a groupBy for the output's train counts), which
     // at 100 TB is two extra corpus scans (the q287 r13 lesson).
-    val docTok = graft.Tables.checkpointCycled(s"loso-doctok:$d",
-      train.select(col("doc_id"), col("lang"), col("source"),
-          explode(split(col("text"), " ")).as("tok"))
-        .groupBy(col("doc_id"), col("lang"), col("source"), col("tok"))
-        .agg(count(lit(1)).as("n")))
+    val docTok = train.select(col("doc_id"), col("lang"), col("source"),
+        explode(split(col("text"), " ")).as("tok"))
+      .groupBy(col("doc_id"), col("lang"), col("source"), col("tok"))
+      .agg(count(lit(1)).as("n"))
+      .localCheckpoint()
     // doc-level cube collect — launched FIRST so its job overlaps
     // cellS's materialization (both depend only on docTok). One cube
     // pass yields clsBySrc (lang,src), clsTot (lang,·), per-source doc
@@ -2011,9 +2011,9 @@ object TrainingSet {
     val cubeFut = Future(clsAll.cube(col("lang"), col("source"))
       .agg(sum(col("n_tok")).as("n"), count(lit(1)).as("d"),
         grouping_id().as("gid")).collect())
-    val cellS = graft.Tables.checkpointCycled(s"loso-cells:$d",
-      docTok.groupBy(col("tok"), col("lang"), col("source"))
-        .agg(sum(col("n")).as("cs")))
+    val cellS = docTok.groupBy(col("tok"), col("lang"), col("source"))
+      .agg(sum(col("n")).as("cs"))
+      .localCheckpoint()
     val cell = cellS.groupBy(col("tok"), col("lang")).agg(sum(col("cs")).as("c"))
     val cubeRows = Await.result(cubeFut, Duration.Inf)
     def cubeCell(lang: Option[String], src: Option[String]): Option[(Long, Long)] = {
@@ -2034,13 +2034,13 @@ object TrainingSet {
     val holdouts = (srcs :+ FULL).toSeq
     val hs = broadcast(holdouts.toDF("h"))
     // per-holdout cell counts by subtraction; rows that vanish drop out
-    val cellH = graft.Tables.checkpointCycled(s"loso-cellh:$d",
-      cell.crossJoin(hs)
-        .join(cellS.select(col("tok"), col("lang"), col("source").as("h"),
-          col("cs")), Seq("tok", "lang", "h"), "left")
-        .withColumn("ch", col("c") - coalesce(col("cs"), lit(0L)))
-        .filter(col("ch") > 0)
-        .select(col("tok"), col("lang"), col("h"), col("ch")))
+    val cellH = cell.crossJoin(hs)
+      .join(cellS.select(col("tok"), col("lang"), col("source").as("h"),
+        col("cs")), Seq("tok", "lang", "h"), "left")
+      .withColumn("ch", col("c") - coalesce(col("cs"), lit(0L)))
+      .filter(col("ch") > 0)
+      .select(col("tok"), col("lang"), col("h"), col("ch"))
+      .localCheckpoint()
     // per-holdout training vocabulary: one bounded collect (≤|S|+1 rows)
     val vMap = cellH.groupBy(col("h"))
       .agg(countDistinct(col("tok")).as("v")).collect()
@@ -2368,9 +2368,9 @@ object TrainingSet {
     val held = docs.filter(col("sp") <= 1)
     val occ = train.select(col("doc_id"), col("lang"),
       explode(split(col("text"), " ")).as("tok"))
-    val cnt = graft.Tables.checkpointCycled(s"conf-cnt:$d",
-      occ.groupBy(col("tok"), col("lang").as("cls"))
-        .agg(count(lit(1)).as("c")))
+    val cnt = occ.groupBy(col("tok"), col("lang").as("cls"))
+      .agg(count(lit(1)).as("c"))
+      .localCheckpoint()
     val clsTot = train
       .select(col("lang").as("cls"),
         size(split(col("text"), " ")).cast("long").as("n_tok"))
@@ -2378,13 +2378,13 @@ object TrainingSet {
       .agg(sum(col("n_tok")).as("ns"), count(lit(1)).as("ds"))
     val vocab = cnt.agg(countDistinct(col("tok")).as("v"))
     val dtot = train.agg(count(lit(1)).as("dd"))
-    val ledger = graft.Tables.checkpointCycled(s"conf-ledger:$d",
-      clsTot.crossJoin(broadcast(vocab)).crossJoin(broadcast(dtot))
-        .withColumn("u7", floor(log((col("ns") + col("v")).cast("double"))
-          * lit(1e7)).cast("long"))
-        .withColumn("prior7", floor(log(col("dd").cast("double")
-          / col("ds").cast("double")) * lit(1e7)).cast("long"))
-        .select(col("cls"), col("ns"), col("v"), col("u7"), col("prior7")))
+    val ledger = clsTot.crossJoin(broadcast(vocab)).crossJoin(broadcast(dtot))
+      .withColumn("u7", floor(log((col("ns") + col("v")).cast("double"))
+        * lit(1e7)).cast("long"))
+      .withColumn("prior7", floor(log(col("dd").cast("double")
+        / col("ds").cast("double")) * lit(1e7)).cast("long"))
+      .select(col("cls"), col("ns"), col("v"), col("u7"), col("prior7"))
+      .localCheckpoint()
     val scored = cnt
       .join(broadcast(ledger.select(col("cls"), col("ns"), col("v"))),
         Seq("cls"))
@@ -2400,16 +2400,16 @@ object TrainingSet {
       .groupBy(col("doc_id"), col("cls"))
       .agg(sum(col("n") * col("n7")).as("s7"), sum(col("n")).as("n_seen"))
     // per-token nonconformity score for every (held doc, class)
-    val scores = graft.Tables.checkpointCycled(s"conf-scores:$d",
-      hDocs.crossJoin(broadcast(ledger.select(col("cls"), col("u7"),
-          col("prior7"))))
-        .join(seen, Seq("doc_id", "cls"), "left")
-        .withColumn("nll7", coalesce(col("s7"), lit(0L))
-          + (col("n_tok") - coalesce(col("n_seen"), lit(0L))) * col("u7")
-          + col("prior7"))
-        .withColumn("score", expr("nll7 div n_tok"))
-        .select(col("doc_id"), col("sp"), col("lang"), col("cls"),
-          col("score")))
+    val scores = hDocs.crossJoin(broadcast(ledger.select(col("cls"), col("u7"),
+        col("prior7"))))
+      .join(seen, Seq("doc_id", "cls"), "left")
+      .withColumn("nll7", coalesce(col("s7"), lit(0L))
+        + (col("n_tok") - coalesce(col("n_seen"), lit(0L))) * col("u7")
+        + col("prior7"))
+      .withColumn("score", expr("nll7 div n_tok"))
+      .select(col("doc_id"), col("sp"), col("lang"), col("cls"),
+        col("score"))
+      .localCheckpoint()
     // calibration ranks: true-class scores, single window BY DESIGN
     val cal = scores.filter(col("sp") === 0 && col("cls") === col("lang"))
       .withColumn("rn", row_number().over(
@@ -2420,11 +2420,11 @@ object TrainingSet {
     val kTab = alphas.crossJoin(broadcast(nCal))
       .withColumn("k_rank", expr(
         "((n_cal + 1) * (1000 - alpha_milli) + 999) div 1000"))
-    val thresh = graft.Tables.checkpointCycled(s"conf-thresh:$d",
-      kTab.join(cal.select(col("rn").as("k_rank"), col("score")
-          .as("thresh_score")), Seq("k_rank"))
-        .select(col("alpha_milli"), col("n_cal"), col("k_rank"),
-          col("thresh_score")))
+    val thresh = kTab.join(cal.select(col("rn").as("k_rank"), col("score")
+        .as("thresh_score")), Seq("k_rank"))
+      .select(col("alpha_milli"), col("n_cal"), col("k_rank"),
+        col("thresh_score"))
+      .localCheckpoint()
     val evalSets = scores.filter(col("sp") === 1)
       .crossJoin(broadcast(thresh.select(col("alpha_milli"),
         col("thresh_score"))))
@@ -2555,12 +2555,12 @@ object TrainingSet {
     // checkpoint; the old shape materialized the RAW occurrence explode
     // (larger frame) and re-scanned the text for the doc ledger (a
     // second corpus scan at 100 TB). The q287/q292 r13 pattern.
-    val docTok = graft.Tables.checkpointCycled(s"mcn-doctok:$d",
-      documents(s, d)
-        .select(col("doc_id"), col("source"),
-          explode(split(col("text"), " ")).as("tok"))
-        .groupBy(col("doc_id"), col("source"), col("tok"))
-        .agg(count(lit(1)).as("n")))
+    val docTok = documents(s, d)
+      .select(col("doc_id"), col("source"),
+        explode(split(col("text"), " ")).as("tok"))
+      .groupBy(col("doc_id"), col("source"), col("tok"))
+      .agg(count(lit(1)).as("n"))
+      .localCheckpoint()
     // class totals: one bounded collect (|cls| rows), overlapping cnt's
     // materialization below (both depend only on docTok)
     import scala.concurrent.{Await, Future}
@@ -2570,9 +2570,9 @@ object TrainingSet {
       .agg(sum(col("n")).as("n_tok"))
     val clsFut = Future(docLedger.groupBy(col("source").as("cls"))
       .agg(sum(col("n_tok")).as("ns"), count(lit(1)).as("ds")).collect())
-    val cnt = graft.Tables.checkpointCycled(s"mcn-cnt:$d",
-      docTok.groupBy(col("tok"), col("source").as("cls"))
-        .agg(sum(col("n")).as("c")))
+    val cnt = docTok.groupBy(col("tok"), col("source").as("cls"))
+      .agg(sum(col("n")).as("c"))
+      .localCheckpoint()
     val v = cnt.agg(countDistinct(col("tok"))).head().getLong(0)
     val clsRows = Await.result(clsFut, Duration.Inf)
     val dd = clsRows.map(_.getLong(2)).sum

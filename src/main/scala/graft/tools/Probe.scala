@@ -14,7 +14,7 @@ import org.apache.spark.sql.execution.FormattedMode
   *  - `time <regex> [reps]` (reps default 5): warms each query once on
   *    the sibling `sf0.001` directory when it exists, then prints per
   *    rep the build seconds (constructing the DataFrame: parquet schema
-  *    inference, eager `checkpointCycled` jobs, driver collects), the
+  *    inference, eager `localCheckpoint` jobs, driver collects), the
   *    action seconds (`.count()`) and the Spark jobs each phase started,
   *    then min/median/max of build + action.
   *  - `plan <regex> [--dump <round>/<suffix>]`: prints the compile-time
@@ -22,7 +22,7 @@ import org.apache.spark.sql.execution.FormattedMode
   *    AQE-final plans re-plan lazily) with its Exchange and parquet-scan
   *    counts; `--dump` writes the plan to `plans/<round>/<q>_<suffix>.txt`
   *    instead. No final action runs, but building a query still runs its
-  *    eager `checkpointCycled` jobs: `plan` is safe next to a live bench
+  *    eager `localCheckpoint` jobs: `plan` is safe next to a live bench
   *    only because it runs in its own JVM.
   *  - `executed <regex>`: collects each query, then prints its AQE-final
   *    plan.

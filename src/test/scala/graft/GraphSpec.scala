@@ -30,7 +30,7 @@ class GraphSpec extends AnyFunSuite {
     val brute = edges.map { case (a, b) =>
       (nbr(a) & nbr(b)).count(c => c > b).toLong
     }.sum
-    val got = Graph.triangleStats(edges.toSeq.toDF("p1", "p2"), "tri-spec-brute")
+    val got = Graph.triangleStats(edges.toSeq.toDF("p1", "p2"))
       .select("n_triangles", "n_edges", "n_vertices", "wedges")
       .as[(Long, Long, Long, Long)].head()
     assert(got._1 == brute, s"degree-ordered ${got._1} != brute $brute")
@@ -47,9 +47,9 @@ class GraphSpec extends AnyFunSuite {
       .toDF("x", "y")
       .select(least(col("x"), col("y")).as("p1"),
               greatest(col("x"), col("y")).as("p2"))
-    val a = Graph.triangleStats(edges.toSeq.toDF("p1", "p2"), "tri-spec-fwd")
+    val a = Graph.triangleStats(edges.toSeq.toDF("p1", "p2"))
       .select("n_triangles").as[Long].head()
-    val b = Graph.triangleStats(flipped, "tri-spec-rev")
+    val b = Graph.triangleStats(flipped)
       .select("n_triangles").as[Long].head()
     assert(a == b)
   }
@@ -64,7 +64,7 @@ class GraphSpec extends AnyFunSuite {
       }
       r = contrib.map { case (v, s) => v -> (150000000000L + 17 * s / 20) }
     }
-    val got = Graph.pageRanks(edges.toSeq.toDF("p1", "p2"), 3, "spec158")
+    val got = Graph.pageRanks(edges.toSeq.toDF("p1", "p2"), 3)
       .as[(Long, Long)].collect().toMap
     assert(got == r && got.nonEmpty)
     // Floor division only loses mass: total stays within |V| drops of
@@ -116,7 +116,7 @@ class GraphSpec extends AnyFunSuite {
         v -> counts.toSeq.minBy { case (l, c) => (-c, l) }._1
       }
     }
-    val got = Graph.labelProp(edges.toSeq.toDF("p1", "p2"), 2, "spec163")
+    val got = Graph.labelProp(edges.toSeq.toDF("p1", "p2"), 2)
       .as[(Long, Long)].collect().toMap
     assert(got == lab && got.nonEmpty)
   }
@@ -137,11 +137,11 @@ class GraphSpec extends AnyFunSuite {
     }
     val epw = ep.toSeq.toDF("p1", "p2", "pair_orders")
       .select(col("p1"), col("p2"), expr("1000000 div pair_orders").as("w"))
-    val got = Graph.shortestPaths(epw, 3, "spec164")
+    val got = Graph.shortestPaths(epw, 3)
       .as[(Long, Long)].collect().toMap
     assert(got == dist && got.nonEmpty)
     // Distances only shrink with more rounds: 2-round dist dominates 3-round.
-    val got2 = Graph.shortestPaths(epw, 2, "spec164b")
+    val got2 = Graph.shortestPaths(epw, 2)
       .as[(Long, Long)].collect().toMap
     got2.foreach { case (v, d2) => assert(got(v) <= d2) }
     assert(got2.keySet.subsetOf(got.keySet))

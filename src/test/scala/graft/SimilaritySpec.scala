@@ -101,7 +101,7 @@ class SimilaritySpec extends AnyFunSuite {
       (1000L + id, v.map(x => x + 0.12f * rnd.nextGaussian().toFloat)) }
     val df = (base ++ dups).toDF("vec_id", "embedding")
     val tau = 0.8
-    val lsh = Similarity.embedNearDupLsh(spark, df, tau, tag = "spec")
+    val lsh = Similarity.embedNearDupLsh(spark, df, tau)
       .as[(Long, Long, Double)].collect().toSet
     val exact = df.select(col("vec_id").as("i"), col("embedding").as("va"))
       .join(df.select(col("vec_id").as("j"), col("embedding").as("vb")),

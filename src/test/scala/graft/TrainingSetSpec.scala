@@ -138,14 +138,16 @@ class TrainingSetSpec extends AnyFunSuite {
   test("q287 beamed CV sweep == exact sweep (beam = |cls|)") {
     val nCls = Tables.documents(spark, TestSpark.SF)
       .select("source").distinct().count()
-    // collect each sweep before building the next: both cycle the same
-    // checkpointCycled tags, so a later build frees the earlier blocks
-    def sweep(beam: Long): Set[(Long, Long, Long, Long)] =
-      TrainingSet.q287NbCvBeam(spark, TestSpark.SF, beam)
-        .select("alpha", "f", "n_docs", "acc_ppm")
+    // both frames are built before either is collected: each holds its
+    // own checkpoint blocks, so building the second leaves the first
+    // readable
+    val beamedDf = TrainingSet.q287NbCvBeam(spark, TestSpark.SF, TrainingSet.CV_BEAM)
+    val exactDf = TrainingSet.q287NbCvBeam(spark, TestSpark.SF, nCls)
+    def sweep(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long, Long)] =
+      df.select("alpha", "f", "n_docs", "acc_ppm")
         .as[(Long, Long, Long, Long)].collect().toSet
-    val beamed = sweep(TrainingSet.CV_BEAM)
-    val exact = sweep(nCls)
+    val beamed = sweep(beamedDf)
+    val exact = sweep(exactDf)
     assert(nCls > TrainingSet.CV_BEAM)
     assert(beamed == exact && beamed.nonEmpty)
   }
