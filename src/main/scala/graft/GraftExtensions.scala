@@ -9,47 +9,11 @@ import graft.functions.{CosineSimilarity, DotProduct, MinhashSig, RollingHash, S
   * Catalyst expressions available to pure-SQL users
   * (`--conf spark.sql.extensions=graft.GraftExtensions`). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  import GraftFunctions.arity
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => { arity(exprs, "cosine_sim", 2, 2)
-        CosineSimilarity(exprs(0), exprs(1)) }))
-    e.injectFunction((
-      FunctionIdentifier("rolling_hash"),
-      new ExpressionInfo(classOf[RollingHash].getName, "rolling_hash"),
-      (exprs: Seq[Expression]) => { arity(exprs, "rolling_hash", 1, 1)
-        RollingHash(exprs.head) }))
-    e.injectFunction((
-      FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (exprs: Seq[Expression]) => { arity(exprs, "dot_product", 2, 2)
-        DotProduct(exprs(0), exprs(1)) }))
-    e.injectFunction((
-      FunctionIdentifier("shingle_set"),
-      new ExpressionInfo(classOf[ShingleSet].getName, "shingle_set"),
-      (exprs: Seq[Expression]) => { arity(exprs, "shingle_set", 1, 2)
-        if (exprs.length > 1)
-          ShingleSet(exprs.head,
-            GraftFunctions.intLiteralArg(exprs(1), "shingle_set", "n"))
-        else ShingleSet(exprs.head) }))
-    e.injectFunction((
-      FunctionIdentifier("token_counts"),
-      new ExpressionInfo(classOf[TokenCounts].getName, "token_counts"),
-      (exprs: Seq[Expression]) => { arity(exprs, "token_counts", 1, 1)
-        TokenCounts(exprs.head) }))
-    e.injectFunction((
-      FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinhashSig].getName, "minhash_sig"),
-      (exprs: Seq[Expression]) => { arity(exprs, "minhash_sig", 2, 2)
-        MinhashSig(exprs.head,
-          GraftFunctions.intLiteralArg(exprs(1), "minhash_sig", "numHashes")) }))
-    e.injectFunction((
-      FunctionIdentifier("simhash_sig"),
-      new ExpressionInfo(classOf[SimhashSig].getName, "simhash_sig"),
-      (exprs: Seq[Expression]) => { arity(exprs, "simhash_sig", 1, 1)
-        SimhashSig(exprs.head) }))
+    GraftFunctions.builders.foreach { case (name, cls, build) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), build))
+    }
     e.injectOptimizerRule(_ => graft.plans.TopKRewrite)
     e.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
   }
@@ -82,36 +46,33 @@ object GraftFunctions {
     }
   }
 
+  private[graft] type Builder = (String, Class[_ <: Expression], Seq[Expression] => Expression)
+
+  /** One builder per SQL name with its argument-count check; the
+    * extension entry point and `register` both read this table. */
+  private[graft] val builders: Seq[Builder] = {
+    def fn(name: String, cls: Class[_ <: Expression], lo: Int, hi: Int)(
+        build: Seq[Expression] => Expression): Builder =
+      (name, cls, (exprs: Seq[Expression]) => {
+        arity(exprs, name, lo, hi); build(exprs) })
+    Seq(
+      fn("cosine_sim", classOf[CosineSimilarity], 2, 2)(
+        e => CosineSimilarity(e(0), e(1))),
+      fn("rolling_hash", classOf[RollingHash], 1, 1)(e => RollingHash(e.head)),
+      fn("dot_product", classOf[DotProduct], 2, 2)(e => DotProduct(e(0), e(1))),
+      fn("shingle_set", classOf[ShingleSet], 1, 2)(e =>
+        if (e.length > 1) ShingleSet(e.head, intLiteralArg(e(1), "shingle_set", "n"))
+        else ShingleSet(e.head)),
+      fn("token_counts", classOf[TokenCounts], 1, 1)(e => TokenCounts(e.head)),
+      fn("minhash_sig", classOf[MinhashSig], 2, 2)(e =>
+        MinhashSig(e.head, intLiteralArg(e(1), "minhash_sig", "numHashes"))),
+      fn("simhash_sig", classOf[SimhashSig], 1, 1)(e => SimhashSig(e.head)))
+  }
+
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "cosine_sim", exprs => { arity(exprs, "cosine_sim", 2, 2)
-        CosineSimilarity(exprs(0), exprs(1)) }, "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "rolling_hash", exprs => { arity(exprs, "rolling_hash", 1, 1)
-        RollingHash(exprs.head) }, "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "dot_product", exprs => { arity(exprs, "dot_product", 2, 2)
-        DotProduct(exprs(0), exprs(1)) }, "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "shingle_set",
-      exprs => { arity(exprs, "shingle_set", 1, 2)
-        if (exprs.length > 1)
-          ShingleSet(exprs.head,
-            GraftFunctions.intLiteralArg(exprs(1), "shingle_set", "n"))
-        else ShingleSet(exprs.head) },
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "token_counts", exprs => { arity(exprs, "token_counts", 1, 1)
-        TokenCounts(exprs.head) }, "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "minhash_sig",
-      exprs => { arity(exprs, "minhash_sig", 2, 2)
-        MinhashSig(exprs.head,
-          GraftFunctions.intLiteralArg(exprs(1), "minhash_sig", "numHashes")) },
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "simhash_sig", exprs => { arity(exprs, "simhash_sig", 1, 1)
-        SimhashSig(exprs.head) }, "scala_udf")
+    builders.foreach { case (name, _, build) =>
+      reg.createOrReplaceTempFunction(name, build, "scala_udf")
+    }
   }
 }

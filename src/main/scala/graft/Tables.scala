@@ -16,14 +16,19 @@ import org.apache.spark.sql.types._
   *    is nondeterministic across retries/AQE re-plans; decimal sums are
   *    exact and therefore stable run-to-run.
   *
-  * Lifetime of materialized frames: a `localCheckpoint` frame's blocks
-  * live exactly as long as the frame is reachable. Operators call
-  * `df.localCheckpoint()` where a subtree has several consumers in one
-  * query; once the query and everything built from it is unreachable,
-  * Spark's `ContextCleaner` frees the blocks after a GC. Nothing is
-  * freed by name, so two live results of the same query never share or
-  * free each other's blocks. Artifacts shared across queries are held
-  * by `perSession`, which keeps them reachable for the application.
+  * Lifetime of materialized frames: a bounded ledger (a small aggregate
+  * that several rollups read) is read by ONE pass. Rollups on a subset
+  * of its keys are windows partitioned by those keys, or one
+  * conditional aggregate over tagged rows, so building the query runs
+  * no job and its lineage stays whole. `df.localCheckpoint()` is kept
+  * only where consumers cannot be folded together: self-joins of a
+  * ledger and iterative loops. Its blocks live exactly as long as the
+  * frame is reachable; once the query and everything built from it is
+  * unreachable, Spark's `ContextCleaner` frees them after a GC. Nothing
+  * is freed by name, so two live results of the same query never share
+  * or free each other's blocks. Artifacts shared across queries are
+  * held by `perSession`, which keeps them reachable for the
+  * application.
   */
 object Tables {
 

@@ -927,36 +927,27 @@ object Analytics {
     * Fano says HOW bursty, this says WHEN the load comes.
     *
     * Scale shape: one (type, dow, hour) aggregate over the fact scan
-    * (map-side combined, 5·7·24 cells max); the dow rollup, shares
-    * and argmax-hour all derive from that cell ledger. */
+    * (map-side combined, 5·7·24 cells max) is the only reader of the
+    * facts; the dow mass, type total and argmax hour are windows over
+    * that cell ledger (partitioned by type, then by (type, dow)), so
+    * the ledger has one consumer and nothing is materialized. */
   def q265WeeklyProfile(s: SparkSession, d: String): DataFrame = {
-    // the ≤ |types|·168 cell ledger feeds the dow rollup, the type
-    // totals AND the peak argmax — materialize it once instead of
-    // re-scanning the fact table per consumer
-    val cells = events(s, d)
+    val byDow = Window.partitionBy(col("event_type"), col("dow"))
+    events(s, d)
       .select(col("event_type"),
         expr("(ts div 86400000000000 + 4) % 7").as("dow"),
         expr("(ts div 3600000000000) % 24").as("hod"))
       .groupBy(col("event_type"), col("dow"), col("hod"))
       .agg(count(lit(1)).as("c"))
-      .localCheckpoint()
-    val byDow = cells.groupBy(col("event_type"), col("dow"))
-      .agg(sum(col("c")).as("n_events"))
-    val tot = byDow.groupBy(col("event_type").as("et"))
-      .agg(sum(col("n_events")).as("n_type"))
-    val peak = cells
+      .withColumn("n_type", sum(col("c")).over(
+        Window.partitionBy(col("event_type"))))
+      .withColumn("n_events", sum(col("c")).over(byDow))
       .withColumn("rk", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("event_type"), col("dow"))
-          .orderBy(col("c").desc, col("hod"))))
+        byDow.orderBy(col("c").desc, col("hod"))))
       .filter(col("rk") === 1)
-      .select(col("event_type"), col("dow"), col("hod").as("peak_hour"),
-        col("c").as("peak_hour_n"))
-    byDow.join(tot, col("event_type") === col("et"))
-      .join(peak, Seq("event_type", "dow"))
       .select(col("event_type"), col("dow"), col("n_events"),
         expr("n_events * 1000000 div n_type").as("share_ppm"),
-        col("peak_hour"), col("peak_hour_n"))
+        col("hod").as("peak_hour"), col("c").as("peak_hour_n"))
       .orderBy(col("event_type"), col("dow"))
   }
 
@@ -1004,35 +995,38 @@ object Analytics {
     * continuously.
     *
     * Scale shape: ONE (user)-keyed conditional aggregate builds the
-    * (pre, post) panel; moments and variant rollups are tiny
-    * aggregates of it. No event-grain joins. */
+    * (pre, post) panel; its only consumer is the 2-row variant rollup,
+    * which also carries each variant's share of the exact moments. The
+    * global moments are sums over that rollup (an unpartitioned window
+    * over 2 rows), so the panel is aggregated once and never
+    * materialized. No event-grain joins. */
   def q270CupedUplift(s: SparkSession, d: String): DataFrame = {
     val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val ev = events(s, d).select(col("user_id"), col("ts"),
       expr("cast(round(value * 100) as bigint)").as("cents"))
     val split = ev.agg((min(col("ts"))
       + lit(CUPED_PRE_DAYS * 86400000000000L)).as("split_ns"))
-    // User panel materialized ONCE (r16): the global-moments aggregate
-    // and the per-variant rollup each re-ran the events scan + split
-    // otherwise (4 events scans in the executed plan). |users| rows.
-    val panel = ev.crossJoin(broadcast(split))
+    val all = Window.partitionBy()
+    ev.crossJoin(broadcast(split))
       .groupBy(col("user_id"))
       .agg(sum(when(col("ts") < col("split_ns"), col("cents"))
         .otherwise(0L)).as("pre"),
         sum(when(col("ts") >= col("split_ns"), col("cents"))
           .otherwise(0L)).as("post"))
-      .withColumn("variant", expr(
-        "cast(conv(substr(md5(cast(user_id as string)), 1, 4), 16, 10) as bigint) % 2"))
-      .localCheckpoint()
-    val mom = panel.agg(count(lit(1)).as("n"),
-      sum(col("pre").cast(d38)).as("spre"),
-      sum(col("post").cast(d38)).as("spost"),
-      sum(col("pre").cast(d38) * col("post")).as("spp"),
-      sum(col("pre").cast(d38) * col("pre")).as("sp2"))
-    panel.groupBy(col("variant"))
+      .groupBy(expr(
+        "cast(conv(substr(md5(cast(user_id as string)), 1, 4), 16, 10) as bigint) % 2")
+        .as("variant"))
       .agg(count(lit(1)).as("n_users"),
-        sum(col("pre")).as("sum_pre"), sum(col("post")).as("sum_post"))
-      .crossJoin(broadcast(mom))
+        sum(col("pre")).as("sum_pre"), sum(col("post")).as("sum_post"),
+        sum(col("pre").cast(d38)).as("vpre"),
+        sum(col("post").cast(d38)).as("vpost"),
+        sum(col("pre").cast(d38) * col("post")).as("vpp"),
+        sum(col("pre").cast(d38) * col("pre")).as("vp2"))
+      .withColumn("n", sum(col("n_users")).over(all))
+      .withColumn("spre", sum(col("vpre")).over(all))
+      .withColumn("spost", sum(col("vpost")).over(all))
+      .withColumn("spp", sum(col("vpp")).over(all))
+      .withColumn("sp2", sum(col("vp2")).over(all))
       .select(col("variant"), col("n_users"), col("sum_pre"),
         col("sum_post"),
         expr("cast(round(cast(sum_post as double) / n_users * 10) as bigint)")
@@ -1124,14 +1118,15 @@ object Analytics {
     * (the panel — needed by any readout); the ×(K+1) explode is
     * map-side over the panel and collapses immediately into a
     * (K+1)-group partial aggregate, so no shuffle grows with K·users;
-    * everything after is a (K+1)-row ledger vs a broadcast 1-row
-    * observed statistic. */
+    * everything after reads the (K+1)-row ledger once: the observed
+    * statistic reaches every row through an unpartitioned window over
+    * those K+1 rows, then one aggregate counts the permutations. */
   def q272PermTest(s: SparkSession, d: String): DataFrame = {
     val panel = events(s, d)
       .select(col("user_id"),
         expr("cast(round(value * 100) as bigint)").as("cents"))
       .groupBy(col("user_id")).agg(sum(col("cents")).as("cents"))
-    val stats = panel
+    panel
       .select(col("user_id"), col("cents"),
         explode(expr(s"sequence(0, $PERM_K)")).as("p"))
       .withColumn("g", expr(
@@ -1151,11 +1146,9 @@ object Analytics {
              else cast(round(abs(cast(s1 as double) / n1
                - cast(s - s1 as double) / (n - n1)) * 1000) as bigint) end""")
         .as("diff_milli"))
-        .localCheckpoint()
-    val obs = stats.filter(col("p") === 0)
-      .select(col("diff_milli").as("obs_milli"))
-    stats.filter(col("p") > 0)
-      .crossJoin(broadcast(obs))
+      .withColumn("obs_milli", max(when(col("p") === 0, col("diff_milli")))
+        .over(Window.partitionBy()))
+      .filter(col("p") > 0)
       .agg(count(lit(1)).as("n_perms"),
         max(col("obs_milli")).as("obs_diff_milli"),
         sum(when(col("diff_milli") >= col("obs_milli"), 1L).otherwise(0L))

@@ -71,17 +71,14 @@ object Graph {
 
   // ---- q156: association rules (support / confidence / lift) ----
 
-  /** Association rules over a basket frame: both directions of every
-    * frequent pair, with support, confidence and lift from exact
-    * integer counts. Item counts (|parts| rows) and the basket count
-    * (1 row) broadcast back onto the pair table — margins are
-    * aggregates OF the already-reduced tables (the q140 stance), never
-    * a second corpus scan. */
-  def assocRules(b: DataFrame, minSup: Int): DataFrame =
-    assocRulesFrom(b, pairCounts(b, minSup))
-
-  /** Rule metrics from a prebuilt pair table (HAVING floors compose, so
-    * any pc with floor ≤ the desired one can be filtered down first). */
+  /** Association rules from a prebuilt pair table `pc` over the basket
+    * frame `b`: both directions of every frequent pair, with support,
+    * confidence and lift from exact integer counts. Item counts
+    * (|parts| rows) and the basket count (1 row) broadcast back onto
+    * the pair table — margins are aggregates OF the already-reduced
+    * tables (the q140 stance), never a second corpus scan. HAVING
+    * floors compose, so any pc with floor ≤ the desired one can be
+    * filtered down first. */
   def assocRulesFrom(b: DataFrame, pc: DataFrame): DataFrame = {
     val ic = b.groupBy(col("p")).agg(count(lit(1)).as("ic"))
     val nb = b.agg(countDistinct(col("o")).as("nb"))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Skew-mitigation utilities (SURVEY.md §4 / builder scale mandate).
@@ -35,12 +35,6 @@ object Skew {
       explode(sequence(lit(0), lit(salts - 1))))
     bigS.join(smallS, Seq(key, "__salt"), joinType).drop("__salt")
   }
-
-  /** Per-key frequency table — the detection half of skew handling:
-    * feed its top rows into a salts decision or a broadcast list. */
-  def keyHistogram(df: DataFrame, key: Column, topN: Int): DataFrame =
-    df.groupBy(key.as("key")).agg(count(lit(1)).as("n"))
-      .orderBy(desc("n"), col("key")).limit(topN)
 
   // ---- q149: join-key skew diagnosis report ----
 

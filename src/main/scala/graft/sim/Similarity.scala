@@ -1,6 +1,6 @@
 package graft.sim
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables._
@@ -574,7 +574,10 @@ object Similarity {
     *
     * Scale shape: sketching rides the one-pass JL projection; the
     * contingency table is one (cluster,label) aggregate (≤ 256·|labels|
-    * rows), and everything after is arithmetic on that tiny table.
+    * rows), read once: each cell is tagged under its cluster and its
+    * label, one (axis, key) aggregate yields both margins with their
+    * cell pair counts and per-cluster majority mass, and one global
+    * aggregate sums them.
     * Products run in decimal(38,0) — at 100 TB row counts, T·P ≈ n⁴
     * overflows int64 long before it overflows decimal(38,0). */
   /** The SRP sketch's low byte as an unsupervised partition of the
@@ -592,33 +595,27 @@ object Similarity {
 
   def q252ClusterAri(s: SparkSession, d: String): DataFrame = {
     val sk = srpByteBuckets(s, d).select(col("vec_id"), col("cluster"))
-    // the contingency table is ≤ 256·|labels| rows and feeds FOUR
-    // downstream aggregates — materialize it once instead of
-    // re-deriving the JL sketch per consumer
-    val cont = sk
+    def pairs(c: String) = expr(s"cast($c as decimal(38,0)) * ($c - 1) div 2")
+    def onAxis(axis: Int, c: Column) = when(col("axis") === axis, c)
+    sk
       .join(embeddings(s, d).select(col("vec_id"),
         col("label").cast("long").as("label")), Seq("vec_id"))
       .groupBy(col("cluster"), col("label")).agg(count(lit(1)).as("nij"))
-      .localCheckpoint()
-    val stats = cont.agg(
-      sum(col("nij")).as("n"),
-      countDistinct(col("cluster")).as("n_clusters"),
-      countDistinct(col("label")).as("n_labels"),
-      sum(expr("cast(nij as decimal(38,0)) * (nij - 1) div 2"))
-        .cast("long").as("p_pairs"))
-    val aPairs = cont.groupBy(col("cluster")).agg(sum(col("nij")).as("ai"))
-      .agg(sum(expr("cast(ai as decimal(38,0)) * (ai - 1) div 2"))
-        .cast("long").as("a_pairs"))
-    val bPairs = cont.groupBy(col("label")).agg(sum(col("nij")).as("bj"))
-      .agg(sum(expr("cast(bj as decimal(38,0)) * (bj - 1) div 2"))
-        .cast("long").as("b_pairs"))
-    val purity = cont
-      .withColumn("rk", row_number().over(Window.partitionBy(col("cluster"))
-        .orderBy(col("nij").desc, col("label"))))
-      .filter(col("rk") === 1)
-      .agg(sum(col("nij")).as("purity_mass"))
-    stats.crossJoin(broadcast(aPairs)).crossJoin(broadcast(bPairs))
-      .crossJoin(broadcast(purity))
+      .select(col("nij"), explode(array(
+        struct(lit(0).as("axis"), col("cluster").as("key")),
+        struct(lit(1).as("axis"), col("label").as("key")))).as("m"))
+      .groupBy(col("m.axis").as("axis"), col("m.key").as("key"))
+      .agg(sum(col("nij")).as("tot"), max(col("nij")).as("top"),
+        sum(pairs("nij")).as("cell_pairs"))
+      .agg(
+        sum(onAxis(0, col("tot"))).as("n"),
+        count(onAxis(0, col("key"))).as("n_clusters"),
+        count(onAxis(1, col("key"))).as("n_labels"),
+        sum(onAxis(0, col("cell_pairs"))).cast("long").as("p_pairs"),
+        sum(onAxis(0, pairs("tot"))).cast("long").as("a_pairs"),
+        sum(onAxis(1, pairs("tot"))).cast("long").as("b_pairs"),
+        // a cluster's majority-label mass is its largest cell
+        sum(onAxis(0, col("top"))).as("purity_mass"))
       .withColumn("t_pairs", expr(
         "cast(cast(n as decimal(38,0)) * (n - 1) div 2 as bigint)"))
       .withColumn("ari_num", expr(

@@ -446,33 +446,17 @@ object Dedup {
     * codegen ShingleSet), each span ships as a 60-bit md5-derived LONG
     * (8 bytes through the shuffle instead of a ~50-char string, and
     * engine-portable so the oracle is exact), and the inverted index
-    * joins hash-to-hash — same single-exchange pattern as q40. */
+    * joins hash-to-hash — same single-exchange pattern as q40. A
+    * boilerplate span shared by m documents contributes m²/2 join rows;
+    * no doc-frequency cutoff drops it, so `shared_spans` stays exact. */
   val SPAN = 8
 
-  /** Doc-frequency cutoff for span hashes (off by default). A
-    * boilerplate span shared by m documents contributes m²/2 join rows
-    * — the same heavy-tail hazard as q40's frequent shingles, but with
-    * no verify stage to hide behind: dropping a span REMOVES its
-    * contribution from `shared_spans`, so this cutoff is a documented
-    * approximation (license headers / templates are usually exactly
-    * what span-dedup wants to ignore anyway — Lee et al. drop
-    * top-frequency spans for the same reason). Off here keeps the oracle exact; DedupSpec asserts the
-    * gated variant returns a subset with no inflated counts. */
-  val STOP_SPAN_CONF = "spark.graft.dedup.stopSpanDf"
-
   def q79SharedSpans(s: SparkSession, d: String): DataFrame = {
-    val raw = documents(s, d)
+    val spans = documents(s, d)
       .select(col("doc_id"), explode(
         graft.functions.ShingleSet.shingle_set(col("text"), SPAN)).as("span"))
       .select(col("doc_id"),
         expr("cast(conv(substr(md5(span),1,15),16,10) as bigint)").as("h"))
-    val kept = s.conf.getOption(STOP_SPAN_CONF).map(_.toInt) match {
-      case Some(cut) => raw.join(
-        raw.groupBy(col("h")).agg(count(lit(1)).as("df"))
-          .filter(col("df") <= cut).select(col("h")), Seq("h"))
-      case None => raw
-    }
-    val spans = kept
       .repartition(shufflePartitions(s), col("h"))
     spans.as("a")
       .join(spans.as("b"), col("a.h") === col("b.h")

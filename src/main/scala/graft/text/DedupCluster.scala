@@ -49,8 +49,7 @@ object DedupCluster {
     * edges the collected set is ~16 MB — still trivially driver-safe;
     * a corpus-scaled pair graph at 100 TB exceeds the ceiling and runs
     * the O(log n) star contraction unchanged. */
-  val CC_LOCAL_MAX_EDGES_CONF = "spark.graft.cc.localMaxEdges"
-  private val CC_LOCAL_MAX_EDGES_DEFAULT = 1000000L
+  val CC_LOCAL_MAX_EDGES = 1000000L
 
   /** Connected components over an undirected pair list (`i`, `j`).
     * Returns one row per node that appears in any edge: (node, root)
@@ -61,7 +60,13 @@ object DedupCluster {
     * callers get a small label table with no live lineage into the CC
     * loop's intermediate edge sets. The label blocks live as long as the
     * returned frame is reachable (see `graft.Tables`). */
-  def connectedComponents(pairs: DataFrame): DataFrame = {
+  def connectedComponents(pairs: DataFrame): DataFrame =
+    connectedComponents(pairs, CC_LOCAL_MAX_EDGES)
+
+  /** `connectedComponents` with the driver-finish ceiling as a
+    * parameter: 0 forces the distributed loop at any size. */
+  private[graft] def connectedComponents(pairs: DataFrame,
+      localMaxEdges: Long): DataFrame = {
     // localCheckpoint (not cache) between rounds: each round references
     // the previous edge set several times through unions and joins, so
     // an uncut lineage multiplies ~8× per round and analysis time goes
@@ -95,11 +100,9 @@ object DedupCluster {
     // (every production caller; an exotic type falls through to the
     // type-agnostic loop).
     val s = pairs.sparkSession
-    val localMax = s.conf.getOption(CC_LOCAL_MAX_EDGES_CONF)
-      .map(_.toLong).getOrElse(CC_LOCAL_MAX_EDGES_DEFAULT)
     val longTyped = edges.schema.fields
       .forall(_.dataType == org.apache.spark.sql.types.LongType)
-    if (longTyped && prev._1 <= localMax) {
+    if (longTyped && prev._1 <= localMaxEdges) {
       val rows = edges.collect()
       edgeRdds.foreach(_.unpersist(blocking = false))
       val parent = new java.util.HashMap[Long, java.lang.Long](

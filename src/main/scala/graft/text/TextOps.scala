@@ -736,32 +736,29 @@ object TextOps {
     * same exact-arithmetic footing as the filters themselves.
     *
     * Scale shape: the confusion matrix is ONE (lang, predicted)
-    * aggregate over the corpus (the q35 exchange); tp/fp/fn derive
-    * from conditional sums over that |classes|²-bounded ledger. */
+    * aggregate over the corpus (the q35 exchange); its one consumer
+    * tags each cell twice, once under its actual and once under its
+    * predicted class, and one conditional aggregate over those
+    * |classes|²-bounded rows yields tp/fp/fn per class. */
   def q245LangidEval(s: SparkSession, d: String): DataFrame = {
-    // Confusion matrix materialized ONCE (r16): tp/fn/fp and the class
-    // roster each re-ran the corpus aggregate (with the regex-heavy
-    // langGuess) otherwise — 4 documents scans in the executed plan.
-    // The roster derives from cm (every document contributes a cm row,
-    // so cm's distinct lang == the corpus's distinct lang).
-    val cm = documents(s, d)
+    // every document contributes a cell, so the classes tagged as
+    // actual are exactly the corpus's distinct lang
+    def cellsOf(cond: Column) = sum(when(cond, col("n")).otherwise(0L))
+    documents(s, d)
       .groupBy(col("lang"), langGuess(col("text")).as("predicted"))
       .agg(count(lit(1)).as("n"))
-      .localCheckpoint()
-    val tp = cm.filter(col("lang") === col("predicted"))
-      .select(col("lang"), col("n").as("tp"))
-    val fn = cm.filter(col("lang") =!= col("predicted"))
-      .groupBy(col("lang")).agg(sum(col("n")).as("fn"))
-    val fp = cm.filter(col("lang") =!= col("predicted"))
-      .groupBy(col("predicted").as("lang")).agg(sum(col("n")).as("fp"))
-    cm.select(col("lang")).distinct()
-      .join(tp, Seq("lang"), "left")
-      .join(fn, Seq("lang"), "left")
-      .join(fp, Seq("lang"), "left")
-      .select(col("lang"),
-        coalesce(col("tp"), lit(0L)).as("tp"),
-        coalesce(col("fp"), lit(0L)).as("fp"),
-        coalesce(col("fn"), lit(0L)).as("fn"))
+      .select(col("n"), (col("lang") === col("predicted")).as("hit"),
+        explode(array(
+          struct(col("lang").as("k"), lit(true).as("actual")),
+          struct(col("predicted").as("k"), lit(false).as("actual"))))
+          .as("t"))
+      .groupBy(col("t.k").as("lang"))
+      .agg(max(col("t.actual")).as("is_class"),
+        cellsOf(col("t.actual") && col("hit")).as("tp"),
+        cellsOf(!col("t.actual") && !col("hit")).as("fp"),
+        cellsOf(col("t.actual") && !col("hit")).as("fn"))
+      .filter(col("is_class"))
+      .select(col("lang"), col("tp"), col("fp"), col("fn"))
       .withColumn("precision_ppm", expr(
         "case when tp + fp = 0 then 0L else tp * 1000000L div (tp + fp) end"))
       .withColumn("recall_ppm", expr(
@@ -865,26 +862,35 @@ object TextOps {
     * marginal mass on one class, N² = S) degenerates to kappa = 0.
     *
     * Scale shape: ONE (source, a, b) corpus aggregate (both raters are
-    * row-local codegen expressions over one scan); marginals, products
-    * and kappa all derive from that |sources|·|classes|²-bounded
-    * ledger. */
+    * row-local codegen expressions over one scan), read once: each
+    * cell is tagged under its a-class and its b-class, one
+    * (source, class) aggregate yields both marginals and the agreement
+    * mass, and one (source) aggregate sums them into N, A and S. All
+    * of it stays within |sources|·|classes|² rows. */
   def q271RaterKappa(s: SparkSession, d: String): DataFrame = {
-    val cm = documents(s, d)
+    def mass(cond: Column) = sum(when(cond, col("n")).otherwise(0L))
+    documents(s, d)
       .groupBy(col("source"), langGuess(col("text")).as("a"),
         langVote(col("text")).as("b"))
       .agg(count(lit(1)).as("n"))
-    val cmc = cm.localCheckpoint()
-    val tot = cmc.groupBy(col("source")).agg(
-      sum(col("n")).as("n_docs"),
-      sum(when(col("a") === col("b"), col("n")).otherwise(0L)).as("agree"))
-    val ma = cmc.groupBy(col("source"), col("a").as("k"))
-      .agg(sum(col("n")).as("na"))
-    val mb = cmc.groupBy(col("source"), col("b").as("k"))
-      .agg(sum(col("n")).as("nb"))
-    val se = ma.join(mb, Seq("source", "k"))
+      .select(col("source"), col("n"), (col("a") === col("b")).as("hit"),
+        explode(array(
+          struct(col("a").as("k"), lit(true).as("is_a")),
+          struct(col("b").as("k"), lit(false).as("is_a")))).as("m"))
+      .groupBy(col("source"), col("m.k").as("k"))
+      .agg(mass(col("m.is_a")).as("na"), mass(!col("m.is_a")).as("nb"),
+        mass(col("m.is_a") && col("hit")).as("agree"))
+      // S sums over classes BOTH raters used (na, nb > 0), as the
+      // oracle's marginal join does; a source with no such class has
+      // no row there
+      .withColumn("both", col("na") > 0L && col("nb") > 0L
+        && col("k").isNotNull)
       .groupBy(col("source"))
-      .agg(sum(expr("cast(na as decimal(38,0)) * nb")).as("s_e"))
-    tot.join(se, Seq("source"))
+      .agg(sum(col("na")).as("n_docs"), sum(col("agree")).as("agree"),
+        sum(when(col("both"), expr("cast(na as decimal(38,0)) * nb")))
+          .as("s_e"),
+        max(col("both")).as("any_both"))
+      .filter(col("any_both") && col("source").isNotNull)
       .select(col("source"), col("n_docs"), col("agree"),
         expr("agree * 1000000L div n_docs").as("po_ppm"),
         expr("cast(s_e * 1000000 div (cast(n_docs as decimal(38,0)) * n_docs) as bigint)")

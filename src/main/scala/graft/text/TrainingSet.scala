@@ -1330,10 +1330,11 @@ object TrainingSet {
     *
     * Scale shape: quality is row-local (q36's expression); fences are
     * a broadcast 1-row aggregate; the corpus-sized work is ONE
-    * (phase, source) cell aggregate; phase offsets derive from the
-    * 4-row phase ledger (the q98 offset pattern) and broadcast back to
-    * the ≤ 4·|sources|-row cell table. No per-doc global ordering is
-    * ever materialized — position ranges come from phase mass alone. */
+    * (phase, source) cell aggregate, read once: phase mass comes from a
+    * (phase) window and the running offset from a phase-ordered window
+    * over the ≤ 4·|sources|-row cell table (the q98 offset pattern).
+    * No per-doc global ordering is ever materialized — position ranges
+    * come from phase mass alone. */
   def q275CurriculumSchedule(s: SparkSession, d: String): DataFrame = {
     val docs = TextOps.withQuality(documents(s, d))
       .select(col("source"), col("n_tok"),
@@ -1342,26 +1343,20 @@ object TrainingSet {
       expr("percentile(q_micro, 0.75)").as("f75"),
       expr("percentile(q_micro, 0.5)").as("f50"),
       expr("percentile(q_micro, 0.25)").as("f25"))
-    val cells = docs.crossJoin(broadcast(fences))
+    val byPhase = Window.partitionBy(col("phase"))
+    docs.crossJoin(broadcast(fences))
       .withColumn("phase",
         lit(1L) + when(col("q_micro") < col("f75"), 1L).otherwise(0L)
           + when(col("q_micro") < col("f50"), 1L).otherwise(0L)
           + when(col("q_micro") < col("f25"), 1L).otherwise(0L))
       .groupBy(col("phase"), col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"))
-      .localCheckpoint()
-    val wBefore = Window.orderBy(col("phase"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wUpto = Window.orderBy(col("phase"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val off = cells.groupBy(col("phase"))
-      .agg(sum(col("n_docs")).as("pd"), sum(col("n_tokens")).as("pt"))
-      .withColumn("before", coalesce(sum(col("pd")).over(wBefore), lit(0L)))
-      .withColumn("upto", sum(col("pd")).over(wUpto))
-      .select(col("phase"), col("pt"), col("before"), col("upto"))
-    cells.join(broadcast(off), Seq("phase"))
+      // default frame: every cell of this and all earlier phases
+      .withColumn("upto", sum(col("n_docs")).over(Window.orderBy(col("phase"))))
+      .withColumn("pd", sum(col("n_docs")).over(byPhase))
+      .withColumn("pt", sum(col("n_tokens")).over(byPhase))
       .select(col("phase"), col("source"), col("n_docs"), col("n_tokens"),
-        (col("before") + 1L).as("phase_start"),
+        (col("upto") - col("pd") + 1L).as("phase_start"),
         col("upto").as("phase_end"),
         expr("""cast(cast(n_tokens as decimal(38,0)) * 1000000
           div pt as bigint)""").as("tok_share_ppm"))

@@ -28,8 +28,9 @@ class DedupClusterSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def components(pairs: Seq[(Long, Long)]): Map[Long, Long] =
-    DedupCluster.connectedComponents(pairs.toDF("i", "j"))
+  private def components(pairs: Seq[(Long, Long)],
+      localMaxEdges: Long = DedupCluster.CC_LOCAL_MAX_EDGES): Map[Long, Long] =
+    DedupCluster.connectedComponents(pairs.toDF("i", "j"), localMaxEdges)
       .as[(Long, Long)].collect().toMap
 
   test("chain, star, singleton-free mix resolves to min roots") {
@@ -86,14 +87,8 @@ class DedupClusterSpec extends AnyFunSuite {
     // Below the localMaxEdges ceiling CC finishes with a driver
     // union-find; force the distributed loop with a 0 ceiling and assert
     // identical labels on the same adversarial + random graphs.
-    def both(pairs: Seq[(Long, Long)]): (Map[Long, Long], Map[Long, Long]) = {
-      val local = components(pairs)
-      spark.conf.set(DedupCluster.CC_LOCAL_MAX_EDGES_CONF, "0")
-      val dist =
-        try components(pairs)
-        finally spark.conf.unset(DedupCluster.CC_LOCAL_MAX_EDGES_CONF)
-      (local, dist)
-    }
+    def both(pairs: Seq[(Long, Long)]): (Map[Long, Long], Map[Long, Long]) =
+      (components(pairs), components(pairs, localMaxEdges = 0))
     val chain = (0L until 40L).map(k => (k, k + 1))
     val (lc, dc) = both(chain)
     assert(lc == dc && lc.values.toSet == Set(0L))

@@ -42,21 +42,6 @@ class DedupSpec extends AnyFunSuite {
     assert(ppjoin == direct && direct.nonEmpty)
   }
 
-  test("q79 span-df cutoff returns a subset with no inflated counts") {
-    val exact = Dedup.q79SharedSpans(spark, TestSpark.SF)
-      .as[(Long, Long, Long)].collect()
-      .map { case (i, j, n) => (i, j) -> n }.toMap
-    spark.conf.set(Dedup.STOP_SPAN_CONF, "2")
-    try {
-      val cut = Dedup.q79SharedSpans(spark, TestSpark.SF)
-        .as[(Long, Long, Long)].collect()
-        .map { case (i, j, n) => (i, j) -> n }.toMap
-      assert(cut.nonEmpty && cut.keySet.subsetOf(exact.keySet))
-      // dropping frequent spans can only reduce a pair's shared count
-      cut.foreach { case (k, n) => assert(n <= exact(k)) }
-    } finally spark.conf.unset(Dedup.STOP_SPAN_CONF)
-  }
-
   test("minhash LSH output equals the exact jaccard join (sf0.001)") {
     val exact = Dedup.q40NgramJaccard(spark, TestSpark.SF)
       .select("i", "j").as[(Long, Long)].collect().toSet

@@ -77,7 +77,7 @@ class GraphSpec extends AnyFunSuite {
 
   test("q156 rule metrics are mutually consistent and both directions present") {
     val b = Graph.baskets(spark, TestSpark.SF)
-    val rules = Graph.assocRules(b, 2)
+    val rules = Graph.assocRulesFrom(b, Graph.pairCounts(b, 2))
       .select("antecedent", "consequent", "pair_orders", "support",
               "confidence", "lift")
       .as[(Long, Long, Long, Double, Double, Double)].collect()

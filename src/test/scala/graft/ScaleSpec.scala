@@ -60,14 +60,6 @@ class ScaleSpec extends AnyFunSuite {
     }
   }
 
-  test("keyHistogram surfaces the heaviest keys in order") {
-    val h = Skew.keyHistogram(
-      Tables.events(spark, TestSpark.SF), col("event_type"), 3)
-      .as[(String, Long)].collect()
-    assert(h.length == 3)
-    assert(h.map(_._2).toSeq == h.map(_._2).sortBy(-_).toSeq)
-  }
-
   test("bucketed tables join exchange-free (no shuffle in SortMergeJoin plan)") {
     // The 100 TB co-location mechanic: bucketBy on the join key at write
     // time satisfies the join's ClusteredDistribution at read time — the

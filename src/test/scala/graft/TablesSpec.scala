@@ -1,15 +1,19 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, GraftInternal}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The lifetime rule of materialized frames (see `Tables`): a
   * `localCheckpoint` frame's blocks live as long as the frame is
-  * reachable, and `perSession` keeps shared artifacts reachable. */
+  * reachable, `perSession` keeps shared artifacts reachable, and a
+  * bounded ledger with one consumer is not materialized at all. */
 class TablesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -41,7 +45,7 @@ class TablesSpec extends AnyFunSuite {
     }
     val perBuild = for {
       _ <- 1 to 3
-      q <- Seq("q265_weekly_profile", "q80_ppjoin_jaccard")
+      q <- Seq("q273_simpson_flip", "q80_ppjoin_jaccard")
     } yield build(q)
     // every build materialized its own blocks; none shares another's
     assert(perBuild.forall(_.nonEmpty))
@@ -82,5 +86,30 @@ class TablesSpec extends AnyFunSuite {
     assert(builds.get == 2)
     assert(!(other eq got(0)))
     assert(other.count() == 100)
+  }
+
+  test("one-consumer ledger queries start no localCheckpoint job while built") {
+    val sc = spark.sparkContext
+    val sites = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      // the job's call site: set explicitly, or its result stage's name
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        sites.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("callSite.short")))
+          .orElse(e.stageInfos.sortBy(-_.stageId).headOption.map(_.name))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try for (q <- Seq("q194_weighted_median", "q245_langid_eval",
+        "q252_cluster_ari", "q258_l_diversity", "q265_weekly_profile",
+        "q270_cuped_uplift", "q271_rater_kappa", "q272_perm_test",
+        "q275_curriculum_schedule")) {
+      GraftInternal.drainListenerBus(sc)
+      sites.clear()
+      SparkEntry.queries(q)(spark, TestSpark.SF)
+      GraftInternal.drainListenerBus(sc)
+      val checkpoints = sites.asScala.filter(_.contains("localCheckpoint"))
+      assert(checkpoints.isEmpty, s"$q built with ${checkpoints.mkString(", ")}")
+    } finally sc.removeSparkListener(listener)
   }
 }
