@@ -96,7 +96,7 @@ object Bench {
       field("sf").map(_.asText()),
       field("cpus").map(_.asInt()),
       field("queries").toSeq
-        .flatMap(_.fields().asScala.map(e => e.getKey -> e.getValue.asDouble()))
+        .flatMap(_.properties().asScala.map(e => e.getKey -> e.getValue.asDouble()))
         .toMap,
       field("calibration").flatMap(c => Option(c.get("min_sec"))).map(_.asDouble()))
   }

@@ -28,7 +28,8 @@ import org.apache.spark.sql.types._
   * is freed by name, so two live results of the same query never share
   * or free each other's blocks. Artifacts shared across queries are
   * held by `perSession`, which keeps them reachable for the
-  * application.
+  * application. A loop's invariant input that is already a `perSession`
+  * artifact is not materialized again.
   */
 object Tables {
 

@@ -69,6 +69,15 @@ object Graph {
       .filter(col("pair_orders") >= minSup)
   }
 
+  /** Every (p1, p2) as both (src = p1, dst = p2) and (src = p2,
+    * dst = p1), carrying `extraCols`. Over `pairs2Shared` it is a
+    * projection of that per-session checkpoint, so loops read it as is. */
+  def symmetricEdges(ep: DataFrame, extraCols: String*): DataFrame = {
+    val extra = extraCols.map(col)
+    ep.select(col("p1").as("src") +: col("p2").as("dst") +: extra: _*)
+      .unionAll(ep.select(col("p2").as("src") +: col("p1").as("dst") +: extra: _*))
+  }
+
   // ---- q156: association rules (support / confidence / lift) ----
 
   /** Association rules from a prebuilt pair table `pc` over the basket
@@ -249,8 +258,7 @@ object Graph {
     * scale down to keep the TOTAL at ~10^18 — same arithmetic,
     * smaller constants. */
   def pageRanks(ep: DataFrame, iters: Int): DataFrame = {
-    val e = ep.select(col("p1").as("src"), col("p2").as("dst"))
-      .unionAll(ep.select(col("p2").as("src"), col("p1").as("dst")))
+    val e = symmetricEdges(ep)
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("dg"))
     val adj = e.join(deg, "src").localCheckpoint()
     var r = deg.select(col("src").as("id"), lit(1000000000000L).as("r"))
@@ -309,15 +317,14 @@ object Graph {
     * the min.
     *
     * Scale shape: each step's joins are frontier-sized on the probe
-    * side (the adjacency is the checkpointed build side, bucketable on
-    * src at cluster scale per q134); the frontier and visited set are
-    * localCheckpointed per layer — the lineage cut every iterative
-    * dataflow needs, without which the plan tree doubles per hop and
-    * the optimizer re-derives the whole prefix each step. */
+    * side (the adjacency, `symmetricEdges` over the per-session pair
+    * checkpoint, is the build side, bucketable on src at cluster scale
+    * per q134); the frontier and visited set are localCheckpointed per
+    * layer — the lineage cut every iterative dataflow needs, without
+    * which the plan tree doubles per hop and the optimizer re-derives
+    * the whole prefix each step. */
   def bfsLayers(ep: DataFrame, hops: Int): DataFrame = {
-    val e = ep.select(col("p1").as("src"), col("p2").as("dst"))
-      .unionAll(ep.select(col("p2").as("src"), col("p1").as("dst")))
-    val adj = e.localCheckpoint()
+    val adj = symmetricEdges(ep)
     var layers = ep.agg(min(col("p1")).as("v")).withColumn("dist", lit(0L))
       .localCheckpoint()
     var frontier = layers
@@ -375,17 +382,16 @@ object Graph {
     * dataflow).
     *
     * Scale shape per round: one equi-join of the |V|-row label table
-    * against the checkpointed adjacency, a map-side-combinable
-    * (vertex, label) count, and a per-vertex argmax window whose
+    * against the adjacency (`symmetricEdges` over the per-session
+    * pair checkpoint), a map-side-combinable (vertex, label) count,
+    * and a per-vertex argmax window whose
     * partitions are bounded by DEGREE (distinct neighbor labels ≤
     * neighbors), not data size. Label state is |V| rows — the same
     * footprint as PageRank's rank table; on a cluster the adjacency
     * is bucketed on src (q134) making each round exchange-free on the
     * big side. */
   def labelProp(ep: DataFrame, iters: Int): DataFrame = {
-    val e = ep.select(col("p1").as("src"), col("p2").as("dst"))
-      .unionAll(ep.select(col("p2").as("src"), col("p1").as("dst")))
-    val adj = e.localCheckpoint()
+    val adj = symmetricEdges(ep)
     var lab = adj.select(col("src").as("v")).distinct().withColumn("lab", col("v"))
       .localCheckpoint()
     val w = Window.partitionBy(col("v")).orderBy(desc("c"), col("lab"))
@@ -442,13 +448,12 @@ object Graph {
     *
     * Weights are int64 (1e6 div pair_orders: stronger co-purchase =
     * cheaper hop), so min-combining is exact and engine-portable — no
-    * float path sums. Per round: one join against the checkpointed
-    * adjacency + one map-side-combinable min agg; only the dist table
-    * (≤ |V| rows) carries between rounds. */
+    * float path sums. Per round: one join against the adjacency
+    * (`symmetricEdges` over the per-session pair checkpoint) + one
+    * map-side-combinable min agg; only the dist table (≤ |V| rows)
+    * carries between rounds. */
   def shortestPaths(epw: DataFrame, rounds: Int): DataFrame = {
-    val e = epw.select(col("p1").as("src"), col("p2").as("dst"), col("w"))
-      .unionAll(epw.select(col("p2").as("src"), col("p1").as("dst"), col("w")))
-    val adj = e.localCheckpoint()
+    val adj = symmetricEdges(epw, "w")
     var dist = epw.agg(min(col("p1")).as("v")).withColumn("dist", lit(0L))
       .localCheckpoint()
     for (k <- 1 to rounds) {
@@ -565,9 +570,10 @@ object Graph {
     * ledgers shuffle. Oracle: $CORE_ROUNDS unrolled CTE rounds. */
   def q235KCore(s: SparkSession, d: String): DataFrame = {
     val ep = pairs2Shared(s, d).select(col("p1"), col("p2"))
-    val edges = ep.select(col("p1").as("src"), col("p2").as("dst"))
-      .unionAll(ep.select(col("p2").as("src"), col("p1").as("dst")))
-      .localCheckpoint()
+    // materialized although `ep` is a per-session checkpoint: every
+    // peel round semi-joins it twice, and reading the union in place
+    // costs three more build jobs at sf0.1 (21 vs 18) and time
+    val edges = symmetricEdges(ep).localCheckpoint()
     var alive = edges.select(col("src").as("v")).distinct()
     val peeled = scala.collection.mutable.ListBuffer.empty[DataFrame]
     for (r <- 1 to CORE_ROUNDS) {
@@ -657,15 +663,14 @@ object Graph {
     * final r applies two IEEE sqrt/divisions to exact operands (the
     * q221 sqrt stance), emitted in milli units.
     *
-    * Scale shape: degrees are one aggregate over the shared
-    * checkpointed edge table; the edge-end join is degree-table ⋈
+    * Scale shape: degrees are one aggregate over `symmetricEdges` of
+    * the per-session pair checkpoint; the edge-end join is degree-table ⋈
     * edges on each endpoint; the whole statistic collapses to 6
     * moments. */
   def q268Assortativity(s: SparkSession, d: String): DataFrame = {
     val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val ep = pairs2Shared(s, d).select(col("p1"), col("p2"))
-    val edges = ep.select(col("p1").as("src"), col("p2").as("dst"))
-      .unionAll(ep.select(col("p2").as("src"), col("p1").as("dst")))
+    val edges = symmetricEdges(ep)
     val deg = edges.groupBy(col("src").as("v")).agg(count(lit(1)).as("dg"))
     val xy = edges
       .join(deg.select(col("v").as("src"), col("dg").as("x")), Seq("src"))

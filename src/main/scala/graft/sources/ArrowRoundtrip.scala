@@ -3,7 +3,6 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.hadoop.fs.Path
 import graft.Tables._
 
 /** S3/S4 family: an Arrow IPC *file-format* sink + scan — the
@@ -15,13 +14,12 @@ import graft.Tables._
   * own Pandas-UDF exchange), so both sides here are built on the real
   * codec library — the q308 "real codec, no shim" stance:
   *
-  *  - WRITE: executor-side `ArrowFileWriter` per task — magic bytes,
-  *    schema message, length-prefixed record batches (validity
-  *    bitmaps + offset + data buffers), footer with batch offsets —
-  *    in 256-row batches so multi-batch files cross the wire at the
-  *    driver-gate SF, with the q305/q308 task-commit protocol
-  *    (attempt-unique temp path, RENAME on completion).
-  *  - READ: `binaryFiles` → `ArrowFileReader` per container; the
+  *  - WRITE: one `ArrowFileWriter` per file — magic bytes, schema
+  *    message, length-prefixed record batches (validity bitmaps +
+  *    offset + data buffers), footer with batch offsets — in 256-row
+  *    batches so multi-batch files cross the wire at the driver-gate
+  *    SF, committed by `TaskFiles.write`.
+  *  - READ: `TaskFiles.read` → `ArrowFileReader` per container; the
   *    schema is asserted from the FILE footer (the binary-format
   *    contract), batches load through the real flatbuffer/buffer-
   *    reconstruction path, and values are read back out of the
@@ -72,37 +70,29 @@ object ArrowRoundtrip {
     ).asJava)
   }
 
-  /** Executor-side Arrow IPC writer: one file per input partition,
-    * 256-row record batches, rename-commit. Returns rows written. */
-  private def writeArrow(base: String, payload: DataFrame): Long = {
-    payload.repartition(N_FILES).rdd.mapPartitionsWithIndex { (i, it) =>
+  /** Arrow IPC sink: one file per partition in 256-row record batches,
+    * written through `TaskFiles.write`. Returns rows written. */
+  private[graft] def writeArrow(base: String, payload: DataFrame): Long =
+    TaskFiles.write(payload, N_FILES, base, i => s"dim_$i.arrow") { (rows, out) =>
       import org.apache.arrow.memory.RootAllocator
       import org.apache.arrow.vector.{BigIntVector, VarCharVector, VectorSchemaRoot}
       import org.apache.arrow.vector.complex.ListVector
       import org.apache.arrow.vector.ipc.ArrowFileWriter
-      val attempt = Option(org.apache.spark.TaskContext.get())
-        .map(_.taskAttemptId()).getOrElse(0L)
-      val dst = new Path(s"$base/dim_$i.arrow")
-      val tmp = new Path(s"$base/.dim_${i}_attempt_$attempt.tmp")
-      val fs = dst.getFileSystem(new org.apache.hadoop.conf.Configuration())
       val alloc = new RootAllocator()
       val root = VectorSchemaRoot.create(arrowSchema(), alloc)
-      val out = fs.create(tmp, true)
-      val ch = java.nio.channels.Channels.newChannel(out)
-      val w = new ArrowFileWriter(root, null, ch)
-      var n = 0L
+      val w = new ArrowFileWriter(root, null, java.nio.channels.Channels.newChannel(out))
       try {
         w.start()
         val keyV = root.getVector("o_orderkey").asInstanceOf[BigIntVector]
         val stV = root.getVector("o_orderstatus").asInstanceOf[VarCharVector]
         val centsV = root.getVector("total_cents").asInstanceOf[BigIntVector]
         val linesV = root.getVector("lines").asInstanceOf[ListVector]
-        while (it.hasNext) {
+        while (rows.hasNext) {
           root.allocateNew()
           val lw = linesV.getWriter
           var r = 0
-          while (r < BATCH_ROWS && it.hasNext) {
-            val row = it.next()
+          while (r < BATCH_ROWS && rows.hasNext) {
+            val row = rows.next()
             keyV.setSafe(r, row.getLong(0))
             stV.setSafe(r,
               row.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -118,75 +108,65 @@ object ArrowRoundtrip {
             r += 1
           }
           root.setRowCount(r)
-          n += r
           w.writeBatch()
         }
         w.end()
       } finally {
-        w.close(); root.close(); alloc.close()
+        root.close(); alloc.close()
       }
-      if (!fs.rename(tmp, dst)) {
-        if (fs.exists(dst)) fs.delete(tmp, false)
-        else throw new java.io.IOException(s"arrow commit failed: $tmp -> $dst")
-      }
-      Iterator.single(n)
-    }.fold(0L)(_ + _)
-  }
+    }
 
-  /** Distributed IPC scan: one task per container, schema asserted
-    * from the file FOOTER (a reader that guessed the layout instead of
-    * honoring the footer would be a fake decode). */
-  private[graft] def readArrow(s: SparkSession, base: String): DataFrame = {
-    val rows = s.sparkContext.binaryFiles(base + "/*.arrow")
-      .flatMap { case (name, pds) =>
-        import org.apache.arrow.memory.RootAllocator
-        import org.apache.arrow.vector.{BigIntVector, VarCharVector}
-        import org.apache.arrow.vector.complex.ListVector
-        import org.apache.arrow.vector.ipc.ArrowFileReader
-        import org.apache.arrow.vector.util.ByteArrayReadableSeekableByteChannel
-        val alloc = new RootAllocator()
-        val reader = new ArrowFileReader(
-          new ByteArrayReadableSeekableByteChannel(pds.toArray()), alloc)
-        try {
-          val got = reader.getVectorSchemaRoot.getSchema.getFields
-          val names = new java.util.ArrayList[String]()
-          got.forEach(f => { names.add(f.getName); () })
-          if (names.toString !=
-              "[o_orderkey, o_orderstatus, total_cents, lines]")
-            throw new java.io.IOException(
-              s"unexpected arrow footer schema in $name: $names")
-          val buf = Vector.newBuilder[Row]
-          while (reader.loadNextBatch()) {
-            val root = reader.getVectorSchemaRoot
-            val keyV = root.getVector("o_orderkey").asInstanceOf[BigIntVector]
-            val stV = root.getVector("o_orderstatus").asInstanceOf[VarCharVector]
-            val centsV = root.getVector("total_cents").asInstanceOf[BigIntVector]
-            val linesV = root.getVector("lines").asInstanceOf[ListVector]
-            var r = 0
-            while (r < root.getRowCount) {
-              val lines: Seq[Int] =
-                if (linesV.isNull(r)) null
-                else {
-                  val l = linesV.getObject(r)
-                  val b = Vector.newBuilder[Int]
-                  l.forEach(v => { b += v.asInstanceOf[Integer].intValue; () })
-                  b.result()
-                }
-              buf += Row(keyV.get(r),
-                new String(stV.get(r), java.nio.charset.StandardCharsets.UTF_8),
-                centsV.get(r), lines)
-              r += 1
-            }
-          }
-          buf.result()
-        } finally { reader.close(); alloc.close() }
-      }
-    s.createDataFrame(rows, StructType(Seq(
+  /** IPC scan through `TaskFiles.read`: schema asserted from the file
+    * FOOTER (a reader that guessed the layout instead of honoring the
+    * footer would be a fake decode). */
+  private[graft] def readArrow(s: SparkSession, base: String): DataFrame =
+    TaskFiles.read(s, base + "/*.arrow", StructType(Seq(
       StructField("o_orderkey", LongType),
       StructField("o_orderstatus", StringType),
       StructField("total_cents", LongType),
-      StructField("lines", ArrayType(IntegerType, containsNull = false)))))
-  }
+      StructField("lines", ArrayType(IntegerType, containsNull = false))))) { (name, in) =>
+      import org.apache.arrow.memory.RootAllocator
+      import org.apache.arrow.vector.{BigIntVector, VarCharVector}
+      import org.apache.arrow.vector.complex.ListVector
+      import org.apache.arrow.vector.ipc.ArrowFileReader
+      import org.apache.arrow.vector.util.ByteArrayReadableSeekableByteChannel
+      val alloc = new RootAllocator()
+      val reader = new ArrowFileReader(
+        new ByteArrayReadableSeekableByteChannel(in.readAllBytes()), alloc)
+      try {
+        val got = reader.getVectorSchemaRoot.getSchema.getFields
+        val names = new java.util.ArrayList[String]()
+        got.forEach(f => { names.add(f.getName); () })
+        if (names.toString !=
+            "[o_orderkey, o_orderstatus, total_cents, lines]")
+          throw new java.io.IOException(
+            s"unexpected arrow footer schema in $name: $names")
+        val buf = Vector.newBuilder[Row]
+        while (reader.loadNextBatch()) {
+          val root = reader.getVectorSchemaRoot
+          val keyV = root.getVector("o_orderkey").asInstanceOf[BigIntVector]
+          val stV = root.getVector("o_orderstatus").asInstanceOf[VarCharVector]
+          val centsV = root.getVector("total_cents").asInstanceOf[BigIntVector]
+          val linesV = root.getVector("lines").asInstanceOf[ListVector]
+          var r = 0
+          while (r < root.getRowCount) {
+            val lines: Seq[Int] =
+              if (linesV.isNull(r)) null
+              else {
+                val l = linesV.getObject(r)
+                val b = Vector.newBuilder[Int]
+                l.forEach(v => { b += v.asInstanceOf[Integer].intValue; () })
+                b.result()
+              }
+            buf += Row(keyV.get(r),
+              new String(stV.get(r), java.nio.charset.StandardCharsets.UTF_8),
+              centsV.get(r), lines)
+            r += 1
+          }
+        }
+        buf.result().iterator
+      } finally { reader.close(); alloc.close() }
+    }
 
   /** The dim that crosses the container: a %4 order subset with exact
     * integer cents and each order's SORTED line-number list — NULL

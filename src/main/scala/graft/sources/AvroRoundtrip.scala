@@ -3,7 +3,6 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.hadoop.fs.Path
 import graft.Tables._
 
 /** S3/S4 family closure: an Avro Object-Container-File sink + scan.
@@ -15,12 +14,10 @@ import graft.Tables._
   * bundled codec library, the same "real codec, no shim" stance as
   * `multimodal/Codecs.scala`:
   *
-  *  - WRITE: executor-side `DataFileWriter` per task (header magic,
-  *    embedded writer schema, deflate-compressed blocks, 16-byte sync
-  *    markers), with the q305 task-commit protocol — write to a
-  *    task-attempt-unique temp path, RENAME on completion — so a
-  *    speculative duplicate attempt can never interleave bytes.
-  *  - READ: `binaryFiles` → `DataFileStream` per container, schema
+  *  - WRITE: one `DataFileWriter` per file (header magic, embedded
+  *    writer schema, deflate-compressed blocks, 16-byte sync markers),
+  *    committed by `TaskFiles.write`.
+  *  - READ: `TaskFiles.read` → `DataFileStream` per container, schema
   *    taken from the FILE (the binary-format contract, like q89's ORC
   *    and unlike q62's schema-on-read text), records decoded through
   *    the real deflate/varint/zigzag path.
@@ -55,74 +52,51 @@ object AvroRoundtrip {
       {"name": "segment", "type": ["null", "string"], "default": null}
     ]}"""
 
-  /** Executor-side Avro OCF writer: one container file per input
-    * partition, deflate codec, rename-commit. Returns rows written. */
-  private def writeAvro(base: String, payload: DataFrame): Long = {
-    val schemaJson = SCHEMA_JSON
-    payload.repartition(N_FILES).rdd.mapPartitionsWithIndex { (i, it) =>
+  /** Avro OCF sink: one deflate container per file, written through
+    * `TaskFiles.write`. Returns rows written. */
+  private[graft] def writeAvro(base: String, payload: DataFrame): Long =
+    TaskFiles.write(payload, N_FILES, base, i => s"dim_$i.avro") { (rows, out) =>
       import org.apache.avro.Schema
       import org.apache.avro.file.{CodecFactory, DataFileWriter}
       import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
-      val schema = new Schema.Parser().parse(schemaJson)
-      val attempt = Option(org.apache.spark.TaskContext.get())
-        .map(_.taskAttemptId()).getOrElse(0L)
-      val dst = new Path(s"$base/dim_$i.avro")
-      val tmp = new Path(s"$base/.dim_${i}_attempt_$attempt.tmp")
-      val fs = dst.getFileSystem(new org.apache.hadoop.conf.Configuration())
+      val schema = new Schema.Parser().parse(SCHEMA_JSON)
       val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](schema))
         .setCodec(CodecFactory.deflateCodec(6))
-        .create(schema, fs.create(tmp, true))
-      var n = 0L
-      try {
-        it.foreach { r =>
-          val rec = new GenericData.Record(schema)
-          rec.put("c_custkey", r.getLong(0))
-          rec.put("c_name", r.getString(1))
-          rec.put("n_name", r.getString(2))
-          rec.put("acct_cents", r.getLong(3))
-          rec.put("segment", if (r.isNullAt(4)) null else r.getString(4))
-          w.append(rec)
-          n += 1
-        }
-      } finally w.close()
-      if (!fs.rename(tmp, dst)) {
-        if (fs.exists(dst)) fs.delete(tmp, false)
-        else throw new java.io.IOException(s"avro commit failed: $tmp -> $dst")
+        .create(schema, out)
+      rows.foreach { r =>
+        val rec = new GenericData.Record(schema)
+        rec.put("c_custkey", r.getLong(0))
+        rec.put("c_name", r.getString(1))
+        rec.put("n_name", r.getString(2))
+        rec.put("acct_cents", r.getLong(3))
+        rec.put("segment", if (r.isNullAt(4)) null else r.getString(4))
+        w.append(rec)
       }
-      Iterator.single(n)
-    }.fold(0L)(_ + _)
-  }
+      w.flush()
+    }
 
-  /** Distributed OCF scan: one task per container, embedded schema,
-    * codec asserted from the file header (a reader silently falling
-    * back to uncompressed bytes would be a fake decode). */
-  private[graft] def readAvro(s: SparkSession, base: String): DataFrame = {
-    val rows = s.sparkContext.binaryFiles(base + "/*.avro")
-      .flatMap { case (_, pds) =>
-        import org.apache.avro.file.DataFileStream
-        import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
-        val in = new DataFileStream(pds.open(),
-          new GenericDatumReader[GenericRecord]())
-        val codec = in.getMetaString("avro.codec")
-        if (codec != "deflate")
-          throw new java.io.IOException(s"unexpected avro codec: $codec")
-        new Iterator[Row] {
-          def hasNext: Boolean = { val h = in.hasNext; if (!h) in.close(); h }
-          def next(): Row = {
-            val rec = in.next()
-            def str(f: String): String =
-              Option(rec.get(f)).map(_.toString).orNull
-            Row(rec.get("c_custkey").asInstanceOf[Long], str("c_name"),
-                str("n_name"), rec.get("acct_cents").asInstanceOf[Long],
-                str("segment"))
-          }
-        }
-      }
-    s.createDataFrame(rows, StructType(Seq(
+  /** OCF scan through `TaskFiles.read`: embedded schema, codec asserted
+    * from the file header (a reader silently falling back to
+    * uncompressed bytes would be a fake decode). */
+  private[graft] def readAvro(s: SparkSession, base: String): DataFrame =
+    TaskFiles.read(s, base + "/*.avro", StructType(Seq(
       StructField("c_custkey", LongType), StructField("c_name", StringType),
       StructField("n_name", StringType), StructField("acct_cents", LongType),
-      StructField("segment", StringType))))
-  }
+      StructField("segment", StringType)))) { (_, in) =>
+      import org.apache.avro.file.DataFileStream
+      import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
+      import scala.jdk.CollectionConverters._
+      val recs = new DataFileStream(in, new GenericDatumReader[GenericRecord]())
+      val codec = recs.getMetaString("avro.codec")
+      if (codec != "deflate")
+        throw new java.io.IOException(s"unexpected avro codec: $codec")
+      recs.iterator.asScala.map { rec =>
+        def str(f: String): String = Option(rec.get(f)).map(_.toString).orNull
+        Row(rec.get("c_custkey").asInstanceOf[Long], str("c_name"),
+            str("n_name"), rec.get("acct_cents").asInstanceOf[Long],
+            str("segment"))
+      }
+    }
 
   /** The dim that crosses the container: customer ⋈ nation with exact
     * integer cents and the %7 null schedule on the union field. */

@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.OsmShape
@@ -29,13 +28,13 @@ import graft.ops.OsmShape
   * satisfy node validation, not the audit.
   *
   * Scale shape: serialization is one row-local projection + an
-  * O(#partitions) file fan-out (executor-side streaming writes, never
-  * a driver collect); the scan is one task per byte range (OsmScan's
-  * partitioning: these extract files are below Spark's split size, so
-  * one range each); the audit is one map-side-combined aggregate. At
-  * 100 TB the extract count scales with partitions, a file above the
-  * split size is cut into ranges, and each range streams through
-  * constant StAX memory.
+  * O(#partitions) file fan-out (`TaskFiles.write`: executor-side
+  * streaming writes, never a driver collect); the scan is one task per
+  * byte range (OsmScan's partitioning: these extract files are below
+  * Spark's split size, so one range each); the audit is one
+  * map-side-combined aggregate. At 100 TB the extract count scales
+  * with partitions, a file above the split size is cut into ranges,
+  * and each range streams through constant StAX memory.
   */
 object OsmE2e {
 
@@ -49,48 +48,22 @@ object OsmE2e {
       concat(lit("osm-e2e: value needs XML escaping: "), c)).cast("string"))
       .otherwise(c)
 
-  /** Executor-side partitioned `.osm` writer with a task-commit
-    * protocol (r14 advice): each task writes to a task-attempt-unique
-    * temp path and RENAMES on completion, so a speculative or zombie
-    * duplicate attempt can never interleave bytes into a live file —
-    * the rename winner is whole-file consistent, the loser's temp is
-    * dropped. (Local scratch here; the same code writes any Hadoop FS,
-    * which is exactly why speculation-safety can't be assumed away.)
-    * Returns the total row count written. */
-  private def writeExtract(base: String, prefix: String,
-                           payload: org.apache.spark.sql.DataFrame,
+  /** Writes `payload`'s one string column as `nFiles` `.osm` documents
+    * through `TaskFiles.write`. Returns the total row count written. */
+  private def writeExtract(base: String, prefix: String, payload: DataFrame,
                            nFiles: Int): Long =
-    payload.repartition(nFiles)
-      .rdd.mapPartitionsWithIndex { (i, it) =>
-        val attempt = Option(org.apache.spark.TaskContext.get())
-          .map(_.taskAttemptId()).getOrElse(0L)
-        val dst = new Path(s"$base/${prefix}_$i.osm")
-        val tmp = new Path(s"$base/.${prefix}_${i}_attempt_$attempt.tmp")
-        // fresh Configuration: resolves the scheme on the executor
-        // (SparkContext's conf object is not task-serializable)
-        val fs = dst.getFileSystem(new org.apache.hadoop.conf.Configuration())
-        val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-          fs.create(tmp, true), java.nio.charset.StandardCharsets.UTF_8))
-        var n = 0L
-        try {
-          w.write("<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n")
-          w.write("<osm version=\"0.6\" generator=\"graft-e2e\">\n")
-          it.foreach { r => w.write(r.getString(0)); n += 1 }
-          w.write("</osm>\n")
-        } finally w.close()
-        // Commit: one rename. If a sibling attempt already committed,
-        // its file is complete and equivalent (same partition rows) —
-        // drop ours instead of clobbering a live reader.
-        if (!fs.rename(tmp, dst)) {
-          if (fs.exists(dst)) fs.delete(tmp, false)
-          else throw new java.io.IOException(s"extract commit failed: $tmp -> $dst")
-        }
-        Iterator.single(n)
-      }.fold(0L)(_ + _)
+    TaskFiles.write(payload, nFiles, base, i => s"${prefix}_$i.osm") { (rows, out) =>
+      val w = new java.io.BufferedWriter(
+        new java.io.OutputStreamWriter(out, java.nio.charset.StandardCharsets.UTF_8))
+      w.write("<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n")
+      w.write("<osm version=\"0.6\" generator=\"graft-e2e\">\n")
+      rows.foreach(r => w.write(r.getString(0)))
+      w.write("</osm>\n")
+      w.flush()
+    }
 
   /** One-time per (process, sfDir): serialize events as an N_FILES
-    * `.osm` extract. Executor-side Hadoop streaming writes (local
-    * scratch here; the same code writes any Hadoop FS). */
+    * `.osm` extract. */
   def ensureExtract(s: SparkSession, d: String): String = {
     val base = TmpWorkspace.dir("osm_e2e", d)
     TmpWorkspace.once(base) {

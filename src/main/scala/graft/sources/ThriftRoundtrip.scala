@@ -3,7 +3,6 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.hadoop.fs.Path
 import graft.Tables._
 
 /** S3/S4 family: a Thrift COMPACT-protocol record sink + scan — the
@@ -35,132 +34,112 @@ import graft.Tables._
   *
   * Scale: N_FILES write parallelism (data-sized), one task per
   * container on read, only decoded rows shuffle into the aggregate —
-  * the q308/q309 shape.
+  * the q308/q309 shape. Files are written and scanned through
+  * `TaskFiles`.
   */
 object ThriftRoundtrip {
 
   private val N_FILES = 4
   private val MAGIC = "TCP1".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
 
-  /** Executor-side compact-protocol writer: one container per input
-    * partition, rename-commit. Returns rows written. */
-  private def writeThrift(base: String, payload: DataFrame): Long = {
-    payload.repartition(N_FILES).rdd.mapPartitionsWithIndex { (i, it) =>
+  /** Compact-protocol sink: one framed container per file, written
+    * through `TaskFiles.write`. Returns rows written. */
+  private[graft] def writeThrift(base: String, payload: DataFrame): Long =
+    TaskFiles.write(payload, N_FILES, base, i => s"dim_$i.tcp") { (rows, out) =>
       import org.apache.thrift.protocol.{TCompactProtocol, TField, TMap, TStruct, TType}
       import org.apache.thrift.transport.TIOStreamTransport
-      val attempt = Option(org.apache.spark.TaskContext.get())
-        .map(_.taskAttemptId()).getOrElse(0L)
-      val dst = new Path(s"$base/dim_$i.tcp")
-      val tmp = new Path(s"$base/.dim_${i}_attempt_$attempt.tmp")
-      val fs = dst.getFileSystem(new org.apache.hadoop.conf.Configuration())
-      val out = fs.create(tmp, true)
       val t = new TIOStreamTransport(out)
       val p = new TCompactProtocol(t)
-      var n = 0L
-      try {
-        t.write(MAGIC, 0, MAGIC.length)
-        val one = Array[Byte](1)
-        it.foreach { r =>
-          t.write(one, 0, 1)
-          p.writeStructBegin(new TStruct("supplier_dim"))
-          p.writeFieldBegin(new TField("suppkey", TType.I64, 1))
-          p.writeI64(r.getLong(0)); p.writeFieldEnd()
-          p.writeFieldBegin(new TField("name", TType.STRING, 2))
-          p.writeString(r.getString(1)); p.writeFieldEnd()
-          // compact encodes the bool VALUE in the field-type nibble
-          p.writeFieldBegin(new TField("flagged", TType.BOOL, 3))
-          p.writeBool(r.getBoolean(2)); p.writeFieldEnd()
-          p.writeFieldBegin(new TField("acct_cents", TType.I64, 4))
-          p.writeI64(r.getLong(3)); p.writeFieldEnd()
-          p.writeFieldBegin(new TField("nation", TType.STRING, 5))
-          p.writeString(r.getString(4)); p.writeFieldEnd()
-          val m = r.getMap[String, Int](5)
-          p.writeFieldBegin(new TField("flag_counts", TType.MAP, 6))
-          p.writeMapBegin(new TMap(TType.STRING, TType.I32, m.size))
-          m.toSeq.sortBy(_._1).foreach { case (k, v) =>
-            p.writeString(k); p.writeI32(v)
-          }
-          p.writeMapEnd(); p.writeFieldEnd()
-          p.writeFieldStop(); p.writeStructEnd()
-          n += 1
+      t.write(MAGIC, 0, MAGIC.length)
+      val one = Array[Byte](1)
+      rows.foreach { r =>
+        t.write(one, 0, 1)
+        p.writeStructBegin(new TStruct("supplier_dim"))
+        p.writeFieldBegin(new TField("suppkey", TType.I64, 1))
+        p.writeI64(r.getLong(0)); p.writeFieldEnd()
+        p.writeFieldBegin(new TField("name", TType.STRING, 2))
+        p.writeString(r.getString(1)); p.writeFieldEnd()
+        // compact encodes the bool VALUE in the field-type nibble
+        p.writeFieldBegin(new TField("flagged", TType.BOOL, 3))
+        p.writeBool(r.getBoolean(2)); p.writeFieldEnd()
+        p.writeFieldBegin(new TField("acct_cents", TType.I64, 4))
+        p.writeI64(r.getLong(3)); p.writeFieldEnd()
+        p.writeFieldBegin(new TField("nation", TType.STRING, 5))
+        p.writeString(r.getString(4)); p.writeFieldEnd()
+        val m = r.getMap[String, Int](5)
+        p.writeFieldBegin(new TField("flag_counts", TType.MAP, 6))
+        p.writeMapBegin(new TMap(TType.STRING, TType.I32, m.size))
+        m.toSeq.sortBy(_._1).foreach { case (k, v) =>
+          p.writeString(k); p.writeI32(v)
         }
-        t.write(Array[Byte](0), 0, 1)
-        t.flush()
-      } finally out.close()
-      if (!fs.rename(tmp, dst)) {
-        if (fs.exists(dst)) fs.delete(tmp, false)
-        else throw new java.io.IOException(s"thrift commit failed: $tmp -> $dst")
+        p.writeMapEnd(); p.writeFieldEnd()
+        p.writeFieldStop(); p.writeStructEnd()
       }
-      Iterator.single(n)
-    }.fold(0L)(_ + _)
-  }
+      t.write(Array[Byte](0), 0, 1)
+      t.flush()
+    }
 
-  /** Distributed scan: one task per container; magic + per-record
-    * markers + terminator asserted, structs decoded field-by-field
-    * through the real compact readers (unknown field ids would be a
-    * schema break and fail loudly rather than being skipped). */
-  private[graft] def readThrift(s: SparkSession, base: String): DataFrame = {
-    val rows = s.sparkContext.binaryFiles(base + "/*.tcp")
-      .flatMap { case (name, pds) =>
-        import org.apache.thrift.protocol.{TCompactProtocol, TType}
-        import org.apache.thrift.transport.TIOStreamTransport
-        val in = pds.open()
-        val t = new TIOStreamTransport(in)
-        val p = new TCompactProtocol(t)
-        val magic = new Array[Byte](4)
-        t.readAll(magic, 0, 4)
-        if (!java.util.Arrays.equals(magic, MAGIC))
-          throw new java.io.IOException(s"bad thrift container magic in $name")
-        val buf = Vector.newBuilder[Row]
-        val marker = new Array[Byte](1)
-        var done = false
-        while (!done) {
-          t.readAll(marker, 0, 1) // EOF here throws: truncated container
-          if (marker(0) == 0) done = true
-          else {
-            var suppkey = 0L; var sname: String = null; var flagged = false
-            var cents = 0L; var nation: String = null
-            var m = Map.empty[String, Int]
-            p.readStructBegin()
-            var stop = false
-            while (!stop) {
-              val f = p.readFieldBegin()
-              if (f.`type` == TType.STOP) stop = true
-              else {
-                f.id match {
-                  case 1 => suppkey = p.readI64()
-                  case 2 => sname = p.readString()
-                  case 3 => flagged = p.readBool()
-                  case 4 => cents = p.readI64()
-                  case 5 => nation = p.readString()
-                  case 6 =>
-                    val mh = p.readMapBegin()
-                    var k = 0
-                    while (k < mh.size) {
-                      m += (p.readString() -> p.readI32()); k += 1
-                    }
-                    p.readMapEnd()
-                  case other =>
-                    throw new java.io.IOException(
-                      s"unexpected thrift field id $other in $name")
-                }
-                p.readFieldEnd()
-              }
-            }
-            p.readStructEnd()
-            buf += Row(suppkey, sname, flagged, cents, nation, m)
-          }
-        }
-        in.close()
-        buf.result()
-      }
-    s.createDataFrame(rows, StructType(Seq(
+  /** Framed scan through `TaskFiles.read`: magic + per-record markers +
+    * terminator asserted, structs decoded field-by-field through the
+    * real compact readers (unknown field ids would be a schema break
+    * and fail loudly rather than being skipped). */
+  private[graft] def readThrift(s: SparkSession, base: String): DataFrame =
+    TaskFiles.read(s, base + "/*.tcp", StructType(Seq(
       StructField("s_suppkey", LongType), StructField("s_name", StringType),
       StructField("flagged", BooleanType), StructField("acct_cents", LongType),
       StructField("n_name", StringType),
       StructField("flag_counts", MapType(StringType, IntegerType,
-        valueContainsNull = false)))))
-  }
+        valueContainsNull = false))))) { (name, in) =>
+      import org.apache.thrift.protocol.{TCompactProtocol, TType}
+      import org.apache.thrift.transport.TIOStreamTransport
+      val t = new TIOStreamTransport(in)
+      val p = new TCompactProtocol(t)
+      val magic = new Array[Byte](4)
+      t.readAll(magic, 0, 4)
+      if (!java.util.Arrays.equals(magic, MAGIC))
+        throw new java.io.IOException(s"bad thrift container magic in $name")
+      val buf = Vector.newBuilder[Row]
+      val marker = new Array[Byte](1)
+      var done = false
+      while (!done) {
+        t.readAll(marker, 0, 1) // EOF here throws: truncated container
+        if (marker(0) == 0) done = true
+        else {
+          var suppkey = 0L; var sname: String = null; var flagged = false
+          var cents = 0L; var nation: String = null
+          var m = Map.empty[String, Int]
+          p.readStructBegin()
+          var stop = false
+          while (!stop) {
+            val f = p.readFieldBegin()
+            if (f.`type` == TType.STOP) stop = true
+            else {
+              f.id match {
+                case 1 => suppkey = p.readI64()
+                case 2 => sname = p.readString()
+                case 3 => flagged = p.readBool()
+                case 4 => cents = p.readI64()
+                case 5 => nation = p.readString()
+                case 6 =>
+                  val mh = p.readMapBegin()
+                  var k = 0
+                  while (k < mh.size) {
+                    m += (p.readString() -> p.readI32()); k += 1
+                  }
+                  p.readMapEnd()
+                case other =>
+                  throw new java.io.IOException(
+                    s"unexpected thrift field id $other in $name")
+              }
+              p.readFieldEnd()
+            }
+          }
+          p.readStructEnd()
+          buf += Row(suppkey, sname, flagged, cents, nation, m)
+        }
+      }
+      buf.result().iterator
+    }
 
   /** The dim that crosses the wire: supplier ⋈ nation with exact
     * integer cents, the %3 bool schedule, and each supplier's

@@ -14,7 +14,7 @@ import java.util.Comparator
   *    The pid suffix keeps concurrent processes fully disjoint, so
   *    cross-process coordination is never needed.
   *
-  *  - **Deleted on JVM exit** (shutdown hook, registered once per dir):
+  *  - **Deleted on JVM exit** (one shutdown hook for every dir):
   *    successive driver sessions previously accumulated dirs under
   *    `java.io.tmpdir` without bound. Within one process the dir is
   *    intentionally reused across invocations — repeat executions (bench
@@ -26,8 +26,12 @@ object TmpWorkspace {
   private val pid: String =
     java.lang.management.ManagementFactory.getRuntimeMXBean.getPid.toString
 
+  /** Every dir handed out by this process; one shutdown hook deletes
+    * them all. */
   private val registered =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  Runtime.getRuntime.addShutdownHook(new Thread(() =>
+    registered.forEach(p => scala.util.Try(deleteRecursively(Paths.get(p))))))
 
   /** Workspace directory for (kind, dataset) — stable within this process,
     * unique across processes, removed at JVM shutdown. */
@@ -35,10 +39,7 @@ object TmpWorkspace {
     val key = dataset.replaceAll("[^A-Za-z0-9._-]", "_")
     val base = System.getProperty("java.io.tmpdir") +
       s"/graft_${kind}_${key}_$pid"
-    if (registered.add(base)) {
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        deleteRecursively(Paths.get(base))))
-    }
+    registered.add(base)
     base
   }
 
@@ -64,10 +65,7 @@ object TmpWorkspace {
     * deleted at JVM exit instead of accumulating under tmp. */
   def fresh(kind: String): Path = {
     val p = Files.createTempDirectory(s"graft_${kind}_")
-    if (registered.add(p.toString)) {
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        deleteRecursively(p)))
-    }
+    registered.add(p.toString)
     p
   }
 

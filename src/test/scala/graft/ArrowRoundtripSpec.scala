@@ -24,13 +24,6 @@ class ArrowRoundtripSpec extends AnyFunSuite {
         col("lines"))
   }
 
-  private def write(base: String, df: org.apache.spark.sql.DataFrame): Long = {
-    val m = ArrowRoundtrip.getClass.getDeclaredMethod(
-      "writeArrow", classOf[String], classOf[org.apache.spark.sql.DataFrame])
-    m.setAccessible(true)
-    m.invoke(ArrowRoundtrip, base, df).asInstanceOf[Long]
-  }
-
   test("q309 runs and the no-lineitem orders survive as list NULLs") {
     val out = SparkEntry.queries("q309_arrow_roundtrip")(spark, sf).collect()
     assert(out.nonEmpty)
@@ -47,7 +40,7 @@ class ArrowRoundtripSpec extends AnyFunSuite {
   test("IPC round-trip is row-exact including the list column") {
     val in = dim(sf)
     val base = sources.TmpWorkspace.fresh("arrow_spec").toString
-    val written = write(base, in)
+    val written = ArrowRoundtrip.writeArrow(base, in)
     assert(written == in.count())
     val back = ArrowRoundtrip.readArrow(spark, base)
     assert(back.count() == written)
@@ -75,7 +68,7 @@ class ArrowRoundtripSpec extends AnyFunSuite {
     val one = dim(sf)
     val in = Seq.fill(8)(one).reduce(_ unionAll _)
     val base = sources.TmpWorkspace.fresh("arrow_batches").toString
-    val written = write(base, in)
+    val written = ArrowRoundtrip.writeArrow(base, in)
     assert(written == 8 * 375)
     val files = {
       val s = java.nio.file.Files.list(java.nio.file.Paths.get(base))
@@ -107,7 +100,7 @@ class ArrowRoundtripSpec extends AnyFunSuite {
   test("a corrupted file fails loudly, not with partial rows") {
     import java.nio.file.{Files, Paths}
     val base = sources.TmpWorkspace.fresh("arrow_corrupt").toString
-    write(base, dim(sf))
+    ArrowRoundtrip.writeArrow(base, dim(sf))
     val f = Files.list(Paths.get(base)).filter(_.toString.endsWith(".arrow"))
       .findFirst().get()
     val bytes = Files.readAllBytes(f)

@@ -38,13 +38,10 @@ class AvroRoundtripSpec extends AnyFunSuite {
         expr("cast(round(c_acctbal * 100) as bigint)").as("acct_cents"),
         when(col("c_custkey") % 7 === 0, lit(null))
           .otherwise(col("c_mktsegment")).as("segment"))
-    // drive the real write via the public query path, then re-read the
-    // freshest scratch dir through the module's reader
+    // write through the module's writer, then re-read the scratch dir
+    // through the module's reader
     val base = sources.TmpWorkspace.fresh("avro_spec").toString
-    val m = AvroRoundtrip.getClass.getDeclaredMethod(
-      "writeAvro", classOf[String], classOf[org.apache.spark.sql.DataFrame])
-    m.setAccessible(true)
-    val written = m.invoke(AvroRoundtrip, base, in).asInstanceOf[Long]
+    val written = AvroRoundtrip.writeAvro(base, in)
     assert(written == in.count())
     val back = AvroRoundtrip.readAvro(spark, base)
     // exact multiset equality, column by column
@@ -66,10 +63,7 @@ class AvroRoundtripSpec extends AnyFunSuite {
         col("n_name").as("c_name"),
         col("n_name"), lit(0L).as("acct_cents"),
         lit(null).cast("string").as("segment"))
-    val m = AvroRoundtrip.getClass.getDeclaredMethod(
-      "writeAvro", classOf[String], classOf[org.apache.spark.sql.DataFrame])
-    m.setAccessible(true)
-    m.invoke(AvroRoundtrip, base, in)
+    AvroRoundtrip.writeAvro(base, in)
     // flip the container magic of one file
     val f = Files.list(Paths.get(base)).filter(_.toString.endsWith(".avro"))
       .findFirst().get()

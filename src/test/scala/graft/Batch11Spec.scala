@@ -138,7 +138,7 @@ class Batch11Spec extends AnyFunSuite {
       .select(col("doc_id"), col("source"), col("lang"), col("text"))
       .collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2),
-        r.getString(3).split(" ", -1).toSeq))
+        r.getString(3).split(" ", -1).toSeq)).toSeq
     val (evl, train) = docs.partition { case (id, _, _, _) =>
       java.lang.Long.parseLong(md5hex(id.toString).substring(0, 8), 16) % 10 == 0
     }

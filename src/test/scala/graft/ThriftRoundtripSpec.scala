@@ -39,13 +39,6 @@ class ThriftRoundtripSpec extends AnyFunSuite {
           .as("flag_counts"))
   }
 
-  private def write(base: String, df: org.apache.spark.sql.DataFrame): Long = {
-    val m = ThriftRoundtrip.getClass.getDeclaredMethod(
-      "writeThrift", classOf[String], classOf[org.apache.spark.sql.DataFrame])
-    m.setAccessible(true)
-    m.invoke(ThriftRoundtrip, base, df).asInstanceOf[Long]
-  }
-
   test("q310 runs and the %3 bool schedule survives the header encoding") {
     val out = SparkEntry.queries("q310_thrift_roundtrip")(spark, sf).collect()
     assert(out.nonEmpty)
@@ -65,7 +58,7 @@ class ThriftRoundtripSpec extends AnyFunSuite {
   test("compact round-trip is row-exact including the map field") {
     val in = dimWithCut(5)
     val base = sources.TmpWorkspace.fresh("thrift_spec").toString
-    val written = write(base, in)
+    val written = ThriftRoundtrip.writeThrift(base, in)
     assert(written == in.count())
     val back = ThriftRoundtrip.readThrift(spark, base)
     assert(back.count() == written)
@@ -90,7 +83,7 @@ class ThriftRoundtripSpec extends AnyFunSuite {
   test("a bad container magic fails loudly") {
     import java.nio.file.{Files, Paths}
     val base = sources.TmpWorkspace.fresh("thrift_magic").toString
-    write(base, dimWithCut(10))
+    ThriftRoundtrip.writeThrift(base, dimWithCut(10))
     val f = Files.list(Paths.get(base)).filter(_.toString.endsWith(".tcp"))
       .findFirst().get()
     val bytes = Files.readAllBytes(f)
@@ -105,7 +98,7 @@ class ThriftRoundtripSpec extends AnyFunSuite {
   test("a truncated container fails loudly, not with partial rows") {
     import java.nio.file.{Files, Paths}
     val base = sources.TmpWorkspace.fresh("thrift_trunc").toString
-    write(base, dimWithCut(10))
+    ThriftRoundtrip.writeThrift(base, dimWithCut(10))
     val f = Files.list(Paths.get(base)).filter(_.toString.endsWith(".tcp"))
       .findFirst().get()
     val bytes = Files.readAllBytes(f)
