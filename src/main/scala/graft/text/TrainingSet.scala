@@ -1408,100 +1408,47 @@ object TrainingSet {
     * audit read before trusting a provenance classifier to route
     * documents.
     *
-    * Engine parity: every term is floor(ln(r)·1e7) with r one division
-    * of exact int64s — n7(tok,s) = ln((N_s+V)/(c+1)) for seen tokens,
-    * u7_s = ln(N_s+V) for unseen, prior7_s = ln(D/D_s) — so per-doc
-    * per-class NLL is an exact long sum; argmin ties break to the
+    * Model (the `NaiveBayes` kernel): n7(tok,s) = ln((N_s+V)/(c+1)) for
+    * seen tokens, u7_s = ln(N_s+V) for unseen, prior7_s = ln(D/D_s), each
+    * floor(·1e7) of one exact-int64 division; argmin ties break to the
     * lexicographically smallest source via (nll, source) ordering.
-    * All terms are ≥ 0 (c ≤ N_s, D_s ≤ D), so floor/trunc agree.
     *
     * Scale shape: the model is ONE (tok, source) aggregate (vocab-
-    * bounded, broadcast back) + a |sources|-row class ledger; scoring
-    * is one occurrence-level broadcast join + ONE (doc, source)
-    * aggregate; the argmin is a min-of-orderable-struct aggregate over
-    * the ≤|sources|-row per-doc ledger (a struct buffer plans as
-    * SortAggregate; its partial runs map-side on join-sorted input, no
-    * window), never over occurrences. Nothing driver-side. At 100 TB
-    * with an unbounded vocabulary, drop the broadcast hint and the
-    * scoring join key-shuffles on `tok` — no other change. */
+    * bounded, broadcast back) + a |sources|-row class ledger collected
+    * on the driver; scoring is one join of the collapsed (doc, tok, n)
+    * frame + ONE (doc, source) aggregate; the argmin is a
+    * min-of-orderable-struct aggregate over the ≤|sources|-row per-doc
+    * ledger, never over occurrences. At 100 TB with an unbounded
+    * vocabulary, drop the broadcast hint and the scoring join
+    * key-shuffles on `tok` — no other change. */
   def q285NbSource(s: SparkSession, d: String): DataFrame = {
-    // ONE corpus explode pass, collapsed straight to the minimal
-    // sufficient statistic — distinct (doc, source, token) with in-doc
-    // multiplicity (the q287/q300 r13 pattern; r16 brought q285 in
-    // line). The raw-occurrence checkpoint this replaces materialized
-    // every occurrence row; the collapsed frame is distinct-token-
-    // sized, and every downstream aggregate (cells, class ledger,
-    // seen-term pass, per-doc ledger) derives from it or from bounded
-    // collects — the corpus text is scanned exactly once per run.
-    val docTok = documents(s, d)
-      .select(col("doc_id"), col("source"),
-        explode(split(col("text"), " ")).as("tok"))
-      .groupBy(col("doc_id"), col("source"), col("tok"))
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint()
-    val cnt = docTok.groupBy(col("tok"), col("source").as("cls"))
-      .agg(sum(col("n")).as("c"))
-      .localCheckpoint()
-    // ---- the |cls|-row model ledger, built ON THE DRIVER (the q287/
-    // q300 r13 pattern): class token mass N_s / doc count D_s are one
-    // bounded collect (|cls| rows at ANY corpus scale), vocab V is a
-    // 1-row agg over the checkpointed cells, doc total D is a parquet
-    // row-count read. The previous shape kept the ledger distributed —
-    // classes ⟕ 1-row vocab ⟕ 1-row dtot as crossJoin(broadcast(...))
-    // pyramids, each broadcast its own Spark job (42 Exchange nodes in
-    // the compile-time plan). As a LocalRelation the ledger's two
-    // downstream broadcasts build driver-side with no job at all.
-    // java.lang.StrictMath.log + math.floor matches the codegen
-    // log/floor expressions this replaces (same libm call on the same
-    // exact-int64-derived double).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val clsFut = Future(docTok.groupBy(col("source").as("cls"))
-      .agg(sum(col("n")).as("ns"),
-        countDistinct(col("doc_id")).as("ds")).collect())
-    val v = cnt.agg(countDistinct(col("tok"))).head().getLong(0)
-    val dd = documents(s, d).count()
-    val clsRows = Await.result(clsFut, Duration.Inf)
-    val ledgerRows: Seq[(String, Long, Long, Long)] = clsRows.toSeq.map { r =>
-      val (cls, ns, ds) = (r.getString(0), r.getLong(1), r.getLong(2))
-      (cls, ns,
-        math.floor(java.lang.StrictMath.log((ns + v).toDouble) * 1e7).toLong,
-        math.floor(java.lang.StrictMath.log(dd.toDouble / ds.toDouble) * 1e7).toLong)
-    }
+    val docTok = NaiveBayes.tokenCounts(documents(s, d), col("source"))
+    val perDoc = NaiveBayes.perDoc(docTok)
+    val led = NaiveBayes.ledger(perDoc, "source")
+    val cnt = NaiveBayes.cells(docTok, "source", "c")
+    val v = NaiveBayes.vocab(cnt)
+    val L = led()
+    val dd = L(None)._2
+    // the |cls|-row model ledger is a LocalRelation: its two broadcasts
+    // build on the driver with no Spark job
     import s.implicits._
-    val clsLedger = ledgerRows.toDF("cls", "ns", "u7", "prior7")
+    val clsLedger = L.classes.map { cls =>
+      val (ns, ds) = L(Some(cls))
+      (cls, ns, NaiveBayes.log7(ns + v), NaiveBayes.log7(dd, ds))
+    }.toDF("cls", "ns", "u7", "prior7")
     val scored = cnt.join(broadcast(clsLedger.select(col("cls"), col("ns"))),
         Seq("cls"))
-      .withColumn("n7", floor(log((col("ns") + lit(v)).cast("double")
-        / (col("c") + lit(1L)).cast("double")) * lit(1e7)).cast("long"))
+      .withColumn("n7", NaiveBayes.n7(col("ns") + lit(v), col("c") + lit(1L)))
       .select(col("tok"), col("cls"), col("n7"))
-    // docTok already collapsed repeats to (doc, tok, n), so the
-    // seen-term fan-out join multiplies distinct-token rows, not raw
-    // occurrences; s7/n_seen weight by n to stay occurrence-exact
-    val seen = docTok.join(broadcast(scored), Seq("tok"))
-      .groupBy(col("doc_id"), col("cls"))
-      .agg(sum(col("n") * col("n7")).as("s7"), sum(col("n")).as("n_seen"))
-    // per-doc ledger from the CHECKPOINTED docTok (n_tok = Σn = the
-    // doc's occurrence count = size(split(text,' ')) exactly — explode
-    // keeps empty-string tokens and multiplicity): the raw-docs
-    // size(split) formulation re-read every byte of text a second
-    // time; at 100 TB that second scan IS the cost (the q287/q300
-    // lesson).
-    val perDoc = docTok.groupBy(col("doc_id"), col("source"))
-      .agg(sum(col("n")).as("n_tok"))
-    // per-doc argmin WITHOUT a window (r17, guide §2.3): min over an
-    // orderable struct ordered (nll7, cls) — exactly the old
-    // row_number(orderBy(nll7, cls)) = 1 pick (cls unique per doc) —
-    // as an aggregate (SortAggregate: a struct buffer is not
-    // hash-aggregable): partial map-side combining collapses the |cls|
-    // rows per doc BEFORE the exchange, where the window shuffled them
-    // all and sorted each partition.
+    val seen = NaiveBayes.seen(docTok, scored, Seq("tok"))
+    // per-doc argmin as a min over an orderable struct ordered (nll7, cls)
+    // — the oracle's row_number(orderBy(nll7, cls)) = 1 pick, cls being
+    // unique per doc — so the partial aggregate collapses the |cls| rows
+    // per doc before the exchange (SortAggregate: a struct buffer is not
+    // hash-aggregable)
     perDoc.crossJoin(broadcast(clsLedger.select(col("cls"), col("u7"), col("prior7"))))
       .join(seen, Seq("doc_id", "cls"), "left")
-      .withColumn("nll7", coalesce(col("s7"), lit(0L))
-        + (col("n_tok") - coalesce(col("n_seen"), lit(0L))) * col("u7")
-        + col("prior7"))
+      .withColumn("nll7", NaiveBayes.nll7())
       .groupBy(col("doc_id"), col("source"))
       .agg(min(struct(col("nll7"), col("cls"))).getField("cls")
         .as("predicted"))
@@ -1594,26 +1541,22 @@ object TrainingSet {
     * N_train, α ≤ α·V_f), priors ln(D_train/D_{s,train}) ≥ 0; ties
     * break to the lexicographically smallest source.
     *
-    * Scale shape: two corpus aggregates — the (tok, cls, fold) cell
-    * ledger and ONE (doc, cls) score aggregate; everything else is
-    * ledger arithmetic on |cls|·K·|α| rows broadcast back. The naive
-    * scoring fan-out is |cls|·|α| per distinct (doc, tok) — the price
-    * of a JOINT sweep. The sweep is still retrieval-then-rerank in its
-    * SEMANTICS (the screening α = CV_ALPHAS.head scores ALL classes;
-    * larger α candidates rerank only each doc's top-CV_BEAM screening
-    * classes, mirrored exactly in the oracle), but since r17 the
-    * per-α scores ride ONE occurrence pass: the score ledger is
-    * pivoted WIDE (one row per (tok, f, cls) carrying an n7 column per
-    * α — score-row existence is α-independent, so the pivot is total),
-    * so a single docTok ⋈ scoredW join at |cls| fan-out aggregates
-    * every α's (s7_α, n_seen) simultaneously, and both the screen
+    * Scale shape: the `NaiveBayes` kernel's count model, with two
+    * corpus aggregates — the (tok, cls, fold) cell ledger and ONE
+    * (doc, cls) score aggregate; everything else is ledger arithmetic
+    * on |cls|·K·|α| rows broadcast back. The sweep is
+    * retrieval-then-rerank in its SEMANTICS (the screening α =
+    * CV_ALPHAS.head scores ALL classes; larger α candidates rerank only
+    * each doc's top-CV_BEAM screening classes, mirrored exactly in the
+    * oracle), but every α's score rides ONE occurrence pass: the score
+    * ledger is pivoted WIDE (one row per (tok, f, cls) carrying an n7
+    * column per α — score-row existence is α-independent, so the pivot
+    * is total), so a single docTok ⋈ scoredW join at |cls| fan-out
+    * aggregates every α's (s7_α, n_seen) at once, and both the screen
     * window and the rerank argmins run over the beam-sized per-doc
-    * ledger — the former second token-level scoring pass (docTok ⋈
-    * beam ⋈ scored, +(|α|−1)·CV_BEAM fan-out) is gone (the q289
-    * combined-ledger trick; guide §2.4 "remove passes outright").
-    * Over an unbounded web vocabulary the cell/cellF broadcasts become
-    * key-shuffles on `tok` (drop the hints; q285 stance) — no other
-    * plan change. */
+    * ledger. Over an unbounded web vocabulary the cell/cellF
+    * broadcasts become key-shuffles on `tok` (drop the hints; q285
+    * stance) — no other plan change. */
   def q287NbCv(s: SparkSession, d: String): DataFrame =
     q287NbCvBeam(s, d, CV_BEAM)
 
@@ -1623,109 +1566,52 @@ object TrainingSet {
     * accuracy numbers are audited against the exact definition. */
   def q287NbCvBeam(s: SparkSession, d: String, beamK: Long): DataFrame = {
     val foldE = expr("cast(conv(substr(md5(cast(doc_id as string)),1,8),16,10) as bigint)") % CV_FOLDS
-    // ONE corpus explode pass, collapsed straight to the minimal
-    // sufficient statistic: distinct (doc, fold, class, token) with
-    // in-doc multiplicity. Every downstream frame — cells, vocab, the
-    // scoring passes — derives from this table or the row-local docs
-    // scan; nothing re-reads the exploded corpus. (The previous shape
-    // eagerly materialized the raw explode PLUS per-(tok,cls[,f]) cell
-    // tables — four checkpoint jobs over corpus-sized frames whose
-    // fixed cost dominated the query once the fan-out was beamed.)
-    val docTok = documents(s, d)
-      .select(col("doc_id"), foldE.as("f"), col("source"),
-        explode(split(col("text"), " ")).as("tok"))
-      .groupBy(col("doc_id"), col("f"), col("source"), col("tok"))
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint()
-    // The doc-level cube collect depends only on docTok, so its job is
-    // LAUNCHED FIRST and runs concurrently with cellF's materialization
-    // below — the two barriers overlap. n_tok = Σn over the doc's
-    // distinct tokens, so the doc ledger derives from CHECKPOINTED
-    // docTok — the corpus text is scanned exactly once per run (the
-    // raw-docs size(split) formulation re-read every byte of text a
-    // second time; at 100 TB that second scan IS the cost). ONE cube
-    // pass yields clsF (cls,f), clsTot (cls,·), dTot (·,f), and D (·,·).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val perDoc = docTok.groupBy(col("doc_id"), col("f"), col("source"))
-      .agg(sum(col("n")).as("n_tok"))
-    // grouping_id (not isNullAt) tells subtotal rows from data rows: a
-    // genuinely NULL source value would otherwise be indistinguishable
-    // from the rollup rows and silently corrupt the ledger totals
-    val cubeFut = Future(perDoc.cube(col("source"), col("f"))
-      .agg(sum(col("n_tok")).as("n"), count(lit(1)).as("d"),
-        grouping_id().as("gid")).collect())
+    val docTok = NaiveBayes.tokenCounts(documents(s, d), foldE.as("f"), col("source"))
+    val perDoc = NaiveBayes.perDoc(docTok)
+    // ONE cube yields the (cls, f), (cls, ·), (·, f) and (·, ·) totals
+    val led = NaiveBayes.ledger[Long](perDoc, "source", Some("f"))
     // the (tok, cls, fold) count cells — |V|·|cls|·K rows; consumed by
-    // scored's build (twice: cell + the join) and the vocab collect —
-    // measured cheaper materialized than recomputed (dropping this
-    // barrier re-aggregated docTok twice inside scored's job and cost
-    // ~0.5 s net)
-    val cellF = docTok.groupBy(col("tok"), col("source").as("cls"), col("f"))
-      .agg(sum(col("n")).as("cf"))
-      .localCheckpoint()
+    // scoredW's build (twice: cell + the join) and the vocab collect —
+    // measured cheaper materialized than recomputed (recomputing
+    // re-aggregated docTok twice inside scoredW's job, ~0.5 s net)
+    val cellF = NaiveBayes.cells(docTok, "source", "cf", "f")
     val cell = cellF.groupBy(col("tok"), col("cls"))
       .agg(sum(col("cf")).as("c"))
     val foldGen = explode(sequence(lit(0L), lit(CV_FOLDS - 1))).as("f")
-    // ---- the (cls, fold, alpha) model ledger, built ON THE DRIVER ----
-    // Everything the ledger needs is CLUSTER-SIZE-INDEPENDENT: the
-    // per-fold vocabulary counts (K numbers), and the per-(class, fold)
-    // doc/token totals (|cls|·K rows). Two bounded collects replace the
-    // previous distributed ledger pyramid (tokTot/tokF/vf/clsTot/clsF/
-    // dTot/fStats + a checkpoint), and — the actual win — the ledger
-    // becomes a LocalRelation, so its three downstream broadcasts build
-    // driver-side with NO Spark job each. At 100 TB the two collects are
-    // still K and |cls|·K rows; only their INPUT aggregations scale, and
-    // those stay distributed. Double math is java.lang.StrictMath.log / floor
-    // — bit-identical to the codegen expressions this replaces.
-    //
     // Per-fold training vocabulary via the exclusive-fold identity:
     // vtrain(f) = #{tok : mass outside f} = V − #{tok exclusively in f}
-    // — ONE aggregation over cellF instead of tokTot ⋈ tokF; overlaps
-    // with the still-running cube job above.
+    // — ONE aggregation over cellF; overlaps the ledger's cube job.
     val exclRows = cellF.groupBy(col("tok"))
       .agg(min(col("f")).as("fmin"), max(col("f")).as("fmax"))
       .groupBy(when(col("fmin") === col("fmax"), col("fmin"))
         .otherwise(lit(-1L)).as("exclf"))
       .agg(count(lit(1)).as("n")).collect()
-    val cubeRows = Await.result(cubeFut, Duration.Inf)
+    val L = led()
     val vTotal = exclRows.map(_.getLong(1)).sum
     val vtrain: Map[Long, Long] = (0L until CV_FOLDS).map(f =>
       f -> (vTotal - exclRows.find(r => r.getLong(0) == f)
         .map(_.getLong(1)).getOrElse(0L))).toMap
-    def cellOf(src: Option[String], f: Option[Long]): Option[(Long, Long)] = {
-      val gid = (if (src.isEmpty) 2L else 0L) + (if (f.isEmpty) 1L else 0L)
-      cubeRows.find(r => r.getLong(4) == gid &&
-          src.forall(v => r.getString(0) == v) &&
-          f.forall(v => r.getLong(1) == v))
-        .map(r => (r.getLong(2), r.getLong(3)))
-    }
-    val classes = cubeRows.filter(_.getLong(4) == 1L)
-      .map(_.getString(0)).sorted
-    require(!classes.contains(null),
-      "q287: NULL source value in corpus — class ledger undefined")
-    val dd = cellOf(None, None).map(_._2).getOrElse(0L)
+    // the (cls, fold, alpha) model ledger on the driver: |cls|·K·|α| rows
+    // at any corpus scale
+    val dd = L(None)._2
     val ledgerRows: Seq[(String, Long, Long, Long, Long, Long)] = for {
-      cls <- classes.toSeq
+      cls <- L.classes
       f <- 0L until CV_FOLDS
-      (ns, ds) = cellOf(Some(cls), None).get
-      (nsf, dsf) = cellOf(Some(cls), Some(f)).getOrElse((0L, 0L))
+      (ns, ds) = L(Some(cls))
+      (nsf, dsf) = L(Some(cls), Some(f))
       nsTr = ns - nsf
       dsTr = ds - dsf
       if dsTr > 0
-      df = cellOf(None, Some(f)).map(_._2).getOrElse(0L)
+      df = L(None, Some(f))._2
       alpha <- CV_ALPHAS
       den = nsTr + alpha * vtrain(f)
-    } yield (cls, f, alpha,
-      den,
-      math.floor(java.lang.StrictMath.log(den.toDouble / alpha.toDouble) * 1e7).toLong,
-      math.floor(java.lang.StrictMath.log((dd - df).toDouble / dsTr.toDouble) * 1e7).toLong)
+    } yield (cls, f, alpha, den, NaiveBayes.log7(den, alpha),
+      NaiveBayes.log7(dd - df, dsTr))
     // WIDE (cls, f) model ledger — one row per (cls, f) carrying every
     // α's (den, u7) plus the α-independent prior7. ledgerRows is total
     // in α (the α loop sits inside the dsTr > 0 guard), so the pivot
     // is exact; built as an explicit LocalRelation (createDataFrame on
-    // a driver list) so its broadcasts need no Spark job, like the
-    // long-form ledger it replaces.
+    // a driver list) so its broadcasts need no Spark job.
     val alpha0 = CV_ALPHAS.head
     val ledgerW: DataFrame = {
       import org.apache.spark.sql.types._
@@ -1751,10 +1637,8 @@ object TrainingSet {
       s.createDataFrame(list, schema)
     }
     // vocabulary-bounded WIDE score ledger: one row per (tok, cls, f)
-    // with an n7 column per α — |V|·|cls|·K rows (|α|× fewer than the
-    // long form), each n7 the identical floor(log(den_α/(c_tr+α))·1e7)
-    // expression the long form computed. Materialized once; the single
-    // scoring pass below broadcasts it whole.
+    // with an n7 column per α — |V|·|cls|·K rows. Materialized once; the
+    // single scoring pass below broadcasts it whole.
     val scoredW = cell.select(col("tok"), col("cls"), col("c"), foldGen)
       .join(cellF, Seq("tok", "cls", "f"), "left")
       .withColumn("c_tr", col("c") - coalesce(col("cf"), lit(0L)))
@@ -1763,27 +1647,12 @@ object TrainingSet {
         CV_ALPHAS.map(a => col(s"den_$a")): _*)), Seq("cls", "f"))
       .select(col("tok") +: col("f") +: col("cls") +:
         CV_ALPHAS.map(a =>
-          floor(log(col(s"den_$a").cast("double")
-            / (col("c_tr") + lit(a)).cast("double")) * lit(1e7))
-            .cast("long").as(s"n7_$a")): _*)
+          NaiveBayes.n7(col(s"den_$a"), col("c_tr") + lit(a)).as(s"n7_$a")): _*)
       .localCheckpoint()
-    // ONE doc-level scoring pass for EVERY α: |cls| fan-out per
-    // distinct (doc, tok) — the old screen's fan-out, with the rerank
-    // pass folded in as extra sum columns. docTok already collapsed
-    // repeats to (doc, tok, n), so the join multiplies distinct-token
-    // rows, not raw occurrences; unseen terms fold into the
-    // (n_tok − n_seen)·u7_α remainder (n_seen is α-independent because
-    // score-row existence is).
-    val seen = docTok
-      .join(broadcast(scoredW), Seq("tok", "f"))
-      .groupBy(col("doc_id"), col("cls"))
-      .agg(sum(col("n") * col(s"n7_$alpha0")).as(s"s7_$alpha0"),
-        CV_ALPHAS.tail.map(a =>
-          sum(col("n") * col(s"n7_$a")).as(s"s7_$a")) :+
-          sum(col("n")).as("n_seen"): _*)
-    def nllCol(a: Long) = (coalesce(col(s"s7_$a"), lit(0L))
-      + (col("n_tok") - coalesce(col("n_seen"), lit(0L))) * col(s"u7_$a")
-      + col("prior7")).as(s"nll7_$a")
+    // ONE doc-level scoring pass for EVERY α: |cls| fan-out per distinct
+    // (doc, tok), every α's s7 as its own sum column (n_seen is
+    // α-independent because score-row existence is)
+    val seen = NaiveBayes.seen(docTok, scoredW, Seq("tok", "f"))
     val wBeam = Window.partitionBy(col("doc_id"))
       .orderBy(col(s"nll7_$alpha0"), col("cls"))
     // per-doc screening ranks over the α0 NLL: rn=1 is the α0
@@ -1791,15 +1660,14 @@ object TrainingSet {
     // candidate rows already CARRY every other α's NLL, so the rerank
     // below never touches docTok again. Checkpointed (beam-sized:
     // ≤ CV_BEAM rows per doc): two consumers (win1, the rerank
-    // explode), and the screen pyramid above it is the query's
-    // heaviest sub-plan — measured in r16, exchange reuse does NOT
-    // dedupe it across consumers.
+    // explode), and exchange reuse does NOT dedupe the screen pyramid
+    // above it across consumers (measured).
     val nllW = perDoc.join(broadcast(ledgerW.select(col("cls") +: col("f") +:
         col("prior7") +: CV_ALPHAS.map(a => col(s"u7_$a")): _*)),
         Seq("f"))
       .join(seen, Seq("doc_id", "cls"), "left")
       .select(col("doc_id") +: col("f") +: col("source") +: col("cls") +:
-        CV_ALPHAS.map(nllCol): _*)
+        CV_ALPHAS.map(a => NaiveBayes.nll7(s"_$a").as(s"nll7_$a")): _*)
       .withColumn("rn", row_number().over(wBeam))
       .filter(col("rn") <= beamK)
       .select(col("doc_id") +: col("f") +: col("source") +: col("cls") +:
@@ -1811,9 +1679,8 @@ object TrainingSet {
     // min-of-orderable-struct aggregate ordered (nll7, cls) over the
     // beam-sized ledger (≤ CV_BEAM rows per (doc, α)); f and source
     // are per-doc constants riding behind the ordering fields (cls is
-    // unique within a doc, so they never decide). No window; the
-    // struct buffer plans as SortAggregate, whose partial combines
-    // map-side (guide §2.3).
+    // unique within a doc, so they never decide). The struct buffer
+    // plans as SortAggregate, whose partial combines map-side.
     val winR = nllW
       .select(col("doc_id"), col("f"), col("source"), col("cls"),
         explode(array(CV_ALPHAS.tail.map(a =>
@@ -1969,126 +1836,77 @@ object TrainingSet {
     * a source with no train docs keeps delta = 0 by rule (removing
     * nothing changes nothing). Ledger size is vocab·|langs|·(|S|+1) —
     * vocabulary-bounded, not corpus-bounded; the eval-side scoring
-    * join fans out |langs|·(|S|+1) per EVAL occurrence only (the
-    * md5-10% split). Same floor(ln·1e7) integer stance as q285/q287.
+    * join fans out |langs|·(|S|+1) per distinct EVAL (doc, tok) only
+    * (the md5-10% split). The count model, its integer log terms and
+    * the one corpus explode (train and eval are filters of it) are the
+    * `NaiveBayes` kernel's.
     */
   def q292LosoValue(s: SparkSession, d: String): DataFrame = {
     val FULL = "__full__"
     val docs = documents(s, d).withColumn("ev",
       expr("cast(conv(substr(md5(cast(doc_id as string)), 1, 8), 16, 10) as bigint) % 10 = 0"))
-    val train = docs.filter(!col("ev"))
-    val evl = docs.filter(col("ev"))
-    // ONE train-corpus explode pass, collapsed to the minimal per-doc
-    // sufficient statistic — every downstream frame (cells, the doc
-    // ledger, the per-source train counts) derives from this checkpoint;
-    // the old shape re-scanned the raw text twice more (size(split) for
-    // the class ledger, a groupBy for the output's train counts), which
-    // at 100 TB is two extra corpus scans (the q287 r13 lesson).
-    val docTok = train.select(col("doc_id"), col("lang"), col("source"),
-        explode(split(col("text"), " ")).as("tok"))
-      .groupBy(col("doc_id"), col("lang"), col("source"), col("tok"))
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint()
-    // doc-level cube collect — launched FIRST so its job overlaps
-    // cellS's materialization (both depend only on docTok). One cube
-    // pass yields clsBySrc (lang,src), clsTot (lang,·), per-source doc
-    // counts (·,src), and D (·,·) — all CLUSTER-SIZE-INDEPENDENT
-    // (≤|langs|·|S| rows), so the (lang, h) model ledger is computed on
-    // the driver and becomes a LocalRelation whose broadcasts need no
-    // Spark job (the q287 r13 pattern).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val clsAll = docTok.groupBy(col("doc_id"), col("lang"), col("source"))
-      .agg(sum(col("n")).as("n_tok"))
-    // grouping_id (not isNullAt) tells subtotal rows from data rows —
-    // same hardening as q287's ledger cube
-    val cubeFut = Future(clsAll.cube(col("lang"), col("source"))
-      .agg(sum(col("n_tok")).as("n"), count(lit(1)).as("d"),
-        grouping_id().as("gid")).collect())
-    val cellS = docTok.groupBy(col("tok"), col("lang"), col("source"))
-      .agg(sum(col("n")).as("cs"))
-      .localCheckpoint()
-    val cell = cellS.groupBy(col("tok"), col("lang")).agg(sum(col("cs")).as("c"))
-    val cubeRows = Await.result(cubeFut, Duration.Inf)
-    def cubeCell(lang: Option[String], src: Option[String]): Option[(Long, Long)] = {
-      val gid = (if (lang.isEmpty) 2L else 0L) + (if (src.isEmpty) 1L else 0L)
-      cubeRows.find(r => r.getLong(4) == gid &&
-          lang.forall(v => r.getString(0) == v) &&
-          src.forall(v => r.getString(1) == v))
-        .map(r => (r.getLong(2), r.getLong(3)))
-    }
-    val srcs = cubeRows.filter(_.getLong(4) == 2L)
-      .map(_.getString(1)).sorted
-    val langs = cubeRows.filter(_.getLong(4) == 1L)
-      .map(_.getString(0)).sorted
-    require(!srcs.contains(null) && !langs.contains(null),
-      "q292: NULL lang/source value in corpus — ledger undefined")
-    val dd = cubeCell(None, None).map(_._2).getOrElse(0L)
+    // one explode of the corpus; the train and eval splits are filters
+    // of the collapsed frame
+    val docTok = NaiveBayes.tokenCounts(docs, col("ev"), col("lang"), col("source"))
+    val trainTok = docTok.filter(!col("ev"))
+    val evTok = docTok.filter(col("ev"))
+    // ONE cube yields the (lang, src), (lang, ·), (·, src) and (·, ·)
+    // totals
+    val led = NaiveBayes.ledger[String](NaiveBayes.perDoc(trainTok), "lang",
+      Some("source"))
+    val cellS = NaiveBayes.cells(trainTok, "lang", "cs", "source")
+    val cell = cellS.groupBy(col("tok"), col("cls")).agg(sum(col("cs")).as("c"))
+    val L = led()
+    val srcs = L.keys.sorted
+    val dd = L(None)._2
     import s.implicits._
-    val holdouts = (srcs :+ FULL).toSeq
+    val holdouts = srcs :+ FULL
     val hs = broadcast(holdouts.toDF("h"))
     // per-holdout cell counts by subtraction; rows that vanish drop out
     val cellH = cell.crossJoin(hs)
-      .join(cellS.select(col("tok"), col("lang"), col("source").as("h"),
-        col("cs")), Seq("tok", "lang", "h"), "left")
+      .join(cellS.select(col("tok"), col("cls"), col("source").as("h"),
+        col("cs")), Seq("tok", "cls", "h"), "left")
       .withColumn("ch", col("c") - coalesce(col("cs"), lit(0L)))
       .filter(col("ch") > 0)
-      .select(col("tok"), col("lang"), col("h"), col("ch"))
+      .select(col("tok"), col("cls"), col("h"), col("ch"))
       .localCheckpoint()
     // per-holdout training vocabulary: one bounded collect (≤|S|+1 rows)
     val vMap = cellH.groupBy(col("h"))
       .agg(countDistinct(col("tok")).as("v")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    // (lang, h) model ledger ON THE DRIVER; zero-doc classes excluded
-    // per holdout by rule; holdouts with no surviving vocab drop (the
-    // old inner join on vH). Double math is java.lang.StrictMath.log/floor —
-    // bit-identical to the codegen expressions this replaces.
+    // (lang, h) model ledger on the driver; zero-doc classes excluded
+    // per holdout by rule; holdouts with no surviving vocab drop
     val ledgerRows: Seq[(String, String, Long, Long, Long, Long)] = for {
-      lang <- langs.toSeq
+      lang <- L.classes
       h <- holdouts
       if vMap.contains(h)
-      (ns, ds) = cubeCell(Some(lang), None).get
-      (nsh, dsh) = if (h == FULL) (0L, 0L)
-                   else cubeCell(Some(lang), Some(h)).getOrElse((0L, 0L))
+      (ns, ds) = L(Some(lang))
+      (nsh, dsh) = if (h == FULL) (0L, 0L) else L(Some(lang), Some(h))
       nsl = ns - nsh
       dsl = ds - dsh
       if dsl > 0
       v = vMap(h)
-      ddh = dd - (if (h == FULL) 0L
-                  else cubeCell(None, Some(h)).map(_._2).getOrElse(0L))
-    } yield (lang, h, nsl, v,
-      math.floor(java.lang.StrictMath.log((nsl + v).toDouble) * 1e7).toLong,
-      math.floor(java.lang.StrictMath.log(ddh.toDouble / dsl.toDouble) * 1e7).toLong)
+      ddh = dd - (if (h == FULL) 0L else L(None, Some(h))._2)
+    } yield (lang, h, nsl, v, NaiveBayes.log7(nsl + v), NaiveBayes.log7(ddh, dsl))
     val ledger = ledgerRows.toDF("cls", "h", "nsl", "v", "u7", "prior7")
-    val scored = cellH.withColumnRenamed("lang", "cls")
+    val scored = cellH
       .join(broadcast(ledger.select(col("cls"), col("h"), col("nsl"),
         col("v"))), Seq("cls", "h"))
-      .withColumn("n7", floor(log((col("nsl") + col("v")).cast("double")
-        / (col("ch") + lit(1L)).cast("double")) * lit(1e7)).cast("long"))
+      .withColumn("n7", NaiveBayes.n7(col("nsl") + col("v"), col("ch") + lit(1L)))
       .select(col("tok"), col("cls"), col("h"), col("n7"))
-    val eocc = evl.select(col("doc_id"),
-      explode(split(col("text"), " ")).as("tok"))
-    val seen = eocc.join(broadcast(scored), Seq("tok"))
-      .groupBy(col("doc_id"), col("cls"), col("h"))
-      .agg(sum(col("n7")).as("s7"), count(lit(1)).as("n_seen"))
-    val perDoc = evl.select(col("doc_id"), col("lang"),
-      size(split(col("text"), " ")).cast("long").as("n_tok"))
-    // per-(doc, holdout) argmin: PROBED as a min-of-struct aggregate
-    // in r17 (the q285/q300 treatment) and REVERTED — min over a
-    // struct buffer is not hash-aggregable (non-mutable buffer type →
-    // SortAggregate), and with only |langs| rows per (doc, h) group
-    // the partial-agg row reduction doesn't pay for the extra
-    // map-side sort of the fan-out frame: window 2.42 s vs agg
-    // 3.44 s, same-era min-of-7 at sf0.1/32c. The window stays.
+    val seen = NaiveBayes.seen(evTok, scored, Seq("tok"))
+    // per-(doc, holdout) argmin stays a window: with only |langs| rows per
+    // (doc, h) group, a min-of-struct aggregate's partial row reduction
+    // does not pay for its extra map-side sort of the fan-out frame
+    // (SortAggregate: a struct buffer is not hash-aggregable) — window
+    // 2.42 s vs aggregate 3.44 s, min-of-7 at sf0.1 on 32 cores
     val wArg = Window.partitionBy(col("doc_id"), col("h"))
       .orderBy(col("nll7"), col("cls"))
-    val acc = perDoc.crossJoin(broadcast(ledger.select(col("cls"), col("h"),
+    val acc = NaiveBayes.perDoc(evTok)
+      .crossJoin(broadcast(ledger.select(col("cls"), col("h"),
         col("u7"), col("prior7"))))
       .join(seen, Seq("doc_id", "cls", "h"), "left")
-      .withColumn("nll7", coalesce(col("s7"), lit(0L))
-        + (col("n_tok") - coalesce(col("n_seen"), lit(0L))) * col("u7")
-        + col("prior7"))
+      .withColumn("nll7", NaiveBayes.nll7())
       .withColumn("rn", row_number().over(wArg))
       .filter(col("rn") === 1)
       .groupBy(col("h"))
@@ -2111,8 +1929,7 @@ object TrainingSet {
     val accFullPpm = accRows(FULL)
     val accLocal = broadcast(accRows.toSeq.sorted
       .toDF("source", "acc_loso_raw"))
-    val trainBySrc = broadcast(srcs.map(src =>
-        src -> cubeCell(None, Some(src)).map(_._2).getOrElse(0L)).toSeq
+    val trainBySrc = broadcast(srcs.map(src => src -> L(None, Some(src))._2)
       .toDF("source", "n_train_docs"))
     documents(s, d).select(col("source")).distinct()
       .join(trainBySrc, Seq("source"), "left")
@@ -2347,8 +2164,10 @@ object TrainingSet {
     * threshold ledger, realized coverage ppm and mean prediction-set
     * size (the efficiency/coverage trade a deployment reads).
     *
-    * Scale shape: ONE trained model (vocab-bounded ledgers, the q287
-    * machinery), scored over the two held-out splits only; the
+    * Scale shape: ONE trained model (the `NaiveBayes` kernel: one
+    * corpus explode whose train and held-out splits are filters, a
+    * driver-side class ledger, a vocab-bounded score table), scored
+    * over the two held-out splits only; the
     * calibration rank is a single window over the calibration scores —
     * bounded BY DESIGN (split-conformal's whole point is that a few
     * thousand calibration points suffice; the split fraction is the
@@ -2359,48 +2178,31 @@ object TrainingSet {
   def q302Conformal(s: SparkSession, d: String): DataFrame = {
     val docs = documents(s, d).withColumn("sp",
       expr("cast(conv(substr(md5(cast(doc_id as string)), 1, 8), 16, 10) as bigint) % 5"))
-    val train = docs.filter(col("sp") >= 2)
-    val held = docs.filter(col("sp") <= 1)
-    val occ = train.select(col("doc_id"), col("lang"),
-      explode(split(col("text"), " ")).as("tok"))
-    val cnt = occ.groupBy(col("tok"), col("lang").as("cls"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint()
-    val clsTot = train
-      .select(col("lang").as("cls"),
-        size(split(col("text"), " ")).cast("long").as("n_tok"))
-      .groupBy(col("cls"))
-      .agg(sum(col("n_tok")).as("ns"), count(lit(1)).as("ds"))
-    val vocab = cnt.agg(countDistinct(col("tok")).as("v"))
-    val dtot = train.agg(count(lit(1)).as("dd"))
-    val ledger = clsTot.crossJoin(broadcast(vocab)).crossJoin(broadcast(dtot))
-      .withColumn("u7", floor(log((col("ns") + col("v")).cast("double"))
-        * lit(1e7)).cast("long"))
-      .withColumn("prior7", floor(log(col("dd").cast("double")
-        / col("ds").cast("double")) * lit(1e7)).cast("long"))
-      .select(col("cls"), col("ns"), col("v"), col("u7"), col("prior7"))
-      .localCheckpoint()
-    val scored = cnt
-      .join(broadcast(ledger.select(col("cls"), col("ns"), col("v"))),
+    // one explode of the corpus; the train and held-out splits are
+    // filters of the collapsed frame
+    val docTok = NaiveBayes.tokenCounts(docs, col("sp"), col("lang"))
+    val trainTok = docTok.filter(col("sp") >= 2)
+    val heldTok = docTok.filter(col("sp") <= 1)
+    val led = NaiveBayes.ledger(NaiveBayes.perDoc(trainTok), "lang")
+    val cnt = NaiveBayes.cells(trainTok, "lang", "c")
+    val v = NaiveBayes.vocab(cnt)
+    val L = led()
+    val dd = L(None)._2
+    import s.implicits._
+    val ledger = L.classes.map { cls =>
+      val (ns, ds) = L(Some(cls))
+      (cls, ns, NaiveBayes.log7(ns + v), NaiveBayes.log7(dd, ds))
+    }.toDF("cls", "ns", "u7", "prior7")
+    val scored = cnt.join(broadcast(ledger.select(col("cls"), col("ns"))),
         Seq("cls"))
-      .withColumn("n7", floor(log((col("ns") + col("v")).cast("double")
-        / (col("c") + lit(1L)).cast("double")) * lit(1e7)).cast("long"))
+      .withColumn("n7", NaiveBayes.n7(col("ns") + lit(v), col("c") + lit(1L)))
       .select(col("tok"), col("cls"), col("n7"))
-    val hDocs = held.select(col("doc_id"), col("sp"), col("lang"),
-      size(split(col("text"), " ")).cast("long").as("n_tok"))
-    val hTok = held.select(col("doc_id"),
-        explode(split(col("text"), " ")).as("tok"))
-      .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("n"))
-    val seen = hTok.join(broadcast(scored), Seq("tok"))
-      .groupBy(col("doc_id"), col("cls"))
-      .agg(sum(col("n") * col("n7")).as("s7"), sum(col("n")).as("n_seen"))
+    val seen = NaiveBayes.seen(heldTok, scored, Seq("tok"))
     // per-token nonconformity score for every (held doc, class)
-    val scores = hDocs.crossJoin(broadcast(ledger.select(col("cls"), col("u7"),
-        col("prior7"))))
+    val scores = NaiveBayes.perDoc(heldTok)
+      .crossJoin(broadcast(ledger.select(col("cls"), col("u7"), col("prior7"))))
       .join(seen, Seq("doc_id", "cls"), "left")
-      .withColumn("nll7", coalesce(col("s7"), lit(0L))
-        + (col("n_tok") - coalesce(col("n_seen"), lit(0L))) * col("u7")
-        + col("prior7"))
+      .withColumn("nll7", NaiveBayes.nll7())
       .withColumn("score", expr("nll7 div n_tok"))
       .select(col("doc_id"), col("sp"), col("lang"), col("cls"),
         col("score"))
@@ -2540,82 +2342,46 @@ object TrainingSet {
     * under H0); two models that never disagree have no testable
     * difference — mcnemar_milli = −1 sentinel, not an error.
     *
-    * Scale shape: q287's subtractable-ledger machinery with K=1,
-    * |α|=2 — ONE count pass, a |cls|·2 model ledger, a vocab-bounded
-    * precomputed score table, one fan-out join, one argmin window per
-    * (doc, α), one 1-row concordance aggregate. */
+    * Scale shape: the `NaiveBayes` kernel's count model with K=1,
+    * |α|=2 — ONE count pass, a |cls|-row wide model ledger, a
+    * vocab-bounded score table, one fan-out join, one min-of-struct
+    * argmin aggregate per doc for both α, one 1-row concordance
+    * aggregate. */
   def q300Mcnemar(s: SparkSession, d: String): DataFrame = {
-    // ONE corpus explode pass, collapsed to (doc, source, tok, n) —
-    // cnt, the doc ledger, and the seen-term pass all derive from this
-    // checkpoint; the old shape materialized the RAW occurrence explode
-    // (larger frame) and re-scanned the text for the doc ledger (a
-    // second corpus scan at 100 TB). The q287/q292 r13 pattern.
-    val docTok = documents(s, d)
-      .select(col("doc_id"), col("source"),
-        explode(split(col("text"), " ")).as("tok"))
-      .groupBy(col("doc_id"), col("source"), col("tok"))
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint()
-    // class totals: one bounded collect (|cls| rows), overlapping cnt's
-    // materialization below (both depend only on docTok)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val docLedger = docTok.groupBy(col("doc_id"), col("source"))
-      .agg(sum(col("n")).as("n_tok"))
-    val clsFut = Future(docLedger.groupBy(col("source").as("cls"))
-      .agg(sum(col("n_tok")).as("ns"), count(lit(1)).as("ds")).collect())
-    val cnt = docTok.groupBy(col("tok"), col("source").as("cls"))
-      .agg(sum(col("n")).as("c"))
-      .localCheckpoint()
-    val v = cnt.agg(countDistinct(col("tok"))).head().getLong(0)
-    val clsRows = Await.result(clsFut, Duration.Inf)
-    val dd = clsRows.map(_.getLong(2)).sum
-    // WIDE |cls|-row model ledger ON THE DRIVER (cluster-size-
-    // independent): one row per cls carrying BOTH alphas' (den, u7) —
-    // score-row existence is alpha-independent, so the pivot is total
-    // (the q287 r17 fusion, one axis smaller).
-    // java.lang.StrictMath.log + math.floor matches the codegen
-    // expressions this replaces
+    val docTok = NaiveBayes.tokenCounts(documents(s, d), col("source"))
+    val docLedger = NaiveBayes.perDoc(docTok)
+    val led = NaiveBayes.ledger(docLedger, "source")
+    val cnt = NaiveBayes.cells(docTok, "source", "c")
+    val v = NaiveBayes.vocab(cnt)
+    val L = led()
+    val dd = L(None)._2
+    // WIDE |cls|-row model ledger on the driver: one row per cls
+    // carrying BOTH alphas' (den, u7) — score-row existence is
+    // alpha-independent, so the pivot is total
     val ledgerRows: Seq[(String, Long, Long, Long, Long, Long)] = for {
-      r <- clsRows.toSeq
-      (cls, ns, ds) = (r.getString(0), r.getLong(1), r.getLong(2))
+      cls <- L.classes
+      (ns, ds) = L(Some(cls))
       den1 = ns + MCN_A1 * v
       den4 = ns + MCN_A4 * v
-    } yield (cls, den1, den4,
-      math.floor(java.lang.StrictMath.log(den1.toDouble / MCN_A1.toDouble) * 1e7).toLong,
-      math.floor(java.lang.StrictMath.log(den4.toDouble / MCN_A4.toDouble) * 1e7).toLong,
-      math.floor(java.lang.StrictMath.log(dd.toDouble / ds.toDouble) * 1e7).toLong)
+    } yield (cls, den1, den4, NaiveBayes.log7(den1, MCN_A1),
+      NaiveBayes.log7(den4, MCN_A4), NaiveBayes.log7(dd, ds))
     import s.implicits._
     val ledger = ledgerRows.toDF("cls", "den_1", "den_4", "u7_1", "u7_4",
       "prior7")
-    def n7Col(den: String, a: Long) =
-      floor(log(col(den).cast("double")
-        / (col("c") + lit(a)).cast("double")) * lit(1e7)).cast("long")
     val scored = cnt
       .join(broadcast(ledger.select(col("cls"), col("den_1"), col("den_4"))),
         Seq("cls"))
       .select(col("tok"), col("cls"),
-        n7Col("den_1", MCN_A1).as("n7_1"), n7Col("den_4", MCN_A4).as("n7_4"))
+        NaiveBayes.n7(col("den_1"), col("c") + lit(MCN_A1)).as("n7_1"),
+        NaiveBayes.n7(col("den_4"), col("c") + lit(MCN_A4)).as("n7_4"))
     // ONE scoring pass for both alphas: |cls| fan-out per distinct
-    // (doc, tok) — half the long form's 2·|cls| — with both alphas'
-    // sums as extra agg columns (n_seen is alpha-independent)
-    val seen = docTok.join(broadcast(scored), Seq("tok"))
-      .groupBy(col("doc_id"), col("cls"))
-      .agg(sum(col("n") * col("n7_1")).as("s7_1"),
-        sum(col("n") * col("n7_4")).as("s7_4"),
-        sum(col("n")).as("n_seen"))
-    def nllCol(a: Long) = (coalesce(col(s"s7_$a"), lit(0L))
-      + (col("n_tok") - coalesce(col("n_seen"), lit(0L))) * col(s"u7_$a")
-      + col("prior7")).as(s"nll7_$a")
-    // per-doc argmin WITHOUT a window (r17, guide §2.3): min over an
-    // orderable struct ordered (nll7, cls) — exactly the old
-    // row_number(orderBy(nll7, cls)) = 1 pick (cls is unique within a
-    // doc, so the trailing rt field never decides) — as an aggregate
-    // (SortAggregate: a struct buffer is not hash-aggregable): partial
-    // map-side combining collapses the |cls| rows per doc BEFORE the
-    // exchange, where the window shuffled them all and sorted each
-    // partition.
+    // (doc, tok), both alphas' sums as extra agg columns
+    val seen = NaiveBayes.seen(docTok, scored, Seq("tok"))
+    // per-doc argmin as a min over an orderable struct ordered (nll7, cls)
+    // — the oracle's row_number(orderBy(nll7, cls)) = 1 pick (cls is
+    // unique within a doc, so the trailing rt field never decides) — so
+    // the partial aggregate collapses the |cls| rows per doc before the
+    // exchange (SortAggregate: a struct buffer is not hash-aggregable)
     def argminRight(a: Long) = min(struct(col(s"nll7_$a"), col("cls"),
       when(col("cls") === col("source"), 1L).otherwise(0L).as("rt")))
       .getField("rt")
@@ -2624,7 +2390,8 @@ object TrainingSet {
         col("u7_4"), col("prior7"))))
       .join(seen, Seq("doc_id", "cls"), "left")
       .select(col("doc_id"), col("source"), col("cls"),
-        nllCol(MCN_A1), nllCol(MCN_A4))
+        NaiveBayes.nll7(s"_$MCN_A1").as(s"nll7_$MCN_A1"),
+        NaiveBayes.nll7(s"_$MCN_A4").as(s"nll7_$MCN_A4"))
       .groupBy(col("doc_id"))
       .agg(argminRight(MCN_A1).as("r1"), argminRight(MCN_A4).as("r4"))
     pred.agg(count(lit(1)).as("n_docs"),
