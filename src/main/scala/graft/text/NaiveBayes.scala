@@ -6,6 +6,8 @@ import scala.concurrent.duration.Duration
 import org.apache.spark.sql.{Column, DataFrame, GraftInternal, Row}
 import org.apache.spark.sql.functions._
 
+import graft.functions.TokenCounts.token_counts
+
 /** The multinomial Naive-Bayes count model behind q285 (source
   * classifier), q287 (K-fold CV sweep), q292 (leave-one-source-out),
   * q300 (McNemar) and q302 (split conformal). Each query keeps its own
@@ -14,10 +16,11 @@ import org.apache.spark.sql.functions._
   *
   *  - `tokenCounts`: the (doc_id, keys…, tok, n) statistic, one explode
   *    of the text collapsed to distinct tokens per doc, materialized;
-  *  - `perDoc`, `cells`, `vocab`: per-doc token totals, the
-  *    (tok, cls[, keys…]) count cells and the vocabulary size;
-  *  - `ledger`: token mass and doc count per class (and key), with
-  *    every subtotal, collected on the driver while the caller goes on;
+  *  - `perDoc`, `cells`: per-doc token totals and the
+  *    (tok, cls[, keys…]) count cells;
+  *  - `ledger`, `vocab`: token mass and doc count per class (and key),
+  *    with every subtotal, and the vocabulary size, each collected on
+  *    the driver while the caller goes on;
   *  - `log7` / `n7`: the integer log term floor(ln(num/den)·1e7), driver
   *    and column forms;
   *  - `seen` / `nll7`: the n-weighted seen-token sums and the per-doc
@@ -33,14 +36,19 @@ object NaiveBayes {
     * `split(text, " ")` (empty tokens and repeats included) counted per
     * distinct (doc, keys…, tok), materialized. Σn over a doc's rows is
     * its occurrence count, so the doc ledger and the scoring join both
-    * read this frame and the text is scanned once. */
-  def tokenCounts(docs: DataFrame, keys: Column*): DataFrame = {
-    val occ = docs.select(col("doc_id") +: keys :+
-      explode(split(col("text"), " ")).as("tok"): _*)
-    occ.groupBy(occ.columns.toIndexedSeq.map(col): _*)
-      .agg(count(lit(1)).as("n"))
+    * read this frame and the text is scanned once. A doc's tokens all
+    * come from its one row, so the row-local `token_counts` collapses
+    * them with no token shuffle; the docs are dealt round-robin over the
+    * shuffle partitions first, so the frame's readers (the scoring
+    * join's |classes|-fold fan-out above all) run one task per core
+    * even when the corpus is one small file. */
+  def tokenCounts(docs: DataFrame, keys: Column*): DataFrame =
+    docs.repartition(graft.Tables.shufflePartitions(docs.sparkSession))
+      .select(col("doc_id") +: keys :+
+        explode(token_counts(col("text"))).as("tc"): _*)
+      .select(col("*"), col("tc.term").as("tok"), col("tc.tf").as("n"))
+      .drop("tc")
       .localCheckpoint()
-  }
 
   /** (doc_id, keys…, n_tok) of a `tokenCounts` frame: each doc's
     * occurrence count, Σn. */
@@ -57,9 +65,10 @@ object NaiveBayes {
       .agg(sum(col("n")).as(out))
       .localCheckpoint()
 
-  /** |V|, the distinct tokens of a `cells` frame. */
-  def vocab(cells: DataFrame): Long =
-    cells.agg(countDistinct(col("tok"))).head().getLong(0)
+  /** |V|, the distinct tokens of a `tokenCounts` frame, counted on a
+    * pool thread while the caller goes on; the thunk waits for it. */
+  def vocab(docTok: DataFrame): () => Long =
+    overlapped(docTok)(docTok.agg(countDistinct(col("tok"))).head().getLong(0))
 
   /** Token mass n and doc count d of a `perDoc` frame per class (and
     * key) value and every subtotal: `apply(None, None)` is the corpus,
@@ -86,19 +95,26 @@ object NaiveBayes {
       byCell.getOrElse((cls, key), (0L, 0L))
   }
 
-  /** Starts the `Ledger` collect of `perDoc` by `cls` (and `key`) on a
-    * pool thread, so its job overlaps the caller's next ones; the thunk
-    * waits for it. The pool thread runs under a copy of the caller's
-    * local properties: a reused pool thread would otherwise carry the
-    * job group and description of whichever thread created it. */
+  /** The `Ledger` of `perDoc` by `cls` (and `key`), collected on a pool
+    * thread while the caller goes on; the thunk waits for it. */
   def ledger[K](perDoc: DataFrame, cls: String, key: Option[String] = None): () => Ledger[K] = {
     val cube = perDoc.cube(col(cls) +: key.map(col).toSeq: _*)
       .agg(sum(col("n_tok")).as("n"), count(lit(1)).as("d"), grouping_id().as("gid"))
-    val sc = perDoc.sparkSession.sparkContext
+    val rows = overlapped(perDoc)(cube.collect())
+    () => new Ledger[K](rows(), key.isDefined)
+  }
+
+  /** Starts `body`, a driver collect of `df`'s session, on a pool thread,
+    * so its jobs overlap the caller's next ones; the thunk waits for it.
+    * The pool thread runs under a copy of the caller's local properties:
+    * a reused pool thread would otherwise carry the job group and
+    * description of whichever thread created it. */
+  private def overlapped[A](df: DataFrame)(body: => A): () => A = {
+    val sc = df.sparkSession.sparkContext
     val props = GraftInternal.localProperties(sc)
-    val rows = Future(GraftInternal.withLocalProperties(sc, props)(cube.collect()))(
+    val result = Future(GraftInternal.withLocalProperties(sc, props)(body))(
       ExecutionContext.global)
-    () => new Ledger[K](Await.result(rows, Duration.Inf), key.isDefined)
+    () => Await.result(result, Duration.Inf)
   }
 
   /** floor(ln(num/den)·1e7) on the driver. `java.lang.StrictMath.log`

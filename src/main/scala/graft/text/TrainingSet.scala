@@ -1425,8 +1425,9 @@ object TrainingSet {
     val docTok = NaiveBayes.tokenCounts(documents(s, d), col("source"))
     val perDoc = NaiveBayes.perDoc(docTok)
     val led = NaiveBayes.ledger(perDoc, "source")
+    val vocab = NaiveBayes.vocab(docTok)
     val cnt = NaiveBayes.cells(docTok, "source", "c")
-    val v = NaiveBayes.vocab(cnt)
+    val v = vocab()
     val L = led()
     val dd = L(None)._2
     // the |cls|-row model ledger is a LocalRelation: its two broadcasts
@@ -2184,8 +2185,9 @@ object TrainingSet {
     val trainTok = docTok.filter(col("sp") >= 2)
     val heldTok = docTok.filter(col("sp") <= 1)
     val led = NaiveBayes.ledger(NaiveBayes.perDoc(trainTok), "lang")
+    val vocab = NaiveBayes.vocab(trainTok)
     val cnt = NaiveBayes.cells(trainTok, "lang", "c")
-    val v = NaiveBayes.vocab(cnt)
+    val v = vocab()
     val L = led()
     val dd = L(None)._2
     import s.implicits._
@@ -2351,8 +2353,9 @@ object TrainingSet {
     val docTok = NaiveBayes.tokenCounts(documents(s, d), col("source"))
     val docLedger = NaiveBayes.perDoc(docTok)
     val led = NaiveBayes.ledger(docLedger, "source")
+    val vocab = NaiveBayes.vocab(docTok)
     val cnt = NaiveBayes.cells(docTok, "source", "c")
-    val v = NaiveBayes.vocab(cnt)
+    val v = vocab()
     val L = led()
     val dd = L(None)._2
     // WIDE |cls|-row model ledger on the driver: one row per cls
